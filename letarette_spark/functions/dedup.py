@@ -195,8 +195,8 @@ def _spa_candidate_pairs(
 
     Returns (cand_df, broadcast_handle) — the caller destroys the handle
     after materializing — or None when the corpus exceeds
-    _SPA_MAX_INSTANCES or the id type is non-numeric (fallback to the
-    distributed join). Hash collisions only inflate ih (superset; the
+    _SPA_MAX_INSTANCES, the id type is non-numeric or the ids are not
+    unique (fallback to the distributed join). Hash collisions only inflate ih (superset; the
     exact array_intersect verification downstream decides), and the bound
     carries a 1e-9 slack so float rounding can never drop a
     truly-qualifying pair."""
@@ -228,6 +228,10 @@ def _spa_candidate_pairs(
     # ---- driver-side index: ~16 bytes per shingle instance ----
     pdf = hs_frame.toPandas().sort_values(id_col, kind="mergesort")
     ids_np = pdf[id_col].to_numpy(np.int64)
+    if (np.diff(ids_np) == 0).any():
+        # duplicate ids: searchsorted maps every copy to the first one, so
+        # a later copy would pair with itself — the join path handles them
+        return None
     sz_np = pdf["sz"].to_numpy(np.int64)
     flat = np.concatenate(
         [np.asarray(x, np.int64) for x in pdf["hs"] if len(x)]

@@ -527,8 +527,9 @@ def _arrow_cell_assign(
     broadcast-frame machinery at any n_cells. ``ccos`` (cosine to the
     OWN centroid) reads the already-computed score column — the same
     double the JVM re-fold produced. Equivalence pinned in tests against
-    the retained expression form (ivf_assign_expr). Raises on ragged
-    vectors rather than silently truncating like zip_with would."""
+    the retained expression form (ivf_assign_expr). A NULL vector gets a
+    NULL cell; a ragged one raises rather than being silently truncated
+    like zip_with would."""
     import numpy as np
 
     from pyspark.sql import types as T
@@ -565,11 +566,16 @@ def _arrow_cell_assign(
             if n == 0:
                 continue
             rows = batch.column(vec_idx).to_pylist()
-            if any(r is None or len(r) != dim for r in rows):
+            if any(r is not None and len(r) != dim for r in rows):
                 raise ValueError(
                     f"cell assignment: vectors must all have dim {dim}"
                 )
-            V = np.array(rows, dtype=np.float64)
+            # a NULL vector gets a NULL cell (and ccos); its row is kept
+            null = np.array([r is None for r in rows])
+            zero = [0.0] * dim
+            V = np.array(
+                [zero if r is None else r for r in rows], dtype=np.float64
+            )
             nv = np.zeros(n)
             for d in range(dim):
                 nv = nv + V[:, d] * V[:, d]
@@ -585,9 +591,9 @@ def _arrow_cell_assign(
             neg = np.where(np.isnan(neg), np.inf, neg)
             cells = np.argmin(neg, axis=1).astype(np.int32)
             arrays = [batch.column(i) for i in range(len(in_fields))]
-            arrays.append(pa.array(cells))
+            arrays.append(pa.array(cells, mask=null))
             if with_ccos:
-                arrays.append(pa.array(cos[np.arange(n), cells]))
+                arrays.append(pa.array(cos[np.arange(n), cells], mask=null))
             yield pa.RecordBatch.from_arrays(arrays, names=names)
 
     return df.mapInArrow(assign, schema=out_schema)
@@ -622,7 +628,8 @@ def ivf_assign(
 ) -> DataFrame:
     """(id, cell) assignment — one scan, no shuffle; the per-row argmax
     runs in the Arrow stage (_arrow_cell_assign, bit-identical to the
-    expression form ivf_assign_expr)."""
+    expression form ivf_assign_expr). A NULL embedding keeps its row
+    with a NULL cell."""
     base = _spread(
         emb.select(
             F.col(id_col), F.col(vec_col).cast("array<double>").alias("v")
@@ -671,7 +678,9 @@ def ivf_topk(
     """Approximate top-k: score only the vectors assigned to the query's
     nprobe nearest cells. nprobe = n_cells degrades to exact brute force
     (every cell probed); the gate uses nprobe < n_cells against a full
-    ANSI-SQL twin of the same centroid/assignment/probe algebra."""
+    ANSI-SQL twin of the same centroid/assignment/probe algebra. Rows
+    with a NULL embedding have no cell, so no probe reaches them; a query
+    whose own embedding is NULL returns no rows."""
     if centroids is None:
         centroids = ivf_centroids(
             emb, n_cells, n_iter, id_col=id_col, vec_col=vec_col
@@ -685,7 +694,7 @@ def ivf_topk(
         .select(F.col(vec_col).cast("array<double>").alias("qv"))
         .first()
     )
-    if qrow is None:
+    if qrow is None or qrow["qv"] is None:
         return emb.select(F.col(id_col), F.lit(0.0).alias("cos")).limit(0)
     probes = ivf_probe_cells(list(qrow["qv"]), centroids, nprobe)
     v = _spread(
@@ -719,14 +728,17 @@ def ivf_index_write(
     """Materialize the corpus partitioned by IVF cell (cell=N parquet
     dirs). This is the 100-TB layout: ivf_index_topk's cell filter then
     prunes at the DIRECTORY level, so a query reads ~nprobe/n_cells of
-    the bytes regardless of corpus size."""
+    the bytes regardless of corpus size. A row with a NULL embedding has
+    no cell and is not written, so no query can return it."""
     base = _spread(
         emb.select(
             F.col(id_col),
             F.col(vec_col).cast("array<double>").alias("v"),
         )
     )
-    assigned = _arrow_cell_assign(base, centroids, "v")
+    assigned = _arrow_cell_assign(base, centroids, "v").filter(
+        F.col("cell").isNotNull()
+    )
     # assign in parallel (spread above), then one hash exchange on cell so
     # each cell directory stays ~one file instead of one per assign task
     assigned.repartition("cell").write.mode("overwrite").partitionBy(

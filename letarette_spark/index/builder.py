@@ -74,33 +74,42 @@ TERM_STATS_SCHEMA = T.StructType(
 )
 
 
+# postings as read back: the writer's columns plus the bucket partition dir
+POSTINGS_READ_SCHEMA = T.StructType(
+    POSTINGS_SCHEMA.fields + [T.StructField("bucket", T.IntegerType())]
+)
+TOMBSTONES_SCHEMA = T.StructType([T.StructField("rowid", T.LongType())])
+
+
 def _parquet_or_empty(
     spark: SparkSession,
     read_path: str,
     guard_dir: str,
-    fallback_schema,
+    schema,
     base_path: str | None = None,
 ):
-    """Read parquet; when the read fails but *guard_dir* EXISTS (a
-    zero-row write left a footerless dir), fall back to an empty frame
-    with the canonical schema. A missing dir (index corruption / wrong
-    root) stays a hard error — silent emptiness loses data."""
+    """Read parquet with the schema the writer used — no footer-reading
+    inference job per call; partition dirs (chunk=, rb=, bucket=) are
+    still discovered from the paths. When the read fails but *guard_dir*
+    EXISTS (a zero-row write left a footerless dir), fall back to an empty
+    frame with that schema. A missing dir (index corruption / wrong root)
+    stays a hard error — silent emptiness loses data."""
     from pyspark.errors import AnalysisException
 
     try:
-        reader = spark.read
+        reader = spark.read.schema(schema)
         if base_path:
             reader = reader.option("basePath", base_path)
         return reader.parquet(read_path)
     except AnalysisException:
         if os.path.isdir(guard_dir):
-            return spark.createDataFrame([], fallback_schema)
+            return spark.createDataFrame([], schema)
         raise
 
 
-def _read_tree(spark: SparkSession, base_dir: str, glob: str, fallback_schema):
+def _read_tree(spark: SparkSession, base_dir: str, glob: str, schema):
     return _parquet_or_empty(
-        spark, os.path.join(base_dir, glob), base_dir, fallback_schema,
+        spark, os.path.join(base_dir, glob), base_dir, schema,
         base_path=base_dir,
     )
 
@@ -525,9 +534,7 @@ def build_index(
 
     # ---- finalize: global stats + snapshot commit ----
     postings_all = _read_tree(
-        spark, os.path.join(root, "postings"), "chunk=*",
-        T.StructType(POSTINGS_SCHEMA.fields
-                     + [T.StructField("bucket", T.IntegerType())]),
+        spark, os.path.join(root, "postings"), "chunk=*", POSTINGS_READ_SCHEMA
     )
     ts_dir = os.path.join(root, "term_stats")
 
@@ -619,18 +626,6 @@ def build_index(
     return BuildResult(root, ndocs, nterms, int(agg["sum_dl"]), built, skipped)
 
 
-def _merge_posting_rows(df: DataFrame) -> DataFrame:
-    """Merge multiple posting/prefix rows per rowid into one: a doc may
-    contain several terms matching a prefix — union their instance lists
-    (FTS5 prefix-query semantics)."""
-    return df.groupBy("rowid").agg(
-        F.first("space").alias("space"),
-        F.first("dl").alias("dl"),
-        F.array_sort(F.flatten(F.collect_list("pos0"))).alias("pos0"),
-        F.array_sort(F.flatten(F.collect_list("pos1"))).alias("pos1"),
-    )
-
-
 @dataclass
 class Index:
     spark: SparkSession
@@ -680,13 +675,13 @@ class Index:
         base build is seq 0. See index/incremental.py."""
         return self.meta.get("segments", [])
 
-    def _read_seg(self, path: str, fallback_schema) -> DataFrame:
+    def _read_seg(self, path: str, schema) -> DataFrame:
         """Read one delta-segment parquet dir; a DELETE-ONLY batch writes a
         footerless dir (partitionBy of zero rows) — fall back to an empty
         frame for that case ONLY. A MISSING directory stays a hard error:
         silently treating absent tombstones as empty would resurrect
         deleted documents."""
-        return _parquet_or_empty(self.spark, path, path, fallback_schema)
+        return _parquet_or_empty(self.spark, path, path, schema)
 
     def _segment_parts(
         self, table: str, base_schema
@@ -711,7 +706,7 @@ class Index:
             )
             tombs.append(
                 self._read_seg(
-                    os.path.join(self.root, s["tombstones"]), "rowid long"
+                    os.path.join(self.root, s["tombstones"]), TOMBSTONES_SCHEMA
                 ).select(
                     F.col("rowid").alias("_trowid"), F.lit(s["seq"]).alias("_tseq")
                 )
@@ -782,9 +777,7 @@ class Index:
         """Base-snapshot postings only (seq 0, no segment overlay)."""
         base_dir = self.postings_base_dir()
         return _read_tree(
-            self.spark, base_dir, "chunk=*",
-            T.StructType(POSTINGS_SCHEMA.fields
-                     + [T.StructField("bucket", T.IntegerType())]),
+            self.spark, base_dir, "chunk=*", POSTINGS_READ_SCHEMA
         ).drop("chunk")
 
     def postings(self) -> DataFrame:
@@ -833,13 +826,15 @@ class Index:
             return self.spark.createDataFrame([], PREFIX_SCHEMA)
         return self.spark.read.schema(PREFIX_SCHEMA).parquet(d)
 
-    def prefix_hits(self, prefix: str) -> DataFrame | None:
-        """Merged per-rowid hits (rowid, space, dl, pos0, pos1) for the
-        wildcard query `prefix*`, served from the build-time prefix
-        aggregates — the analog of the reference's prefix='2 3 4' B-trees
+    def prefix_rows(self, prefix: str) -> DataFrame | None:
+        """Hit rows (rowid, space, dl, pos0, pos1) for the wildcard query
+        `prefix*`, served from the build-time prefix aggregates — the
+        analog of the reference's prefix='2 3 4' B-trees
         (1_init.up.sql:96). O(result) at any vocabulary size: one
         partition dir + row-group-pruned prefix predicate, never a full
-        postings scan.
+        postings scan. A rowid may appear on several rows (one per
+        matching term) with disjoint positions; the caller merges them in
+        whatever exchange it already runs.
 
         Returns None when no aggregate covers this prefix length (longer
         than the largest configured length, or a pre-prefix-layout index)
@@ -847,8 +842,8 @@ class Index:
 
         Delta segments are overlaid at query time: base rows for
         tombstoned rowids are dropped and the (compaction-bounded)
-        segment postings contribute a startswith-filtered merge — upserts
-        never rewrite the base aggregates."""
+        segment postings contribute their startswith-filtered rows —
+        upserts never rewrite the base aggregates."""
         lengths = self.meta.get("prefix_lengths") or []
         if not lengths or not prefix:
             return None
@@ -860,7 +855,6 @@ class Index:
                 .filter(F.col("prefix") == prefix)
                 .select(*cols)
             )
-            base_is_merged = True
         elif L < min(lengths):
             # shorter than every aggregate (e.g. 'a*' with lengths 2 3 4):
             # all length-Lp groups extending the prefix live in ONE
@@ -888,7 +882,6 @@ class Index:
                     .filter(self._terms_cond(short_terms))
                     .select(*cols)
                 )
-            base_is_merged = False
         elif self.meta.get("prefix_tail"):
             # longer than every aggregate: the plen=-1 term-range tail
             # (prefix = whole term, first-char dir, term-sorted files) —
@@ -899,18 +892,13 @@ class Index:
                 .filter(F.col("prefix").startswith(prefix))
                 .select(*cols)
             )
-            base_is_merged = False
         else:
             return None
 
         if not self.segments:
-            return base if base_is_merged else _merge_posting_rows(base)
+            return base
 
-        parts, tombs = self._segment_parts(
-            "postings",
-            T.StructType(POSTINGS_SCHEMA.fields
-                         + [T.StructField("bucket", T.IntegerType())]),
-        )
+        parts, tombs = self._segment_parts("postings", POSTINGS_READ_SCHEMA)
         seg_rows = parts[0]
         for p in parts[1:]:
             seg_rows = seg_rows.unionByName(p)
@@ -924,9 +912,7 @@ class Index:
             tomb_ids = tomb_ids.unionByName(t)
         tomb_ids = tomb_ids.select(F.col("_trowid").alias("rowid")).distinct()
         base = base.join(F.broadcast(tomb_ids), "rowid", "left_anti")
-        if base_is_merged:
-            return base.unionByName(_merge_posting_rows(seg_rows))
-        return _merge_posting_rows(base.unionByName(seg_rows))
+        return base.unionByName(seg_rows)
 
     def docs(self) -> DataFrame:
         base_dir = self.docs_base_dir()
@@ -958,9 +944,12 @@ class Index:
                         if os.path.isdir(p):
                             paths.append(p)
         if nb and paths:
-            base = self.spark.read.option("basePath", base_dir).parquet(
-                *paths
-            ).drop("chunk", "rb")
+            base = (
+                self.spark.read.schema(DOCS_SCHEMA)
+                .option("basePath", base_dir)
+                .parquet(*paths)
+                .drop("chunk", "rb")
+            )
         elif nb and not paths:  # none of the keys' buckets exist on disk
             base = self.spark.createDataFrame([], DOCS_SCHEMA)
         else:  # pre-layout-2 index: no bucket dirs to prune

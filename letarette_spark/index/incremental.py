@@ -384,7 +384,7 @@ def upsert_documents(
     docs.unpersist()
 
     # post-commit GC of unreferenced dirs + stale WAND blocks. The prefix
-    # aggregates are NOT rewritten on the upsert path (prefix_hits overlays
+    # aggregates are NOT rewritten on the upsert path (prefix_rows overlays
     # segments at query time) — keep the base dir alive.
     _gc_stale_dirs(
         root,

@@ -238,7 +238,7 @@ def search_batch(
     )
 
     # per-(query, phrase, doc) tf: colocated-synonym alternatives sum
-    # (positions are disjoint — same identity _narrow_single_phrase uses)
+    # (positions are disjoint — same identity Searcher.search_df uses)
     ph = hits.groupBy(
         "query_id", "pidx", "exclude", "n_inc", "rowid", "space", "dl"
     ).agg(F.sum("tfw").alias("tfw"))

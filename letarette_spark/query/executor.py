@@ -22,22 +22,34 @@ in the SAME column with a selection of one instance per phrase such that
 max(start) - min(end) - 1 <= N tokens. tf counts are NOT restricted to
 instances inside the NEAR window.
 
-Scale notes: per-phrase retrieval is a term-predicate scan over the
-range-partitioned postings table (file/row-group pruning on `term`);
-multi-phrase conjunction is a shuffle join keyed on rowid; the NEAR check
-is an Arrow-batched pandas UDF over the (already capped) candidate rows;
-scoring is pure JVM column arithmetic (whole-stage codegen); doc metadata
-is attached to only the final top-k rows.
+Scale notes: a query is two bounded actions.
+  1. One candidate action. Every include and exclude phrase position is a
+     term-pruned postings scan (bucket-dir + row-group pruning) or a
+     prefix-aggregate scan; the scans are tagged and unioned, and ONE
+     exchange groups them by rowid (a one-word, one-term query has unique
+     rowids and needs none). Each phrase's index-wide df is observed
+     (DataFrame.observe) on that grouped frame, beneath the match filters
+     — NEAR cluster existence as a JVM expression, excludes, the space
+     filter — so none of them can reach the rows it counts. A
+     TakeOrdered(rowid, cap+1) heap then brings at most cap+1 rows to the
+     driver: the rows FTS5's `LIMIT :cap+1` statement ranks
+     (search_1.sql:29). Each row carries rowid, space, dl and either the
+     phrase's tf0/tf1 (one phrase) or per-phrase start-position arrays
+     (k > 1 phrases, for NEAR participation).
+  2. One page fetch: the page's docs come from a rowid-bucket point lookup
+     (Index.docs_for_rowids); a query with no hits skips it.
+NEAR participation and BM25 run on the <= cap+1 rows in the driver, in
+float64 with the same operation order as the formula above. Driver bound:
+cap+1 rows, with position arrays only when k > 1.
 """
 
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from functools import reduce as _reduce
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -51,6 +63,15 @@ NEAR_RANGE = 15          # db_search.go:46-50
 DEFAULT_CAP = 10000      # config.go:70
 MAX_PAGE_LIMIT = 500     # searcher.go:51-52
 MAX_PREFIX_EXPANSION = 4096  # wildcard terms resolved via the dictionary
+
+_HITS_SCHEMA = T.StructType(
+    [
+        T.StructField("rowid", T.LongType()),
+        T.StructField("space", T.StringType()),
+        T.StructField("score", T.DoubleType()),
+    ]
+)
+_POS = T.ArrayType(T.IntegerType())
 
 
 @dataclass
@@ -106,27 +127,6 @@ class Searcher:
             self.stopwords = load_stopwords(self.index)
         if self.synonyms is None:
             self.synonyms = load_synonyms(self.index)
-        import threading
-
-        self._cached: list[DataFrame] = []
-        self._cache_lock = threading.Lock()
-        self._tl = threading.local()  # per-thread frame ledger for zombies
-
-    def _evict_cache(self) -> None:
-        """Release the previous query's cached phrase-hit frames. Lock:
-        a cancelled query's worker thread may still be registering frames
-        (see _with_deadline) while the next query evicts."""
-        with self._cache_lock:
-            old, self._cached = self._cached, []
-        for df in old:
-            df.unpersist()
-
-    def _remember(self, df: DataFrame) -> None:
-        with self._cache_lock:
-            self._cached.append(df)
-        frames = getattr(self._tl, "frames", None)
-        if frames is not None:
-            frames.append(df)
 
     # ------------------------------------------------------------------
     def analyze_phrase(self, p: Phrase) -> list[list[str]]:
@@ -148,91 +148,56 @@ class Searcher:
         return alts
 
     # ------------------------------------------------------------------
-    def _phrase_hits(self, alts: list[list[str]], wildcard: bool) -> DataFrame:
-        """DataFrame (rowid, space, dl, tf0, tf1, pos0, pos1) of every doc
-        containing the phrase; positions are phrase start positions.
-        ``alts[i]`` = acceptable terms at phrase position i (synonym
-        expansion -> union of posting lists, like FTS5 colocated tokens)."""
-        last = len(alts) - 1
-
-        def term_posts(i: int, terms_i: list[str]) -> DataFrame:
-            from letarette_spark.index.builder import _merge_posting_rows
-
-            if wildcard and i == last:
-                # prefix: serve from the build-time prefix aggregates
-                # (pre-merged per rowid, one partition dir + row-group
-                # pruning — the analog of the reference's prefix='2 3 4'
-                # B-trees, 1_init.up.sql:96). O(result) at any vocabulary
-                # size; segments overlay at query time.
-                pre = self.index.prefix_hits(terms_i[0])
-                if pre is not None:
-                    return pre
-                # legacy pre-tail index (current builds always cover this
-                # via the plen=-1 term-range tail): resolve the FULL
-                # expansion from the range-partitioned dictionary
-                # (startswith-pruned scan), then read postings in
-                # exact-pruned batches — bucket-dir + term row-group
-                # pruning per batch, never an unpruned postings scan.
-                expansion = [
-                    r["term"]
-                    for r in self.index.term_stats()
-                    .filter(F.col("term").startswith(terms_i[0]))
-                    .select("term")
-                    .collect()
-                ]
-                if not expansion:
-                    df = self.index.postings().filter(F.lit(False))
-                else:
-                    df = self.index.postings_for_terms(
-                        expansion[:MAX_PREFIX_EXPANSION]
-                    )
-                    for j in range(
-                        MAX_PREFIX_EXPANSION, len(expansion),
-                        MAX_PREFIX_EXPANSION,
-                    ):
-                        df = df.unionByName(
-                            self.index.postings_for_terms(
-                                expansion[j : j + MAX_PREFIX_EXPANSION]
-                            )
-                        )
-                return _merge_posting_rows(df)
+    def _scan(self, terms: list[str], wildcard: bool, counts: bool) -> DataFrame:
+        """Hit rows of one phrase position as (rowid, space, dl, tf0, tf1,
+        pos0, pos1). ``terms`` are the position's alternatives (synonym
+        expansion: union of posting lists, like FTS5 colocated tokens), or
+        the prefix of a wildcard. With ``counts`` only the per-column hit
+        counts are kept and the positions are never read; otherwise only
+        the positions. A rowid repeats when several terms match it."""
+        if wildcard:
+            # prefix: build-time prefix aggregates (the analog of the
+            # reference's prefix='2 3 4' B-trees, 1_init.up.sql:96)
+            rows = self.index.prefix_rows(terms[0])
+            if rows is None:
+                rows = self._expand_prefix(terms[0])
+            tf0, tf1 = F.size("pos0"), F.size("pos1")
+        else:
             # exact terms: bucket partition-dir pruning + term pushdown
-            df = self.index.postings_for_terms(terms_i)
-            if len(terms_i) > 1:
-                # synonym match: a doc may contain several matching terms —
-                # union their instance lists (FTS5 colocated-token
-                # semantics).
-                return _merge_posting_rows(df)
-            return df.select("rowid", "space", "dl", "pos0", "pos1")
+            rows = self.index.postings_for_terms(terms)
+            tf0, tf1 = F.col("tf0"), F.col("tf1")
+        if counts:
+            tf = [tf0.cast("long"), tf1.cast("long")]
+            pos = [F.lit(None).cast(_POS)] * 2
+        else:
+            tf = [F.lit(None).cast("long")] * 2
+            pos = [F.col("pos0"), F.col("pos1")]
+        return rows.select(
+            "rowid", "space", "dl",
+            tf[0].alias("tf0"), tf[1].alias("tf1"),
+            pos[0].alias("pos0"), pos[1].alias("pos1"),
+        )
 
-        cur = term_posts(0, alts[0])
-        for i, t in enumerate(alts[1:], start=1):
-            nxt = term_posts(i, t).select(
-                F.col("rowid").alias("rowid_j"),
-                F.col("pos0").alias("q0"),
-                F.col("pos1").alias("q1"),
-            )
-            cur = (
-                cur.join(nxt, cur["rowid"] == nxt["rowid_j"], "inner")
-                .withColumn(
-                    "pos0",
-                    F.expr(f"filter(pos0, x -> array_contains(q0, x + {i}))"),
-                )
-                .withColumn(
-                    "pos1",
-                    F.expr(f"filter(pos1, x -> array_contains(q1, x + {i}))"),
-                )
-                .drop("rowid_j", "q0", "q1")
-                .filter((F.size("pos0") > 0) | (F.size("pos1") > 0))
-            )
-        return cur.select(
-            "rowid",
-            "space",
-            "dl",
-            F.size("pos0").alias("tf0"),
-            F.size("pos1").alias("tf1"),
-            "pos0",
-            "pos1",
+    def _expand_prefix(self, prefix: str) -> DataFrame:
+        """Indexes without prefix aggregates: resolve the full expansion
+        from the range-partitioned dictionary (startswith-pruned scan),
+        then read postings in exact-pruned batches — bucket-dir + term
+        row-group pruning per batch, never an unpruned postings scan."""
+        expansion = [
+            r["term"]
+            for r in self.index.term_stats()
+            .filter(F.col("term").startswith(prefix))
+            .select("term")
+            .collect()
+        ]
+        if not expansion:
+            return self.index.postings().filter(F.lit(False))
+        return _reduce(
+            DataFrame.unionByName,
+            (
+                self.index.postings_for_terms(expansion[j : j + MAX_PREFIX_EXPANSION])
+                for j in range(0, len(expansion), MAX_PREFIX_EXPANSION)
+            ),
         )
 
     # ------------------------------------------------------------------
@@ -252,10 +217,9 @@ class Searcher:
           ok = ∃ j, y ∈ pos_j: ∀ j' ≠ j, ∃ y' ∈ pos_j':
                  y' <= y  AND  y' >= y - near - len_j'
 
-        This makes the match COUNT (TotalHits/cap decision) computable
-        without the Arrow participant evaluator, so the Python UDF only
-        ever sees the <= cap+1 rows FTS5 itself would rank (search_1.sql:29
-        binds :cap = resultCap+1 — the scan stops there)."""
+        This filters matches before the cap+1 rowid-order truncation, so
+        the driver only ever scores the <= cap+1 rows FTS5 itself would
+        rank (search_1.sql:29 binds :cap = resultCap+1)."""
         per_col = []
         for c in (0, 1):
             disj = []
@@ -275,68 +239,132 @@ class Searcher:
         v = math.log((self.ndocs - df_count + 0.5) / (df_count + 0.5))
         return v if v > 0.0 else 1e-6
 
-    def _near_eval(self, n_phrases: int, phrase_lens: list[int], near: int) -> Column:
-        """Arrow-batched NEAR(…, near) evaluation over per-phrase position
-        arrays (columns p{i}c{col}).
+    def _candidates(
+        self,
+        inc: list[list[list[str]]],
+        wild: list[bool],
+        exc: list[tuple[list[list[str]], bool]],
+        spaces: list[str] | None,
+    ) -> tuple[DataFrame, Observation]:
+        """The match frame, first cap+1 matches in rowid order, and the
+        Observation that fills each include phrase's index-wide df
+        (``df0``…) when the frame is collected.
 
-        Returns struct(ok boolean, tfw array<double>): ok is true when some
-        column contains a cluster (one instance per phrase with
-        max(start)-min(end)-1 <= near); tfw[i] is phrase i's
-        column-weighted count of *participating* instances — FTS5 trims
-        NEAR position lists before bm25 counts them (verified empirically:
-        non-participating instances, including whole columns without a
-        full cluster, contribute nothing).
-        """
-        w = (self.w_title, self.w_body)
-        # test hook: when set, every Arrow batch drops a row-count file
-        # there, so tests can assert the evaluator only sees the <= cap+1
-        # rows that survive the JVM match filter + rowid-order truncation
-        # (accumulators are unreliable under limit-truncated plans)
-        counter_dir = getattr(self, "near_counter_dir", None)
-
-        @F.pandas_udf(
-            T.StructType(
-                [
-                    T.StructField("ok", T.BooleanType()),
-                    T.StructField("tfw", T.ArrayType(T.DoubleType())),
-                ]
+        ``inc[i]`` is include phrase i's per-position alternatives and
+        ``wild[i]`` its wildcard flag; ``exc`` lists the excludes the same
+        way. One phrase is scored from hit counts (columns tf0, tf1);
+        k > 1 phrases carry start-position arrays p{i}c{col} for NEAR."""
+        k = len(inc)
+        phrases = [(a, w, k == 1) for a, w in zip(inc, wild)]
+        phrases += [(a, w, True) for a, w in exc]
+        scans, tags = [], []  # tags[p] = [(tag, counts)] per position
+        for alts, wildcard, counts in phrases:
+            counts = counts and len(alts) == 1
+            tags.append([])
+            for j, terms in enumerate(alts):
+                last = wildcard and j == len(alts) - 1
+                t = len(scans)
+                scans.append(self._scan(terms, last, counts).withColumn("tag", F.lit(t)))
+                tags[-1].append((t, counts))
+        one_term = len(scans) == 1 and not wild[0] and len(inc[0][0]) == 1
+        if one_term:  # rowids are unique: the grouping is the identity
+            rows = scans[0].select(
+                "rowid", "space", "dl",
+                F.col("tf0").alias("t0c0"), F.col("tf1").alias("t0c1"),
             )
+        else:
+            # space and dl follow from rowid (one live version each), so
+            # they are grouping keys, not string aggregates: that keeps the
+            # aggregate hash-based. A sort-based one would hand TakeOrdered
+            # rowid-sorted input, which it truncates per partition, and
+            # the df observation would miss every row past cap+1.
+            aggs = []
+            for t, counts in (tc for ptags in tags for tc in ptags):
+                for c in (0, 1):
+                    v = F.when(F.col("tag") == t, F.col(f"{'tf' if counts else 'pos'}{c}"))
+                    agg = F.sum(v) if counts else F.flatten(F.collect_list(v))
+                    aggs.append(agg.alias(f"t{t}c{c}"))
+            rows = _reduce(DataFrame.union, scans).groupBy("rowid", "space", "dl").agg(*aggs)
+
+        # per phrase: a hit-count pair (one position, counts) or the
+        # start positions of the whole phrase per column, and a match flag
+        cols, matched = [], []
+        for p, ptags in enumerate(tags):
+            t0, counts = ptags[0]
+            if counts:
+                cols += [F.col(f"t{t0}c0").alias(f"p{p}c0"), F.col(f"t{t0}c1").alias(f"p{p}c1")]
+                matched.append(F.col(f"t{t0}c0").isNotNull())
+                continue
+            for c in (0, 1):
+                conj = " AND ".join(
+                    f"array_contains(t{t}c{c}, x + {j})"
+                    for j, (t, _) in enumerate(ptags) if j
+                )
+                starts = f"filter(t{t0}c{c}, x -> {conj})" if conj else f"t{t0}c{c}"
+                cols.append(F.expr(starts).alias(f"p{p}c{c}"))
+            matched.append((F.size(f"p{p}c0") > 0) | (F.size(f"p{p}c1") > 0))
+        rows = rows.select(
+            "rowid", "space", "dl", *cols,
+            *[m.alias(f"m{p}") for p, m in enumerate(matched)],
         )
-        def near_eval(*cols: pd.Series) -> pd.DataFrame:
-            oks, tfws = [], []
-            nrows = len(cols[0])
-            if counter_dir:
-                import os
-                import uuid
+        # df is index-wide (FTS5's table-wide stats): observed BENEATH every
+        # filter below — no predicate is pushed through the observation
+        obs = Observation()
+        rows = rows.observe(
+            obs, *[F.count_if(f"m{i}").alias(f"df{i}") for i in range(k)]
+        )
+        if k == 1:
+            cond = F.col("m0")
+        else:
+            # NEAR conjunction — exact existence test in pure JVM exprs
+            cond = self._cluster_exists(k, [len(a) for a in inc], NEAR_RANGE)
+        for p in range(k, len(tags)):
+            cond = cond & ~F.col(f"m{p}")
+        if spaces:
+            cond = cond & F.col("space").isin(spaces)
+        if k == 1:
+            out = ["rowid", "space", "dl", F.col("p0c0").alias("tf0"),
+                   F.col("p0c1").alias("tf1")]
+            if not tags[0][0][1]:  # positions: tf = number of phrase starts
+                out[3:] = [F.size("p0c0").alias("tf0"), F.size("p0c1").alias("tf1")]
+        else:
+            out = ["rowid", "space", "dl"] + [
+                f"p{i}c{c}" for i in range(k) for c in (0, 1)
+            ]
+        cand = rows.filter(cond).select(*out).orderBy("rowid").limit(self.cap + 1)
+        return cand, obs
 
-                with open(
-                    os.path.join(counter_dir, f"{uuid.uuid4().hex}.cnt"), "w"
-                ) as fh:
-                    fh.write(str(nrows))
-            for r in range(nrows):
-                ok = False
-                tfw = [0.0] * n_phrases
-                for c in range(2):
-                    lists = []
-                    for i in range(n_phrases):
-                        lst = cols[i * 2 + c][r]
-                        lists.append([] if lst is None else list(lst))
-                    counts = _near_participants(lists, phrase_lens, near)
+    def _score(self, rows: list, dfs: list[int], lens: list[int]) -> list[tuple]:
+        """(rowid, space, score) for candidate rows, in the FTS5 negative
+        convention. k > 1 phrases count only NEAR-participating instances
+        — FTS5 trims NEAR position lists before bm25 counts them (verified
+        empirically: non-participating instances, including whole columns
+        without a full cluster, contribute nothing). float64, every sum and
+        product in the formula's fixed order: the driver gates hash the
+        rounded scores."""
+        k = len(dfs)
+        idf = [self._idf(d) for d in dfs]
+        w = (self.w_title, self.w_body)
+        out = []
+        for r in rows:
+            if k == 1:
+                tfw = [r["tf0"] * self.w_title + r["tf1"] * self.w_body]
+            else:
+                tfw = [0.0] * k
+                for c in (0, 1):
+                    counts = _near_participants(
+                        [r[f"p{i}c{c}"] for i in range(k)], lens, NEAR_RANGE
+                    )
                     if counts is not None:
-                        ok = True
-                        for i in range(n_phrases):
+                        for i in range(k):
                             tfw[i] += w[c] * counts[i]
-                oks.append(ok)
-                tfws.append(tfw)
-            return pd.DataFrame({"ok": oks, "tfw": tfws})
-
-        # nondeterministic marker (the function IS deterministic): stops
-        # Catalyst from (a) substituting the `ne` alias into the ok-filter,
-        # which would clone the ArrowEvalPython node and double the Python
-        # work, and (b) pushing the UDF projection below the cap+1 limit
-        near_eval = near_eval.asNondeterministic()
-        args = [F.col(f"p{i}c{c}") for i in range(n_phrases) for c in (0, 1)]
-        return near_eval(*args)
+            denom_dl = K1 * (1.0 - B + B * r["dl"] / self.avgdl)
+            score = 0.0
+            for i in range(k):
+                tf = tfw[i]
+                score = score + idf[i] * tf * (K1 + 1.0) / (tf + denom_dl)
+            out.append((r["rowid"], r["space"], -score))
+        return out
 
     # ------------------------------------------------------------------
     def search_df(
@@ -348,128 +376,38 @@ class Searcher:
     ) -> tuple[DataFrame | None, int, bool]:
         """Execute and return (scored top-k DataFrame, total_hits, capped).
 
-        The DataFrame has columns (rowid, space, score) sorted best-first;
-        None when the reduced query is empty (db_search.go:64-66).
-        """
+        The DataFrame has columns (rowid, space, score) sorted best-first
+        and is a local relation (collecting it runs no Spark job); None
+        when the reduced query is empty (db_search.go:64-66). One Spark
+        action: the candidate collect, at most cap+1 rows."""
         limit = max(1, min(limit, MAX_PAGE_LIMIT))
         phrases = reduce_phrases(parse_query(query))
-        includes = [p for p in phrases if not p.exclude]
-        excludes = [p for p in phrases if p.exclude]
-
-        inc_terms = [(p, self.analyze_phrase(p)) for p in includes]
-        inc_terms = [(p, t) for p, t in inc_terms if t]
-        if not inc_terms:
+        inc = [(p, self.analyze_phrase(p)) for p in phrases if not p.exclude]
+        inc = [(p, a) for p, a in inc if a]
+        if not inc:
             return None, 0, False
-
-        fast = self._wand_fast_path(inc_terms, excludes, spaces, limit, offset)
-        if fast is not None:
-            return fast
-        narrow = self._narrow_single_phrase(inc_terms, excludes, spaces, limit, offset)
-        if narrow is not None:
-            return narrow
-
-        self._evict_cache()
-        hits = []
-        for i, (p, terms) in enumerate(inc_terms):
-            h = self._phrase_hits(terms, p.wildcard).cache()
-            self._remember(h)
-            # phrase document frequency over the whole index — kept as a
-            # 1-row DataFrame and broadcast into the scoring plan (no
-            # driver-side action per phrase)
-            df_i = h.agg(F.count(F.lit(1)).cast("double").alias(f"df_{i}"))
-            hits.append((h, df_i, len(terms)))
-
-        k = len(hits)
-        cand = hits[0][0].select(
-            "rowid",
-            "space",
-            "dl",
-            (F.col("tf0") * self.w_title + F.col("tf1") * self.w_body).alias("tfw_0"),
-            F.col("pos0").alias("p0c0"),
-            F.col("pos1").alias("p0c1"),
+        exc = []
+        for p in phrases:
+            if p.exclude:
+                alts = self.analyzer.query_alternatives(
+                    p.text, synonyms=self.synonyms, prefix=p.wildcard
+                )
+                if alts:
+                    exc.append((alts, p.wildcard))
+        cand, obs = self._candidates(
+            [a for _p, a in inc], [p.wildcard for p, _a in inc], exc, spaces
         )
-        for i, (h, _n, _l) in enumerate(hits[1:], start=1):
-            hi = h.select(
-                F.col("rowid").alias("rowid_j"),
-                F.col("pos0").alias(f"p{i}c0"),
-                F.col("pos1").alias(f"p{i}c1"),
-            )
-            cand = cand.join(hi, cand["rowid"] == hi["rowid_j"], "inner").drop("rowid_j")
-
-        if k > 1:
-            # NEAR conjunction — exact existence test in pure JVM exprs, so
-            # the match count below never touches Python
-            cand = cand.filter(
-                self._cluster_exists(k, [l for _h, _n, l in hits], NEAR_RANGE)
-            )
-
-        for p in excludes:
-            ex_alts = self.analyzer.query_alternatives(
-                p.text, synonyms=self.synonyms, prefix=p.wildcard
-            )
-            if not ex_alts:
-                continue
-            ex = self._phrase_hits(ex_alts, p.wildcard).select("rowid")
-            cand = cand.join(ex, "rowid", "left_anti")
-
-        if spaces:
-            cand = cand.filter(F.col("space").isin(spaces))
-
-        if k > 1:
-            # Bounded single heavy pass, mirroring FTS5's `LIMIT :cap+1`
-            # (search_1.sql:29 with :cap = resultCap+1, db_search.go:93-96):
-            # the first cap+1 matches in rowid order come out of ONE
-            # TakeOrdered heap over the JVM-matched frame — the reference
-            # never counts matches beyond cap+1 either, and TotalHits
-            # reports min(n, cap) identically. localCheckpoint persists
-            # that <= cap+1-row set AND cuts the optimizer boundary:
-            # without it Catalyst pushes the NEAR-UDF projection below the
-            # limit (projects commute with limits) or clones it into the
-            # ok-filter. Never cache the unbounded wide match frame.
-            cand = cand.orderBy("rowid").limit(self.cap + 1).localCheckpoint(
-                eager=False
-            )
-            n = cand.count()
-            capped = n > self.cap
-            total = min(n, self.cap)
-            # participant-filtered tf for scoring (Arrow UDF) — sees only
-            # the checkpointed <= cap+1 rows; every row already passed the
-            # JVM cluster-existence filter
-            ne = self._near_eval(k, [l for _h, _n, l in hits], NEAR_RANGE)
-            cand = cand.withColumn("ne", ne).filter(F.col("ne.ok"))
-            for i in range(k):
-                cand = cand.withColumn(f"tfw_{i}", F.element_at("ne.tfw", i + 1))
-
-        # BM25 scoring — pure JVM arithmetic, float64 throughout; per-phrase
-        # df scalars ride along as broadcast 1-row frames.
-        for i, (_h, df_i, _l) in enumerate(hits):
-            cand = cand.crossJoin(F.broadcast(df_i))
-        denom_dl = K1 * (1.0 - B + B * F.col("dl") / F.lit(self.avgdl))
-        score = F.lit(0.0)
-        for i in range(k):
-            raw_idf = F.ln(
-                (F.lit(float(self.ndocs)) - F.col(f"df_{i}") + 0.5)
-                / (F.col(f"df_{i}") + 0.5)
-            )
-            idf = F.when(raw_idf <= 0.0, F.lit(1e-6)).otherwise(raw_idf)
-            tf = F.col(f"tfw_{i}")
-            score = score + idf * tf * (K1 + 1.0) / (tf + denom_dl)
-        # cache the scored frame (NARROW: rowid/space/score): the count
-        # below materializes it once and the global sort's range sampling
-        # reuses it instead of recomputing the joins/UDF
-        cand = cand.select("rowid", "space", (-score).alias("score")).cache()
-        self._remember(cand)  # evicted at the next query
-
-        if k == 1:
-            # single-phrase: scoring is pure JVM, so count over the scored
-            # narrow cache in one pass (round-2 flow), then truncate
-            total = cand.count()
-            capped = total > self.cap
-            total = min(total, self.cap)
-            if capped:
-                cand = cand.orderBy("rowid").limit(self.cap + 1)
-        out = cand.orderBy("score", "rowid").offset(offset).limit(limit)
-        return out, total, capped
+        rows = cand.collect()
+        n = len(rows)
+        hits = []
+        if n:
+            observed = obs.get
+            dfs = [observed[f"df{i}"] for i in range(len(inc))]
+            hits = sorted(
+                self._score(rows, dfs, [len(a) for _p, a in inc]),
+                key=lambda h: (h[2], h[0]),
+            )[offset : offset + limit]
+        return _hits_frame(self.index.spark, hits), min(n, self.cap), n > self.cap
 
     # ------------------------------------------------------------------
     def _with_deadline(self, fn):
@@ -486,29 +424,18 @@ class Searcher:
         group = f"lsearch-{id(self)}-{_time.monotonic_ns()}"
         out: list = []
         err: list = []
-        cancelled = threading.Event()
 
         def run():
             sc.setJobGroup(group, "letarette search deadline", True)
-            self._tl.frames = []  # this thread's own frame ledger
             try:
                 out.append(fn())
             except BaseException as e:  # surfaced below
                 err.append(e)
-            finally:
-                if cancelled.is_set():
-                    # the zombie releases ONLY the frames it registered —
-                    # never a newer query's caches (generation-scoped;
-                    # double-unpersist of already-evicted frames is a no-op)
-                    for df in self._tl.frames:
-                        df.unpersist()
-                self._tl.frames = None
 
         t = threading.Thread(target=run, daemon=True)
         t.start()
         t.join(self.timeout)
         if t.is_alive():
-            cancelled.set()
             sc.cancelJobGroup(group)
             raise SearchTimeout(f"query exceeded {self.timeout}s budget")
         if err:
@@ -613,20 +540,23 @@ class Searcher:
                 df, total, capped = self.search_df(query, spaces, limit, offset)
         if df is None:
             return SearchResult([], 0, False, respelt, respelt_distance, "no_hit")
-        docs = self.index.docs().select("rowid", "doc_id", "alive", "title", "body")
-        # top-k rows are tiny (<= page limit): broadcast them against docs.
-        rows = (
-            docs.join(F.broadcast(df), "rowid", "inner")
-            .filter(F.col("alive"))
-            .select("space", "doc_id", "rowid", "score", "title", "body")
-            .collect()
-        )
-        rows = sorted(rows, key=lambda r: (r["score"], r["rowid"]))
+        page = df.collect() if total else []  # local relation: no job
+        docs = {}
+        if page:
+            # the page's docs by rowid-bucket point lookup (<= page limit)
+            docs = {
+                r["rowid"]: r
+                for r in self.index.docs_for_rowids([h["rowid"] for h in page])
+                .filter(F.col("alive"))
+                .select("rowid", "doc_id", "title", "body")
+                .collect()
+            }
+        rows = [(h, docs[h["rowid"]]) for h in page if h["rowid"] in docs]
         status = "index_hit" if total > 0 else "no_hit"
         if strategy == 3:
             hits = [
-                Hit(r["space"], r["doc_id"], r["rowid"], r["score"], r["title"])
-                for r in rows
+                Hit(h["space"], d["doc_id"], h["rowid"], h["score"], d["title"])
+                for h, d in rows
             ]
             return SearchResult(hits, total, capped, respelt, respelt_distance, status)
         builder = None
@@ -641,130 +571,12 @@ class Searcher:
                     if alts:
                         phrase_alts.append(alts)
         hits = []
-        for r in rows:
+        for h, d in rows:
             snip = ""
             if builder is not None and phrase_alts:
-                snip = builder.snippet(r["title"], r["body"], phrase_alts)
-            hits.append(Hit(r["space"], r["doc_id"], r["rowid"], r["score"], snip))
+                snip = builder.snippet(d["title"], d["body"], phrase_alts)
+            hits.append(Hit(h["space"], d["doc_id"], h["rowid"], h["score"], snip))
         return SearchResult(hits, total, capped, respelt, respelt_distance, status)
-
-    # ------------------------------------------------------------------
-    def _wand_fast_path(
-        self,
-        inc_terms: list,
-        excludes: list,
-        spaces: list[str] | None,
-        limit: int,
-        offset: int,
-    ) -> tuple[DataFrame, int, bool] | None:
-        """Route eligible queries through block-max WAND (query/wand.py):
-        a single plain single-term phrase, no excludes/space filter, no
-        pending delta segments (blocks reflect the base snapshot only), and
-        a hit count under the cap (the capped path needs rowid-order
-        truncation, which WAND's pruning cannot honor). total_hits comes
-        from term_stats — no candidate scan at all."""
-        if len(inc_terms) != 1 or excludes or spaces or self.index.segments:
-            return None
-        p, alts = inc_terms[0]
-        if p.wildcard or len(alts) != 1 or len(alts[0]) != 1:
-            return None
-        from letarette_spark.index.blocks import has_blocks
-
-        if not has_blocks(self.index):
-            return None
-        term = alts[0][0]
-        row = (
-            self.index.term_stats().filter(F.col("term") == term).limit(1).collect()
-        )
-        total = int(row[0]["df"]) if row else 0
-        if total == 0:
-            empty = self.index.spark.createDataFrame(
-                [], "rowid long, space string, score double"
-            )
-            return empty, 0, False
-        if total > self.cap:
-            return None
-        from letarette_spark.query.wand import wand_topk
-
-        out = wand_topk(
-            self.index, [term], k=offset + limit,
-            w_title=self.w_title, w_body=self.w_body,
-        ).offset(offset)
-        return out, total, False
-
-    # ------------------------------------------------------------------
-    def _narrow_single_phrase(
-        self,
-        inc_terms: list,
-        excludes: list,
-        spaces: list[str] | None,
-        limit: int,
-        offset: int,
-    ) -> tuple[DataFrame, int, bool] | None:
-        """Positions-free fast path for single-position single-phrase
-        queries (round-3 verdict task #5: widen the fast paths beyond
-        WAND's no-space/no-exclude shape).
-
-        A one-word phrase needs no positions: tf0/tf1 are materialized
-        posting columns, so the scan reads ONLY the narrow
-        (rowid, space, dl, tf0, tf1) columns — the fat pos0/pos1 arrays
-        (the bulk of postings I/O) are never touched. Handles space
-        filters, excludes, and colocated-synonym alternatives (tf = sum
-        over alternative terms — positions are disjoint, so the sum equals
-        the merged-positions count the general path computes). Wildcards
-        and multi-word phrases fall through (they need positions).
-
-        Identical result contract to the general k==1 path: index-wide
-        phrase df (computed BEFORE the space filter, like FTS5's
-        table-wide stats), count → cap+1 rowid-order truncation when
-        capped, (-score, rowid) ordering."""
-        if len(inc_terms) != 1:
-            return None
-        p, alts = inc_terms[0]
-        if p.wildcard or len(alts) != 1:
-            return None
-        terms = alts[0]
-        self._evict_cache()
-        rows = self.index.postings_for_terms(terms).select(
-            "rowid", "space", "dl", "tf0", "tf1"
-        )
-        if len(terms) > 1:
-            rows = rows.groupBy("rowid").agg(
-                F.first("space").alias("space"),
-                F.first("dl").alias("dl"),
-                F.sum("tf0").alias("tf0"),
-                F.sum("tf1").alias("tf1"),
-            )
-        df_0 = rows.agg(F.count(F.lit(1)).cast("double").alias("df_0"))
-
-        for ex in excludes:
-            ex_alts = self.analyzer.query_alternatives(
-                ex.text, synonyms=self.synonyms, prefix=ex.wildcard
-            )
-            if not ex_alts:
-                continue
-            exd = self._phrase_hits(ex_alts, ex.wildcard).select("rowid")
-            rows = rows.join(exd, "rowid", "left_anti")
-        if spaces:
-            rows = rows.filter(F.col("space").isin(spaces))
-
-        rows = rows.crossJoin(F.broadcast(df_0))
-        raw_idf = F.ln(
-            (F.lit(float(self.ndocs)) - F.col("df_0") + 0.5) / (F.col("df_0") + 0.5)
-        )
-        idf = F.when(raw_idf <= 0.0, F.lit(1e-6)).otherwise(raw_idf)
-        tf = F.col("tf0") * self.w_title + F.col("tf1") * self.w_body
-        denom_dl = K1 * (1.0 - B + B * F.col("dl") / F.lit(self.avgdl))
-        score = idf * tf * (K1 + 1.0) / (tf + denom_dl)
-        cand = rows.select("rowid", "space", (-score).alias("score")).cache()
-        self._remember(cand)
-        total = cand.count()
-        capped = total > self.cap
-        total = min(total, self.cap)
-        if capped:
-            cand = cand.orderBy("rowid").limit(self.cap + 1)
-        out = cand.orderBy("score", "rowid").offset(offset).limit(limit)
-        return out, total, capped
 
     # ------------------------------------------------------------------
     def _respell(self, query: str) -> tuple[str, int, bool]:
@@ -822,6 +634,25 @@ class Searcher:
             .select("term")
             .collect()
         }
+
+
+def _hits_frame(spark, hits: list[tuple]) -> DataFrame:
+    """(rowid, space, score) rows as a local relation: built from an Arrow
+    table, so collecting it runs no Spark job."""
+    import pyarrow as pa
+
+    cols = list(zip(*hits)) or [(), (), ()]
+    return spark.createDataFrame(
+        pa.table(
+            [
+                pa.array(cols[0], pa.int64()),
+                pa.array(cols[1], pa.string()),
+                pa.array(cols[2], pa.float64()),
+            ],
+            names=_HITS_SCHEMA.names,
+        ),
+        _HITS_SCHEMA,
+    )
 
 
 def _merge_intervals(iv: list[tuple[int, int]]) -> list[tuple[int, int]]:

@@ -18,9 +18,9 @@ Upper bound per block: idf_t * sat(w0*tf0_max + w1*tf1_max, dl_min) — the
 BM25 saturation term is increasing in tf and decreasing in dl, so block-max
 tf with block-min dl bounds every doc in the block.
 
-Property-tested equal to exhaustive scoring in tests/test_wand.py; the
-Searcher routes eligible single-term queries through this path, so the
-FTS5 rank-identity suite exercises it too.
+Property-tested equal to exhaustive scoring in tests/test_wand.py and
+FTS5 rank-identity-tested through Searcher.search_terms_df, the
+bag-of-words API that routes through it.
 """
 
 from __future__ import annotations

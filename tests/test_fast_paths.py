@@ -1,16 +1,17 @@
-"""Fast-path widening (round-3 verdict task #5): the narrow positions-free
-single-phrase path (space filters / excludes / synonyms) and WAND routing
-for bag-of-words queries.
+"""One candidate action for every single-phrase shape (space filters,
+excludes, synonyms) and WAND routing for bag-of-words queries.
 
-Routing is asserted by poisoning the path a query must NOT take; results
-are asserted rank-identical to live FTS5 (space filters reproduced with
-rowid-IN restrictions — FTS5 BM25 stats stay table-wide, exactly like the
-engine computes phrase df before the space filter)."""
+Results are asserted rank-identical to live FTS5 (space filters
+reproduced with rowid-IN restrictions — FTS5 BM25 stats stay table-wide,
+exactly like the engine observes phrase df beneath the space filter).
+Routes are asserted by spying on the candidate frame or poisoning the path
+a query must NOT take."""
 
 from __future__ import annotations
 
 import math
 import random
+import re
 
 import pytest
 
@@ -109,17 +110,25 @@ class TestNarrowSinglePhrase:
         assert total == len(oracle.match_rowids('"rotor" NOT ("wing")'))
 
     def test_routing_skips_position_machinery(self, spaced, monkeypatch):
-        """A space-filtered single-term query must never touch
-        _phrase_hits (the positions-reading path)."""
+        """A space-filtered single-term query reads only the narrow
+        (rowid, space, dl, tf0, tf1) posting columns: the pos0/pos1 arrays
+        (the bulk of postings I/O) are never scanned."""
         idx, oracle, space_rowids = spaced
         s = Searcher(idx, stopwords=frozenset(), synonyms={})
+        frames = []
+        real = Searcher._candidates
 
-        def boom(*a, **k):  # pragma: no cover - failure signal
-            raise AssertionError("positions path used for narrow query")
+        def spy(self, *a, **k):
+            cand, obs = real(self, *a, **k)
+            frames.append(cand)
+            return cand, obs
 
-        monkeypatch.setattr(s, "_phrase_hits", boom)
+        monkeypatch.setattr(Searcher, "_candidates", spy)
         got, total, _ = _got(s, "rotor", spaces=["alpha"])
         assert got and total > 0
+        plan = frames[0]._jdf.queryExecution().executedPlan().toString()
+        scans = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
+        assert scans and not any("pos0" in ln or "pos1" in ln for ln in scans), plan
 
     def test_capped_space_filtered(self, spaced):
         """cap+1 rowid-order truncation applies within the space filter."""
@@ -133,40 +142,52 @@ class TestNarrowSinglePhrase:
         exp = _expected_in_rowids(oracle, '"error"', in_space[:4])
         _assert_scores(got, exp, "capped error alpha")
 
-    def test_synonyms_agree_with_general_path(self, spaced, monkeypatch):
-        """Colocated-synonym tf (sum over alternative terms) must equal
-        the general path's merged-positions count."""
-        idx, _oracle, _sr = spaced
-        syn = {"rotor": ["wing"]}
-        s_narrow = Searcher(idx, stopwords=frozenset(), synonyms=syn)
-        s_general = Searcher(idx, stopwords=frozenset(), synonyms=syn)
-        monkeypatch.setattr(
-            s_general, "_narrow_single_phrase", lambda *a, **k: None
+    def test_synonym_counts_rank_identity(self, spaced):
+        """Colocated-synonym tf is the sum of the alternative terms' hit
+        counts (their positions are disjoint). FTS5 twin: rewrite every
+        group member to the canonical word in the oracle corpus — tf, df
+        and dl then coincide with the query-side posting-list union."""
+        idx, _oracle, space_rowids = spaced
+        s = Searcher(idx, stopwords=frozenset(), synonyms={"rotor": ["wing"]})
+        oracle = Fts5Index.build(
+            [
+                (r, re.sub(r"\bwing\b", "rotor", t), re.sub(r"\bwing\b", "rotor", b))
+                for r, _sp, t, b in _docs()
+            ]
         )
-        got_n, tot_n, _ = _got(s_narrow, "rotor")
-        got_g, tot_g, _ = _got(s_general, "rotor")
-        assert tot_n == tot_g and len(got_n) == len(got_g)
-        assert [r for r, _ in got_n] == [r for r, _ in got_g]
-        for (_, a), (_, b) in zip(got_n, got_g):
-            assert math.isclose(a, b, rel_tol=1e-12, abs_tol=1e-12)
+        got, total, _ = _got(s, "rotor")
+        _assert_scores(got, oracle.search('"rotor"', limit=10), "syn rotor")
+        assert total == len(oracle.match_rowids('"rotor"'))
+        got, total, _ = _got(s, "rotor", spaces=["beta"])
+        in_space = [
+            r for r in oracle.match_rowids('"rotor"')
+            if r in set(space_rowids["beta"])
+        ]
+        _assert_scores(
+            got, _expected_in_rowids(oracle, '"rotor"', in_space), "syn beta"
+        )
+        assert total == len(in_space)
 
 
 class TestWandRouting:
-    def test_single_term_uses_wand_not_scan(self, spaced, monkeypatch):
-        """No-space no-exclude single-term under cap: WAND, no postings
-        scan, no narrow scan."""
+    def test_single_term_is_one_candidate_action(self, spaced, monkeypatch):
+        """A single-term query under the cap, blocks current: search_df
+        ranks it from its one bounded candidate collect — WAND is not
+        consulted (its posting list is <= cap rows anyway)."""
+        import letarette_spark.query.wand as wand_mod
+
         idx, oracle, _sr = spaced
         s = Searcher(idx, stopwords=frozenset(), synonyms={})
 
         def boom(*a, **k):  # pragma: no cover - failure signal
-            raise AssertionError("scan path used for WAND-eligible query")
+            raise AssertionError("search_df routed through WAND")
 
-        monkeypatch.setattr(s, "_narrow_single_phrase", boom)
-        monkeypatch.setattr(s, "_phrase_hits", boom)
-        got, total, _ = _got(s, "rotor")
+        monkeypatch.setattr(wand_mod, "wand_topk", boom)
+        monkeypatch.setattr(wand_mod, "exhaustive_topk", boom)
+        got, total, capped = _got(s, "rotor")
         exp = oracle.search('"rotor"', limit=10)
-        _assert_scores(got, exp, "wand rotor")
-        assert total == len(oracle.match_rowids('"rotor"'))
+        _assert_scores(got, exp, "one action rotor")
+        assert total == len(oracle.match_rowids('"rotor"')) and not capped
 
     def test_bag_of_words_multi_term_routes_through_wand(
         self, spaced, monkeypatch

@@ -47,6 +47,25 @@ class TestDedup:
         # with 8 bands of 1 row, a ~0.8-jaccard pair collides w.p. ~1-(0.2)^8
         assert (1, 2) in lsh
 
+    def test_jaccard_duplicate_ids_match_join_path(self, spark, near_dup_docs, monkeypatch):
+        """Duplicate ids: the sparse-accumulator candidate scan falls back
+        to the distributed join, so both paths give the same pairs and no
+        id pairs with itself."""
+        from letarette_spark.functions import dedup
+
+        dup = near_dup_docs.unionByName(near_dup_docs.filter("doc_id IN (1, 2)"))
+
+        def pairs():
+            return sorted(
+                (r["a"], r["b"], r["jaccard"])
+                for r in dedup.jaccard_pairs(dup, n=3, threshold=0.3).collect()
+            )
+
+        default = pairs()
+        monkeypatch.setattr(dedup, "_spa_candidate_pairs", lambda *a, **k: None)
+        assert default == pairs()
+        assert default and all(a != b for a, b, _j in default)
+
     def test_simhash_close_for_near_dups(self, near_dup_docs):
         from letarette_spark.functions.dedup import simhash64
 

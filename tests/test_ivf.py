@@ -149,3 +149,50 @@ def test_empty_and_missing_query(spark):
     assert ivf_topk(empty, 0, k=3).count() == 0
     emb = _emb_df(spark, n=10)
     assert ivf_topk(emb, 999, k=3, n_cells=2, nprobe=1).count() == 0
+
+
+def _with_null_embeddings(spark, n=40):
+    """(clean frame, the same frame plus two rows whose embedding is NULL)."""
+    emb = _emb_df(spark, n=n)
+    nulls = spark.createDataFrame(
+        [(1000, None), (1001, None)], "vec_id long, embedding array<double>"
+    )
+    return emb, emb.unionByName(nulls)
+
+
+def test_ivf_assign_null_embedding_gets_null_cell(spark):
+    emb, mixed = _with_null_embeddings(spark)
+    cents = ivf_centroids(emb, n_cells=4)
+    want = {r["vec_id"]: r["cell"] for r in ivf_assign(emb, cents).collect()}
+    got = {r["vec_id"]: r["cell"] for r in ivf_assign(mixed, cents).collect()}
+    assert got == {**want, 1000: None, 1001: None}
+    # a ragged (non-NULL) vector is still an error
+    ragged = spark.createDataFrame(
+        [(1, [1.0, 2.0])], "vec_id long, embedding array<double>"
+    )
+    with pytest.raises(Exception, match="must all have dim"):
+        ivf_assign(ragged, cents).collect()
+
+
+def test_ivf_topk_never_returns_null_embedding(spark):
+    emb, mixed = _with_null_embeddings(spark)
+    cents = ivf_centroids(emb, n_cells=4)
+    for q in (0, 5):
+        # every cell probed, k past the corpus size: all non-NULL rows
+        got = ivf_topk(mixed, q, k=100, nprobe=4, centroids=cents).collect()
+        want = ivf_topk(emb, q, k=100, nprobe=4, centroids=cents).collect()
+        assert got == want and len(got) == 39
+    assert ivf_topk(mixed, 1000, k=5, nprobe=4, centroids=cents).count() == 0
+
+
+def test_ivf_index_write_skips_null_embedding(spark, tmp_path):
+    emb, mixed = _with_null_embeddings(spark)
+    cents = ivf_centroids(emb, n_cells=4)
+    path = str(tmp_path / "ivf_nulls")
+    ivf_index_write(mixed, path, cents)
+    stored = spark.read.parquet(path)
+    assert {r["vec_id"] for r in stored.select("vec_id").collect()} == set(range(40))
+    assert stored.filter(F.col("cell").isNull()).count() == 0
+    qv = list(emb.filter(F.col("vec_id") == 3).first()["embedding"])
+    got = ivf_index_topk(spark, path, qv, cents, k=100, nprobe=4).collect()
+    assert len(got) == 40 and not {1000, 1001} & {r["vec_id"] for r in got}

@@ -107,8 +107,23 @@ class TestPlanShape:
         plan = post._jdf.queryExecution().executedPlan().toString()
         assert "PushedFilters" in plan and "run" in plan, plan
 
-    def test_searcher_uses_single_scan_per_phrase_term(self, leta_index):
+    def test_searcher_uses_single_scan_per_phrase_term(self, leta_index, monkeypatch):
+        """The candidate collect scans each phrase term once, with the term
+        pushed to parquet, and groups the scans in one exchange."""
+        frames = []
+        real = Searcher._candidates
+
+        def spy(self, *a, **k):
+            cand, obs = real(self, *a, **k)
+            frames.append(cand)
+            return cand, obs
+
+        monkeypatch.setattr(Searcher, "_candidates", spy)
         s = Searcher(leta_index)
-        df, _t, _c = s.search_df("running quickly")
-        plan = df._jdf.queryExecution().toString()
-        assert "PushedFilters" in plan
+        s.search_df("running quickly")
+        plan = frames[0]._jdf.queryExecution().executedPlan().toString()
+        plan = plan.split("== Initial Plan ==")[0]  # the executed AQE plan
+        assert "PushedFilters" in plan, plan
+        scans = [ln for ln in plan.splitlines() if "FileScan parquet" in ln]
+        assert len(scans) == 2, plan
+        assert plan.count("Exchange hashpartitioning") == 1, plan

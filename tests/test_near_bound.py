@@ -1,13 +1,14 @@
-"""The NEAR/conjunction path must be bounded: match counting happens in
-pure JVM expressions (Searcher._cluster_exists), and the Arrow participant
-evaluator only ever sees the <= cap+1 rowid-order matches FTS5 itself would
-rank (search_1.sql:29 binds :cap = resultCap+1).
+"""The NEAR/conjunction path must be bounded: match filtering happens in
+pure JVM expressions (Searcher._cluster_exists) before the cap+1 rowid-order
+truncation, and driver-side NEAR participation scoring only ever sees the
+<= cap+1 matches FTS5 itself would rank (search_1.sql:29 binds
+:cap = resultCap+1).
 
 Three contracts:
   1. the JVM existence expression agrees with the Python interval evaluator
      (_near_participants) on randomized position arrays;
-  2. a high-co-occurrence query with a small cap feeds the Arrow UDF at
-     most cap+1 rows (accumulator-asserted);
+  2. a high-co-occurrence query with a small cap scores at most cap+1 rows
+     in the driver;
   3. the capped NEAR ranking is rank/score-identical to live FTS5 over the
      same cap+1 rowid-order pool.
 """
@@ -88,29 +89,30 @@ def cooccur(spark, tmp_path_factory):
     return index, oracle
 
 
-def test_near_udf_sees_at_most_cap_plus_one_rows(cooccur, tmp_path):
+def test_near_scoring_sees_at_most_cap_plus_one_rows(cooccur, monkeypatch):
+    import letarette_spark.query.executor as ex
+
     index, _ = cooccur
     s = Searcher(index, cap=5)
-    cnt_dir = tmp_path / "near_batches"
-    cnt_dir.mkdir()
-    s.near_counter_dir = str(cnt_dir)  # UDF-side batch-size side channel
+    scored, cols = [], []
+    real_score, real_near = Searcher._score, ex._near_participants
+    monkeypatch.setattr(
+        Searcher, "_score",
+        lambda self, rows, *a: scored.append(len(rows)) or real_score(self, rows, *a),
+    )
+    monkeypatch.setattr(
+        ex, "_near_participants",
+        lambda *a: cols.append(1) or real_near(*a),
+    )
     df, total, capped = s.search_df("alpha beta", limit=10)
-
-    # plan shape: the Arrow evaluator consumes the checkpointed (already
-    # cap+1-truncated) candidate RDD — the limit is NOT below the UDF as a
-    # pushable projection target
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" in plan
-    assert "ExistingRDD" in plan or "Scan ExistingRDD" in plan, plan
 
     rows = df.collect()
     assert capped and total == 5
     assert len(rows) == 6  # cap+1 matches ranked, page limit 10
-    # exactly one action touched the UDF (search_df's count() is JVM-only)
-    seen = sum(int(p.read_text()) for p in cnt_dir.iterdir())
-    assert 0 < seen <= 6, (
-        f"Arrow NEAR evaluator saw {seen} rows; must be bounded by cap+1"
-    )
+    # one driver-side scoring pass over the cap+1 rowid-order matches,
+    # one participation evaluation per (row, column)
+    assert scored == [6], f"NEAR scoring saw {scored} rows; bound is cap+1"
+    assert len(cols) == 2 * 6
 
 
 def test_capped_near_rank_identity_vs_fts5(cooccur):

@@ -90,7 +90,7 @@ def test_covered_lengths_scan_only_prefix_files(built):
     no dictionary scan — regardless of how many terms match."""
     index, _plain, _oracle, _docs, _cfg = built
     for p in ("pa", "par", "pars", "bu", "err"):
-        files = index.prefix_hits(p).inputFiles()
+        files = index.prefix_rows(p).inputFiles()
         assert files, p
         assert all(f"/prefix/plen={len(p)}/" in f for f in files), (p, files)
 
@@ -100,7 +100,7 @@ def test_below_minimum_length_prunes_to_one_bucket_dir(built):
     aggregates of ONE first-char bucket dir plus an exact-pruned postings
     lookup for bare short terms — never a full postings scan."""
     index, _plain, _oracle, _docs, _cfg = built
-    files = index.prefix_hits("4").inputFiles()
+    files = index.prefix_rows("4").inputFiles()
     pfx = [f for f in files if "/prefix/" in f]
     assert pfx and all("/prefix/plen=2/" in f for f in pfx)
     # the one aggregate dir, not all of them
@@ -114,16 +114,16 @@ def test_longer_than_max_serves_from_term_range_tail(built):
     dictionary, at ANY number of completions."""
     index, plain, _oracle, _docs, _cfg = built
     for p in ("parse", "tokeniz"):
-        df = index.prefix_hits(p)
+        df = index.prefix_rows(p)
         assert df is not None, p
         files = df.inputFiles()
         assert files, p
         assert all("/prefix/plen=-1/" in f for f in files), (p, files)
         dirs = {f.rsplit("/", 1)[0] for f in files}
         assert len(dirs) == 1, (p, dirs)
-    assert index.prefix_hits("") is None
+    assert index.prefix_rows("") is None
     # a pre-tail index (prefix_lengths=()) still reports no coverage
-    assert plain.prefix_hits("parse") is None
+    assert plain.prefix_rows("parse") is None
 
 
 def test_huge_expansion_stays_on_tail(spark, tmp_path_factory):
@@ -154,12 +154,14 @@ def test_huge_expansion_stays_on_tail(spark, tmp_path_factory):
     assert index.term_stats().filter(
         F.col("term").startswith("zqxwv")).count() > 4096
 
-    hits = index.prefix_hits("zqxwv")
+    hits = index.prefix_rows("zqxwv")
     files = hits.inputFiles()
     assert files and all("/prefix/plen=-1/" in f for f in files), files
     assert len({f.rsplit("/", 1)[0] for f in files}) == 1
     # every doc contains zqxwv* terms; tf == its share of the terms
-    got = {r["rowid"]: len(r["pos1"]) for r in hits.collect()}
+    got = {}
+    for r in hits.collect():
+        got[r["rowid"]] = got.get(r["rowid"], 0) + len(r["pos1"])
     want = {
         d: len(range(d, n_terms, n_docs)) for d in range(1, n_docs + 1)
     }
@@ -247,5 +249,5 @@ def test_wildcards_through_upsert_and_compaction(spark, tmp_path_factory, built)
     assert not os.path.isdir(os.path.join(root, "prefix"))  # old dir GC'd
     check(idx2)
     # compacted aggregates serve covered lengths from prefix files only
-    files = idx2.prefix_hits("par").inputFiles()
+    files = idx2.prefix_rows("par").inputFiles()
     assert files and all(f"/{idx2.meta['prefix_dir']}/plen=3/" in f for f in files)

@@ -1,0 +1,222 @@
+"""Spark job budget of one query: search_df is one bounded candidate
+collect, search() adds one point-lookup page fetch.
+
+Jobs are counted with the status tracker under a per-measurement job
+group. On a segment-free index search_df starts at most 3 jobs (the
+candidate collect; one shuffle-map job when phrases are grouped by rowid)
+and a whole search() at most 4. Every class is also checked rank-identical
+to live FTS5, so the budget never buys a different answer."""
+
+from __future__ import annotations
+
+import math
+import random
+import uuid
+from contextlib import contextmanager
+
+import pytest
+
+from letarette_spark.analysis.tokenizer import AnalyzerConfig
+from letarette_spark.index.builder import Index, build_index
+from letarette_spark.index.incremental import upsert_documents
+from letarette_spark.query.executor import Searcher
+from letarette_spark.query.parser import compile_match_string, parse_query, reduce_phrases
+from tests.fts5_oracle import Fts5Index
+
+WORDS = (
+    "engine parser buffer token stream error handler rotor wing panel "
+    "cache index shard merge split scan probe"
+).split()
+CFG = AnalyzerConfig(mode="porter")
+
+# (class, query, spaces)
+CLASSES = [
+    ("single", "rotor", None),
+    ("near2", "rotor panel", None),
+    ("near3", "rotor panel cache", None),
+    ("not", "rotor -wing", None),
+    ("phrase", '"error handler"', None),
+    ("prefix", "pars*", None),
+    ("nohit", '"zzqq xxvv"', None),
+    ("spaced", "rotor", ["alpha"]),
+]
+
+
+def _docs(n=120, seed=7):
+    rng = random.Random(seed)
+    return [
+        (
+            i + 1,
+            "alpha" if i % 3 else "beta",
+            " ".join(rng.choices(WORDS, k=rng.randint(1, 3))),
+            " ".join(rng.choices(WORDS, k=rng.randint(10, 30))),
+        )
+        for i in range(n)
+    ]
+
+
+def _frame(spark, docs):
+    return spark.createDataFrame(
+        [
+            {"doc_id": f"d{r}", "rowid": r, "space": sp, "title": t,
+             "body": b, "alive": True}
+            for r, sp, t, b in docs
+        ]
+    )
+
+
+@contextmanager
+def _jobs(spark):
+    """Yields a list that receives the number of Spark jobs started in
+    the block (this thread's job group)."""
+    sc = spark.sparkContext
+    group = f"qjobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "query job budget")
+    out: list[int] = []
+    try:
+        yield out
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        out.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+
+
+@pytest.fixture(scope="module")
+def clean(spark, tmp_path_factory):
+    root = str(tmp_path_factory.mktemp("jobs_idx"))
+    docs = _docs()
+    build_index(spark, _frame(spark, docs), root, config=CFG,
+                n_build_partitions=2, chunk_size=2)
+    oracle = Fts5Index.build([(r, t, b) for r, _sp, t, b in docs])
+    return Index.open(spark, root, CFG), oracle, docs
+
+
+@pytest.fixture(scope="module")
+def segmented(spark, tmp_path_factory):
+    """The same corpus plus one delta segment: 10 docs replaced, 15 added."""
+    root = str(tmp_path_factory.mktemp("jobs_seg_idx"))
+    docs = _docs()
+    build_index(spark, _frame(spark, docs), root, config=CFG,
+                n_build_partitions=2, chunk_size=2)
+    fresh = _docs(n=135, seed=8)
+    batch = [d for d in fresh if d[0] <= 10 or d[0] > 120]
+    upsert_documents(spark, root, _frame(spark, batch), batch_id=1)
+    final = {d[0]: d for d in docs}
+    final.update({d[0]: d for d in batch})
+    oracle = Fts5Index.build([(r, t, b) for r, _sp, t, b in final.values()])
+    return root, oracle, list(final.values())
+
+
+def _expected(oracle, docs, query, spaces, limit=10, cap=None):
+    """FTS5 top-k and total over the first cap+1 matches in rowid order
+    (all of them without a cap); bm25 stats stay table-wide."""
+    match = compile_match_string(reduce_phrases(parse_query(query)))
+    rowids = sorted(oracle.match_rowids(match))
+    if spaces:
+        keep = {r for r, sp, _t, _b in docs if sp in spaces}
+        rowids = [r for r in rowids if r in keep]
+    if not rowids:
+        return [], 0
+    total = len(rowids)
+    if cap is not None:
+        rowids, total = rowids[: cap + 1], min(total, cap)
+    rows = oracle.con.execute(
+        "SELECT rowid, bm25(fts, 5.0, 1.0) AS r FROM fts WHERE fts MATCH ? "
+        f"AND rowid IN ({','.join(map(str, rowids))}) "
+        f"ORDER BY r, rowid LIMIT {limit}",
+        (match,),
+    ).fetchall()
+    return rows, total
+
+
+def _check(got, total, expected, ctx):
+    exp_rows, exp_total = expected
+    assert total == exp_total, ctx
+    assert [r for r, _ in got] == [r for r, _ in exp_rows], ctx
+    for (_, sg), (_, se) in zip(got, exp_rows):
+        assert math.isclose(sg, se, rel_tol=1e-9, abs_tol=1e-12), ctx
+
+
+@pytest.mark.parametrize("cls,query,spaces", CLASSES, ids=[c[0] for c in CLASSES])
+def test_search_df_job_budget(spark, clean, cls, query, spaces):
+    idx, oracle, docs = clean
+    s = Searcher(idx, stopwords=frozenset(), synonyms={})
+    s.search_df(query, spaces=spaces)  # warm: file listing, JIT
+    with _jobs(spark) as n:
+        df, total, _ = s.search_df(query, spaces=spaces)
+    assert n[0] <= 3, f"{cls}: search_df ran {n[0]} Spark jobs"
+    with _jobs(spark) as n_local:
+        got = [(r["rowid"], r["score"]) for r in df.collect()]
+    assert n_local[0] == 0, "the returned frame must be a local relation"
+    _check(got, total, _expected(oracle, docs, query, spaces), cls)
+
+
+@pytest.mark.parametrize("cls,query,spaces", CLASSES, ids=[c[0] for c in CLASSES])
+def test_search_job_budget(spark, clean, cls, query, spaces):
+    idx, oracle, docs = clean
+    s = Searcher(idx, stopwords=frozenset(), synonyms={})
+    s.search(query, spaces=spaces)
+    with _jobs(spark) as n:
+        res = s.search(query, spaces=spaces)
+    assert n[0] <= 4, f"{cls}: search() ran {n[0]} Spark jobs"
+    got = [(h.rowid, h.score) for h in res.hits]
+    _check(got, res.total_hits, _expected(oracle, docs, query, spaces), cls)
+    assert all(h.doc_id == f"d{h.rowid}" for h in res.hits)
+    if cls == "nohit":
+        assert res.status == "no_hit" and not res.hits
+
+
+def test_open_and_read_start_no_job(spark, segmented):
+    """Opening an index with a delta segment and building every read the
+    query path uses (postings overlay, docs overlay, point lookup, prefix
+    rows, the candidate frame) starts no Spark job: every parquet read
+    carries the writer's schema."""
+    root, _oracle, _docs_ = segmented
+    with _jobs(spark) as n:
+        idx = Index.open(spark, root, CFG)
+        assert idx.segments
+        idx.postings()
+        idx.docs()
+        idx.docs_for_rowids([3, 4, 125])
+        idx.prefix_rows("rot")
+        s = Searcher(idx, stopwords=frozenset(), synonyms={})
+        s._candidates([[["rotor"]], [["panel"]]], [False, False], [], None)
+    assert n[0] == 0, f"{n[0]} Spark jobs before the first action"
+
+
+@pytest.mark.parametrize("cls,query,spaces", CLASSES, ids=[c[0] for c in CLASSES])
+def test_segmented_search(spark, segmented, monkeypatch, cls, query, spaces):
+    """Over a delta segment each overlay adds its tombstone broadcast; the
+    answer stays FTS5-identical and the page comes from the point lookup,
+    never from a docs() overlay scan."""
+    root, oracle, docs = segmented
+    idx = Index.open(spark, root, CFG)
+    s = Searcher(idx, stopwords=frozenset(), synonyms={})
+    s.search(query, spaces=spaces)
+    calls = []
+    real = Index.docs
+    monkeypatch.setattr(Index, "docs", lambda self: calls.append(1) or real(self))
+    with _jobs(spark) as n:
+        res = s.search(query, spaces=spaces)
+    assert not calls, "the page fetch must not scan the docs() overlay"
+    assert n[0] <= 6, f"{cls}: segmented search() ran {n[0]} Spark jobs"
+    got = [(h.rowid, h.score) for h in res.hits]
+    _check(got, res.total_hits, _expected(oracle, docs, query, spaces), cls)
+
+
+@pytest.mark.parametrize("cls,query,spaces", CLASSES, ids=[c[0] for c in CLASSES])
+def test_capped_df_counts_every_match(spark, clean, segmented, cls, query, spaces):
+    """With a small cap the candidate collect stops at cap+1 rows, but
+    each phrase's df still counts every match in the index (FTS5's
+    table-wide stats), on the clean and on the segmented index."""
+    idx, oracle, docs = clean
+    seg_root, seg_oracle, seg_docs = segmented
+    for index, orc, dd in (
+        (idx, oracle, docs),
+        (Index.open(spark, seg_root, CFG), seg_oracle, seg_docs),
+    ):
+        s = Searcher(index, stopwords=frozenset(), synonyms={}, cap=3)
+        df, total, capped = s.search_df(query, spaces=spaces)
+        got = [(r["rowid"], r["score"]) for r in df.collect()]
+        expected = _expected(orc, dd, query, spaces, cap=3)
+        _check(got, total, expected, cls)
+        assert capped == (len(expected[0]) > 3), cls

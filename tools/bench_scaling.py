@@ -112,10 +112,10 @@ def run_one(cpus: int, corpus_dir: str) -> dict:
     }
 
 
-# Engine query suite for --mode query. Every routing family in
-# Searcher.search_df: WAND fast path (rare single term, df <= cap), the
-# narrow single-phrase path (common term, df > cap), NEAR conjunction,
-# NOT exclusion, exact phrase, and prefix-aggregate wildcard.
+# Engine query suite for --mode query. Every query shape of
+# Searcher.search_df: rare single term (df <= cap), common term
+# (df > cap), NEAR conjunction, NOT exclusion, exact phrase, and
+# prefix-aggregate wildcard.
 QUERY_SUITE = [
     ("single_rare_wand", "zephyr"),
     ("single_common", "value"),
@@ -145,14 +145,9 @@ def run_one_query(cpus: int, index_dir: str) -> dict:
     spark.sparkContext.setLogLevel("ERROR")
     idx = Index.open(spark, index_dir)
 
-    # One Searcher PER CLIENT THREAD (sharing the one Index): a Searcher's
-    # per-query persisted-frame ledger assumes one query in flight at a
-    # time (_evict_cache releases the previous query's frames) — exactly
-    # like the reference, where each worker services one query per
-    # goroutine-owned DB handle. Sharing a single Searcher across client
-    # threads would make concurrent queries unpersist each other's
-    # in-flight frames (correct, but recompute-thrash — not the deployment
-    # shape being measured).
+    # One Searcher PER CLIENT THREAD (sharing the one Index), like the
+    # reference, where each worker services one query per goroutine-owned
+    # DB handle.
     tl = threading.local()
 
     def run(q: str) -> None:
