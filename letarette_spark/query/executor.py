@@ -153,8 +153,9 @@ class Searcher:
         pos0, pos1). ``terms`` are the position's alternatives (synonym
         expansion: union of posting lists, like FTS5 colocated tokens), or
         the prefix of a wildcard. With ``counts`` only the per-column hit
-        counts are kept and the positions are never read; otherwise only
-        the positions. A rowid repeats when several terms match it."""
+        counts are kept (an exact term's positions are never read; a
+        wildcard's counts are its position-list sizes); otherwise only the
+        positions. A rowid repeats when several terms match it."""
         if wildcard:
             # prefix: build-time prefix aggregates (the analog of the
             # reference's prefix='2 3 4' B-trees, 1_init.up.sql:96)
