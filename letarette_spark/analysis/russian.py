@@ -17,7 +17,8 @@ Implements the published Russian algorithm
       + optional preceding participle) or verb or noun
   step 2: final и
   step 3: derivational ост/ость in R2
-  step 4: superlative ейш/ейше (then нн -> н), нн -> н, final ь
+  step 4 (one among): superlative ейш/ейше (then only нн -> н), else
+      нн -> н, else final ь
 """
 
 from __future__ import annotations
@@ -138,10 +139,14 @@ def stem(word: str) -> str:
             break
 
     # ---- step 4: tidy up ----
+    # one among: after a superlative only нн -> н may follow (a final ь
+    # left by the deletion stays)
     for suf in _SUPERLATIVE:
         if w.endswith(suf) and len(w) - len(suf) >= pv:
             w = w[: -len(suf)]
-            break
+            if w.endswith("нн") and len(w) - 1 >= pv:
+                w = w[:-1]
+            return w
     if w.endswith("нн") and len(w) - 1 >= pv:
         w = w[:-1]
     elif w.endswith("ь") and len(w) - 1 >= pv:

@@ -14,14 +14,15 @@ that id order, so the 0-iteration configuration is exactly expressible
 in ANSI SQL (the pq_topk driver gate); Lloyd refinement (n_iter > 0) is
 pytest-covered against a numpy reference. Distances use
 d2 = s.s - 2*s.c + c.c with the same sequential-left-fold dot product
-as similarity._cosine_cols — bit-identical to DuckDB list_dot_product,
-so code assignment ties break identically cross-engine.
+as similarity._cosine_cols (similarity._seqdot) — bit-identical to
+DuckDB list_dot_product, so code assignment ties break identically
+cross-engine.
 
 Scale shape: training collects only k lowest-id vectors + (optionally
-sampled) per-code means — never the corpus; encoding is one scan of
-pure array expressions (zero shuffle, no Python); ADC scoring bakes the
-m×k lookup table into the plan as a literal (no join) and pays one
-orderBy-limit top-k.
+sampled) per-code means — never the corpus; encoding (pq_encode, every
+Lloyd round, pq_index_write) is one scan through ONE Arrow kernel
+(_arrow_codes), zero shuffle; ADC scoring bakes the m×k lookup table
+into the plan as a literal (no join) and pays one orderBy-limit top-k.
 """
 
 from __future__ import annotations
@@ -30,48 +31,67 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def _dot_cols(a: Column, b: Column) -> Column:
-    """Sequential left-fold dot product (bit-identical to DuckDB
-    list_dot_product on double inputs — same contract _cosine_cols
-    relies on)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+def _arrow_codes(
+    df: DataFrame,
+    codebooks: list[list[list[float]]],
+    id_col: str,
+    vec_col: str = "v",
+) -> DataFrame:
+    """df + ``codes`` array<int>[m] column: per subspace s,
+    argmin_j ||sub_s - codebooks[s][j]||^2 with ties to the lowest code,
+    in one Arrow stage. The numpy math is the JVM fold OP FOR OP: d2 is
+    (s.s - 2.0*s.c) + c.c, left-associated, each dot a sequential
+    dimension-by-dimension fold (similarity._seqdot; numpy elementwise
+    mul-then-add never fuses), so every distance is the identical
+    IEEE-754 double; np.argmin's first minimum is the lowest-code
+    tie-break and NaN distances sort last (Spark NaN ordering) via
+    np.inf. NULL vectors get NULL codes; vectors that are not m*dsub
+    long raise naming *id_col* (similarity._vector_batch). Pinned
+    exactly against the expression twin in tests/vector_twins.py."""
+    import numpy as np
+    from pyspark.sql import types as T
 
+    from letarette_spark.functions.similarity import _seqdot, _vector_batch
 
-def _sub(vec: Column, s: int, dsub: int) -> Column:
-    """Subvector s (0-based) of dsub dims."""
-    return F.slice(vec, s * dsub + 1, dsub)
+    m = len(codebooks)
+    k = len(codebooks[0])
+    dsub = len(codebooks[0][0])
+    cc = [[_seqdot(c, c) for c in book] for book in codebooks]
+    books = [np.asarray(book, dtype=np.float64) for book in codebooks]
 
+    fields = list(df.schema.fields)
+    names = [f.name for f in fields]
+    vec_idx, id_idx = names.index(vec_col), names.index(id_col)
+    fields.append(T.StructField("codes", T.ArrayType(T.IntegerType())))
+    out_names = [f.name for f in fields]
 
-def _codebook_lit(codebook: list[list[float]]) -> Column:
-    from letarette_spark.functions.similarity import _nested_double_lit
+    def enc(batches):
+        import pyarrow as pa
 
-    # one SQL-string parse instead of one py4j round trip per element
-    # (m*k*dsub literal elements are bounded by the ~4-byte-code design:
-    # k <= 256, dsub small — the runaway-size knob is the IVF n_cells,
-    # which has the broadcast-frame switch in similarity._centroids_ref)
-    return _nested_double_lit(codebook)
+        for batch in batches:
+            n = batch.num_rows
+            if n == 0:
+                continue
+            V, null = _vector_batch(batch, vec_idx, id_idx, m * dsub)
+            codes = np.empty((n, m), dtype=np.int32)
+            for s in range(m):
+                ST = V[:, s * dsub: (s + 1) * dsub].T
+                t1 = _seqdot(ST, ST)
+                d2 = np.empty((n, k))
+                for j in range(k):
+                    d2[:, j] = (t1 - 2.0 * _seqdot(ST, books[s][j])) + cc[s][j]
+                d2 = np.where(np.isnan(d2), np.inf, d2)
+                codes[:, s] = np.argmin(d2, axis=1)
+            codes_arr = pa.ListArray.from_arrays(
+                pa.array(np.arange(0, (n + 1) * m, m, dtype=np.int32)),
+                pa.array(codes.reshape(-1)),
+                mask=pa.array(null),
+            )
+            yield pa.RecordBatch.from_arrays(
+                batch.columns + [codes_arr], names=out_names
+            )
 
-
-def _code_expr(sub: Column, codebook: list[list[float]]) -> Column:
-    """argmin_j ||sub - codebook[j]||^2, ties to the lowest code — the
-    same array_min-over-structs trick as similarity._ivf_cell_expr
-    (field-lexicographic struct ordering = ORDER BY d2 ASC, code ASC)."""
-    scored = F.transform(
-        _codebook_lit(codebook),
-        lambda c, j: F.struct(
-            (
-                _dot_cols(sub, sub)
-                - F.lit(2.0) * _dot_cols(sub, c)
-                + _dot_cols(c, c)
-            ).alias("d2"),
-            j.alias("code"),
-        ),
-    )
-    return F.array_min(scored)["code"]
+    return df.mapInArrow(enc, schema=T.StructType(fields))
 
 
 def pq_codebooks(
@@ -105,18 +125,14 @@ def pq_codebooks(
     if n_iter > 0 and sample_fraction is not None:
         train = train.sample(fraction=sample_fraction, seed=seed)
     for _ in range(n_iter):
-        cols = [
-            _code_expr(_sub(F.col("v"), s, dsub), books[s]).alias(f"c{s}")
-            for s in range(m)
-        ]
-        # persist: the m-subspace assignment scan runs ONCE per round;
-        # the m per-subspace group-bys below read the cached frame
-        assigned = train.select("v", *cols).persist()
+        # persist: the m-subspace encode scan runs ONCE per round; the m
+        # per-subspace group-bys below read the cached frame
+        assigned = _arrow_codes(train, books, id_col).persist()
         try:
             new = [list(b) for b in books]
             for s in range(m):
                 means = (
-                    assigned.groupBy(f"c{s}")
+                    assigned.groupBy(F.element_at("codes", s + 1).alias("c"))
                     .agg(
                         *[
                             F.avg(
@@ -128,45 +144,13 @@ def pq_codebooks(
                     .collect()
                 )
                 for r in means:
-                    new[s][r[f"c{s}"]] = [r[f"m{i}"] for i in range(dsub)]
+                    new[s][r["c"]] = [r[f"m{i}"] for i in range(dsub)]
         finally:
             assigned.unpersist()
         if new == books:
             break
         books = new
     return books
-
-
-def pq_encode_expr(
-    emb: DataFrame,
-    codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, codes array<int>[m]) via the pure-JVM expression form
-    (_code_expr per subspace) — the equivalence twin the Arrow encoder
-    below is pinned against in tests; also the form whose SQL-literal
-    algebra the DuckDB oracle mirrors."""
-    from letarette_spark.functions.similarity import _spread
-
-    m = len(codebooks)
-    dsub = len(codebooks[0][0])
-    v = F.col(vec_col).cast("array<double>")
-    codes = F.array(
-        *[_code_expr(_sub(v, s, dsub), codebooks[s]) for s in range(m)]
-    )
-    return _spread(emb.filter(F.col(vec_col).isNotNull())).select(
-        F.col(id_col), codes.alias("codes")
-    )
-
-
-def _seqdot(a, b) -> float:
-    """Python-float sequential left-fold dot — the same op sequence as
-    _dot_cols' aggregate fold, so the result is the identical double."""
-    acc = 0.0
-    for x, y in zip(a, b):
-        acc = acc + x * y
-    return acc
 
 
 def pq_encode(
@@ -178,90 +162,19 @@ def pq_encode(
     """(id, codes array<int>[m]) — one scan, zero shuffle. At m=8, k=16
     the codes column is ~4 bytes/vector: the representation a
     billion-vector corpus actually stores. NULL embeddings are dropped
-    (they have no meaningful code; without the filter a null vector
-    would tie-break to codes [0]*m and compete in ADC top-k).
+    (they have no meaningful code and must not compete in ADC top-k).
 
-    The per-row argmin (m*k*dsub fold ops as interpreted
-    HigherOrderFunction expressions — the dominant cost of pq_adc /
-    ivf_pq at any corpus size) runs in an Arrow stage whose numpy math
-    mirrors the JVM fold OP FOR OP: d2 accumulates dimension-by-
-    dimension exactly like the sequential zip_with/aggregate fold
-    ((t1 - 2.0*dot(s,c)) + dot(c,c), left-associated; numpy elementwise
-    mul-then-add never fuses), so every distance is the identical
-    IEEE-754 double and np.argmin's first-minimum matches the
-    array_min-struct tie-break (lowest code). NaN distances sort last
-    (Spark NaN ordering), mirrored via np.inf replacement — pinned by
-    tests against pq_encode_expr. Vectors must all have dim == m*dsub
-    (raises loudly on ragged input rather than diverging silently)."""
-    import numpy as np
-
-    from pyspark.sql import types as T
-
+    The per-row argmin (m*k*dsub fold ops — the dominant cost of pq_adc /
+    ivf_pq at any corpus size) runs in the Arrow kernel _arrow_codes,
+    pinned code-for-code against the JVM expression twin in
+    tests/vector_twins.py. Vectors must all have dim == m*dsub (a ragged
+    one raises naming its id rather than diverging silently)."""
     from letarette_spark.functions.similarity import _spread
 
-    m = len(codebooks)
-    k = len(codebooks[0])
-    dsub = len(codebooks[0][0])
-    dim = m * dsub
-    cc = [
-        [_seqdot(c, c) for c in codebooks[s]] for s in range(m)
-    ]
-    books_np = [
-        np.asarray(codebooks[s], dtype=np.float64) for s in range(m)
-    ]
-    id_field = emb.schema[id_col]
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, id_field.dataType),
-            T.StructField("codes", T.ArrayType(T.IntegerType())),
-        ]
-    )
-
-    def enc(batches):
-        import numpy as np  # noqa: F811
-        import pyarrow as pa
-
-        for batch in batches:
-            idcol = batch.column(0)
-            n = len(idcol)
-            if n == 0:
-                continue
-            rows = batch.column(1).to_pylist()
-            if any(r is None or len(r) != dim for r in rows):
-                raise ValueError(
-                    f"pq_encode: vectors must all have dim {dim} (m*dsub)"
-                )
-            V = np.array(rows, dtype=np.float64)
-            codes = np.empty((n, m), dtype=np.int32)
-            for s in range(m):
-                S = V[:, s * dsub: (s + 1) * dsub]
-                t1 = np.zeros(n)
-                for d in range(dsub):
-                    t1 = t1 + S[:, d] * S[:, d]
-                d2 = np.empty((n, k))
-                B = books_np[s]
-                for j in range(k):
-                    acc = np.zeros(n)
-                    cj = B[j]
-                    for d in range(dsub):
-                        acc = acc + S[:, d] * cj[d]
-                    d2[:, j] = (t1 - 2.0 * acc) + cc[s][j]
-                d2 = np.where(np.isnan(d2), np.inf, d2)
-                codes[:, s] = np.argmin(d2, axis=1)
-            offs = pa.array(
-                np.arange(0, (n + 1) * m, m, dtype=np.int32)
-            )
-            codes_arr = pa.ListArray.from_arrays(
-                offs, pa.array(codes.reshape(-1))
-            )
-            yield pa.RecordBatch.from_arrays(
-                [idcol, codes_arr], names=[id_col, "codes"]
-            )
-
     src = _spread(emb.filter(F.col(vec_col).isNotNull())).select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v")
+        F.col(id_col), F.col(vec_col).cast("array<double>").alias("v")
     )
-    return src.mapInArrow(enc, schema=out_schema)
+    return _arrow_codes(src, codebooks, id_col).select(id_col, "codes")
 
 
 def _adist_expr(lut: list[list[float]]) -> Column:
@@ -290,20 +203,18 @@ def pq_adc_lut(
 ) -> list[list[float]]:
     """Driver-side ADC lookup table: lut[s][j] = ||q_s - codebook[s][j]||^2
     with the same sequential-fold accumulation as the cluster-side math."""
+    from letarette_spark.functions.similarity import _seqdot
+
     m = len(codebooks)
     dsub = len(codebooks[0][0])
-
-    def dot(a, b):
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc += x * y
-        return acc
-
     lut = []
     for s in range(m):
         qs = query_vec[s * dsub : (s + 1) * dsub]
         lut.append(
-            [dot(qs, qs) - 2.0 * dot(qs, c) + dot(c, c) for c in codebooks[s]]
+            [
+                _seqdot(qs, qs) - 2.0 * _seqdot(qs, c) + _seqdot(c, c)
+                for c in codebooks[s]
+            ]
         )
     return lut
 
@@ -401,22 +312,23 @@ def pq_index_write(
     a query's cell filter prunes at the DIRECTORY level (reads
     ~nprobe/n_cells of the files) and each surviving row is ~4 bytes of
     codes instead of the full vector (reads ~1/100 of the bytes per
-    file). Raw vectors live elsewhere for optional exact re-ranking."""
+    file). Raw vectors live elsewhere for optional exact re-ranking.
+    Cells and codes come from the same Arrow kernels queries and
+    pq_encode use (_arrow_cell_assign, then _arrow_codes). A row with a
+    NULL embedding has no cell or codes and is not written."""
     from letarette_spark.functions.similarity import (
-        _ivf_cell_expr,
+        _arrow_cell_assign,
         _spread,
     )
 
-    m = len(codebooks)
-    dsub = len(codebooks[0][0])
-    v = F.col(vec_col).cast("array<double>")
-    out = _spread(emb.filter(F.col(vec_col).isNotNull())).select(
-        F.col(id_col),
-        F.array(
-            *[_code_expr(_sub(v, s, dsub), codebooks[s]) for s in range(m)]
-        ).alias("codes"),
-        _ivf_cell_expr(v, centroids).alias("cell"),
+    base = _spread(
+        emb.filter(F.col(vec_col).isNotNull()).select(
+            F.col(id_col), F.col(vec_col).cast("array<double>").alias("v")
+        )
     )
+    out = _arrow_codes(
+        _arrow_cell_assign(base, centroids, id_col), codebooks, id_col
+    ).select(id_col, "codes", "cell")
     # encode in parallel (spread above), then one hash exchange on cell so
     # each cell directory stays ~one file instead of one per encode task
     out.repartition("cell").write.mode("overwrite").partitionBy(

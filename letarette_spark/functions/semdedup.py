@@ -4,8 +4,8 @@ a cluster, and drop all but one member of each semantic-duplicate pair.
 
 Spark-first shape:
   1. cell assignment reuses the IVF machinery (similarity.ivf_centroids /
-     _ivf_cell_expr) — centroids are a tiny nested literal baked into the
-     plan, so assignment is one scan, zero shuffle, whole-stage codegen;
+     _arrow_cell_assign) — one Arrow stage computes each vector's cell and
+     its cosine to that centroid, so assignment is one scan, zero shuffle;
   2. within-cell pairs are an equi-join on ``cell`` (never a cross join) —
      the shuffle key is the cell id, and the quadratic blow-up is bounded
      per cell (the paper's own trick: more clusters => smaller cells; at
@@ -26,49 +26,16 @@ paraphrases those miss because it works in embedding space.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from letarette_spark.functions.similarity import (
+    _arrow_cell_assign,
     _blas_cosine_candidates,
-    _cell_expr_over,
-    _centroids_ref,
-    _cosine_cols,
     _spread,
     cosine_expr,
     ivf_centroids,
 )
-
-
-def _assigned_expr(
-    emb: DataFrame,
-    centroids: list[list[float]],
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """(id, v, cell, ccos) via the pure-JVM expression form (centroid
-    literal / broadcast frame) — the equivalence twin _assigned's Arrow
-    stage is pinned against in tests."""
-    v = F.col(vec_col).cast("array<double>")
-    base = _spread(
-        emb.select(F.col(id_col).alias("id"), v.alias("v")).filter(
-            F.col("v").isNotNull()
-        )
-    )
-    base, cents = _centroids_ref(base, centroids)
-    return base.select(
-        "id",
-        "v",
-        _cell_expr_over("v", cents).alias("cell"),
-        cents.alias("__c"),
-    ).select(
-        "id",
-        "v",
-        "cell",
-        _cosine_cols(
-            F.col("v"), F.element_at(F.col("__c"), F.col("cell") + 1)
-        ).alias("ccos"),
-    )
 
 
 def _assigned(
@@ -78,19 +45,17 @@ def _assigned(
     vec_col: str,
 ) -> DataFrame:
     """(id, v, cell, ccos) — cell assignment plus cosine-to-own-centroid
-    in one Arrow stage (similarity._arrow_cell_assign: numpy math
-    mirrored op-for-op to the expression twin _assigned_expr, ccos read
-    from the same score column the argmax used): one scan, no shuffle,
-    no interpreted per-row fold."""
-    from letarette_spark.functions.similarity import _arrow_cell_assign
-
+    in one Arrow stage (similarity._arrow_cell_assign; ccos is read from
+    the same score column the argmax used): one scan, no shuffle, no
+    interpreted per-row fold. Rows with a NULL embedding are dropped:
+    they have no cell."""
     v = F.col(vec_col).cast("array<double>")
     base = _spread(
         emb.select(F.col(id_col).alias("id"), v.alias("v")).filter(
             F.col("v").isNotNull()
         )
     )
-    return _arrow_cell_assign(base, centroids, "v", with_ccos=True)
+    return _arrow_cell_assign(base, centroids, "id", with_ccos=True)
 
 
 def semdedup_pairs(
@@ -107,7 +72,8 @@ def semdedup_pairs(
     Scale: the join key is ``cell`` — candidates are generated per cell,
     so work is sum over cells of |cell|^2, not |corpus|^2; n_cells is the
     knob that bounds it (the SemDeDup paper uses 50k clusters at LAION
-    scale). No crossJoin in the plan."""
+    scale). No crossJoin in the plan. A row with a NULL embedding is in
+    no cell and never in a pair."""
     if centroids is None:
         centroids = ivf_centroids(
             emb, n_cells=n_cells, id_col=id_col, vec_col=vec_col
@@ -157,7 +123,8 @@ def semdedup_kept(
     id. Equivalently: drop x iff some same-cell y with cos(x, y) >=
     threshold ranks before x under (ccos ASC, id ASC). One within-cell
     join to find losers, one left_anti to subtract them — both keyed,
-    no cross join."""
+    no cross join. A row with a NULL embedding is in no cell, so it is
+    not in the kept set."""
     if centroids is None:
         centroids = ivf_centroids(
             emb, n_cells=n_cells, id_col=id_col, vec_col=vec_col

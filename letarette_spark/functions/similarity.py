@@ -1,8 +1,13 @@
 """Similarity search over embedding columns (array<float>).
 
 Brute-force cosine top-k as the exact baseline; random-hyperplane LSH
-bucketing as the approximate scale path. All vector math is JVM-side
-(zip_with/aggregate inside whole-stage codegen) in float64.
+bucketing and IVF cells as the approximate scale paths. All vector math
+is float64 with one accumulation order, the sequential left fold
+(acc = acc + x*y, dimension by dimension): JVM-side for cosine scoring
+and LSH signatures (zip_with/aggregate), and in ONE Arrow kernel for IVF
+cell assignment (_arrow_cell_assign), whose numpy math repeats the fold
+op for op. The JVM expression twin that kernel is pinned against lives
+in tests/vector_twins.py.
 """
 
 from __future__ import annotations
@@ -361,12 +366,7 @@ def ivf_centroids(
     if n_iter > 0 and sample_fraction is not None:
         train = train.sample(fraction=sample_fraction, seed=seed)
     for _ in range(n_iter):
-        # Arrow-exact assignment (bit-identical to _ivf_cell_expr; see
-        # _arrow_cell_assign) — the interpreted per-row fold dominated
-        # each Lloyd round's scan
-        assigned = _arrow_cell_assign(
-            _spread(train.select("v")), cents, "v"
-        )
+        assigned = _arrow_cell_assign(_spread(train), cents, id_col, "v")
         dim = len(cents[0])
         means = (
             assigned.groupBy("cell")
@@ -425,199 +425,98 @@ def _nested_double_lit(nested: list[list[float]]) -> Column:
     )
 
 
-def _centroids_lit(centroids: list[list[float]]) -> Column:
-    """The (tiny) centroid table baked into the plan as ONE nested
-    literal array — the broadcast-dim analog; no join, stays inside
-    codegen."""
-    return _nested_double_lit(centroids)
-
-
-# above this many ELEMENTS (cells × dims), even the one-parse literal is
-# the wrong shape: Catalyst analysis of a quarter-million-element literal
-# measured ~14 s of serial driver time (and the SemDeDup paper's 50k cells
-# × 768 dims ≈ 38M elements would hang the driver for minutes). A 1-row
-# broadcast Arrow frame carries any size in milliseconds — the same
-# switch bloom.py uses for big filter words (bloom.py:_LIT_WORDS_MAX).
-_LIT_ELEMS_MAX = 4096
-
-
-def _centroids_ref(
-    df: DataFrame, centroids: list[list[float]]
-) -> tuple[DataFrame, Column]:
-    """(df', cents_col): a centroid table usable in expressions over df'.
-    Small sets ride the plan as a literal (zero joins, codegen); big sets
-    ship as a broadcast 1-row Arrow frame crossJoined in (each executor
-    holds ONE copy; no data shuffle — BroadcastNestedLoopJoin against one
-    row). Cell assignment math is IDENTICAL either way: the same
-    transform/array_min expression evaluates over the column."""
-    total = len(centroids) * (len(centroids[0]) if centroids else 0)
-    if total <= _LIT_ELEMS_MAX:
-        return df, _centroids_lit(centroids)
-    import pyarrow as pa
-
-    tbl = pa.table(
-        {
-            "__cents": pa.array(
-                [centroids], type=pa.list_(pa.list_(pa.float64()))
-            )
-        }
-    )
-    cdf = df.sparkSession.createDataFrame(tbl)
-    return df.crossJoin(F.broadcast(cdf)), F.col("__cents")
-
-
-def _cell_expr_over(vec: "str | Column", cents_col: Column) -> Column:
-    """argmax_j cosine(v, cents_col[j]) with ties to the lowest index —
-    the ONE cell-assignment rule, over any array<array<double>> column
-    (literal or broadcast-frame; see _ivf_cell_expr for the algebra)."""
-    v = F.col(vec) if isinstance(vec, str) else vec
-    scored = F.transform(
-        cents_col,
-        lambda c, i: F.struct(
-            (-_cosine_cols(v, c)).alias("negcos"), i.alias("cell")
-        ),
-    )
-    return F.array_min(scored)["cell"]
-
-
-def _ivf_cell_expr(
-    vec_col: "str | Column", centroids: list[list[float]]
-) -> Column:
-    """argmax_j cosine(v, centroid_j), ties to the lowest cell index.
-    Pure JVM: one transform lambda over the nested centroid literal
-    scores every cell (the cosine sub-expression appears ONCE in the
-    plan, not n_cells times — a per-cell expansion made Catalyst
-    analysis the dominant cost), then array_min over (−cos, j) structs —
-    struct ordering is field-lexicographic, so min(−cos) then min(j),
-    matching the SQL twin's ``ORDER BY cos DESC, cell ASC`` row_number.
-    Per-element arithmetic (zip_with multiply, sequential left-fold sum)
-    is identical to the expanded form. Accepts a column name or a column
-    expression (pq.py assigns cells to a derived projection) — the ONE
-    definition of cell assignment everywhere, so indexes are encoded and
-    queried with the same rule."""
-    return _cell_expr_over(vec_col, _centroids_lit(centroids))
-
-
-def _seqdot_py(a, b) -> float:
-    """Python-float sequential left-fold dot — the identical op sequence
-    to _cosine_cols' aggregate fold, so the result is the same double."""
+def _seqdot(a, b):
+    """Sequential left-fold dot product, acc = acc + x*y dimension by
+    dimension: the op sequence of the JVM zip_with/aggregate fold
+    (_cosine_cols) and of DuckDB list_dot_product, so the result is the
+    identical double. Over two float lists it scores one pair; over the
+    rows of a transposed (n, d) matrix (``_seqdot(V.T, c)``) it scores
+    all n vectors at once with the same per-vector op sequence — the ONE
+    fold the Arrow kernels and the driver-side LUT share."""
     acc = 0.0
     for x, y in zip(a, b):
         acc = acc + x * y
     return acc
 
 
+def _vector_batch(batch, vec_idx: int, id_idx: int, dim: int):
+    """(V, null) for one Arrow batch: the float64 (n, dim) matrix of the
+    vector column and the mask of its NULL rows (read as zeros). The
+    kernels' shared NULL/ragged policy: a NULL vector is kept (its output
+    is masked NULL); a vector that is not *dim* long raises a ValueError
+    naming its row id, where zip_with would silently truncate."""
+    col = batch.column(vec_idx)
+    lens = col.value_lengths().fill_null(dim).to_numpy(zero_copy_only=False)
+    bad = np.flatnonzero(lens != dim)
+    if bad.size:
+        i = int(bad[0])
+        raise ValueError(
+            f"vectors must all have dim {dim}: row "
+            f"{batch.schema.names[id_idx]}="
+            f"{batch.column(id_idx)[i].as_py()} has dim {lens[i]}"
+        )
+    null = col.is_null().to_numpy(zero_copy_only=False)
+    V = np.zeros((batch.num_rows, dim))
+    V[~null] = col.flatten().to_numpy(zero_copy_only=False).reshape(-1, dim)
+    return V, null
+
+
 def _arrow_cell_assign(
     df: DataFrame,
     centroids: list[list[float]],
+    id_col: str,
     vec_col: str = "v",
     with_ccos: bool = False,
 ) -> DataFrame:
     """df + ``cell`` int column (+ ``ccos`` double when requested): IVF
-    cell assignment in an Arrow stage whose numpy math mirrors
-    _cell_expr_over/_cosine_cols OP FOR OP — cosines accumulate
-    dimension-by-dimension like the sequential fold, the denominator is
-    (||v||*||c||) then one divide, ties go to the lowest cell
-    (np.argmin first-minimum == array_min struct ordering), and NaN
-    cosines sort last (Spark NaN ordering) via np.inf replacement on the
-    negated score. The interpreted HigherOrderFunction form costs
-    ~n_cells fold evaluations per row; this runs the same arithmetic
-    vectorized. Centroids ride the task closure (or an explicit
-    SparkContext broadcast above ~4 MB), so there is no plan-literal or
-    broadcast-frame machinery at any n_cells. ``ccos`` (cosine to the
-    OWN centroid) reads the already-computed score column — the same
-    double the JVM re-fold produced. Equivalence pinned in tests against
-    the retained expression form (ivf_assign_expr). A NULL vector gets a
-    NULL cell; a ragged one raises rather than being silently truncated
-    like zip_with would."""
-    import numpy as np
-
+    cell assignment, argmax_j cosine(v, centroid_j) with ties to the
+    lowest cell, in one Arrow stage. The numpy math is the JVM cosine
+    fold (_cosine_cols) OP FOR OP: dot products and norms accumulate
+    dimension by dimension (_seqdot), the denominator is (||v||*||c||)
+    then one divide, np.argmin's first minimum gives the lowest-cell
+    tie-break, and NaN cosines sort last (Spark NaN ordering) via np.inf
+    on the negated score. ``ccos`` (cosine to the OWN centroid) reads the
+    score the argmax used. Centroids ride the pickled closure, which
+    PySpark itself broadcasts once it is large. NULL vectors get NULL
+    cell/ccos; ragged ones raise naming *id_col* (_vector_batch).
+    Pinned exactly against the expression twin in tests/vector_twins.py,
+    the algebra the DuckDB oracles mirror."""
     from pyspark.sql import types as T
 
     C = np.asarray(centroids, dtype=np.float64)
     n_cells, dim = C.shape
-    # sqrt of the python-float sequential self-dot per centroid — the
-    # exact double the JVM fold + sqrt produces
-    ncj = np.array(
-        [math.sqrt(_seqdot_py(c, c)) for c in centroids], dtype=np.float64
-    )
-    spark = df.sparkSession
-    if C.nbytes > 4 * 1024 * 1024:
-        bc = spark.sparkContext.broadcast((C, ncj))
-        get = lambda: bc.value  # noqa: E731
-    else:
-        get = lambda: (C, ncj)  # noqa: E731
+    ncj = [math.sqrt(_seqdot(c, c)) for c in centroids]
 
-    in_fields = list(df.schema.fields)
-    vec_idx = [f.name for f in in_fields].index(vec_col)
-    out_fields = in_fields + [T.StructField("cell", T.IntegerType())]
+    fields = list(df.schema.fields)
+    names = [f.name for f in fields]
+    vec_idx, id_idx = names.index(vec_col), names.index(id_col)
+    fields.append(T.StructField("cell", T.IntegerType()))
     if with_ccos:
-        out_fields = out_fields + [T.StructField("ccos", T.DoubleType())]
-    out_schema = T.StructType(out_fields)
-    names = [f.name for f in out_fields]
+        fields.append(T.StructField("ccos", T.DoubleType()))
+    out_names = [f.name for f in fields]
 
     def assign(batches):
-        import numpy as np  # noqa: F811
         import pyarrow as pa
 
-        Cb, ncb = get()
         for batch in batches:
             n = batch.num_rows
             if n == 0:
                 continue
-            rows = batch.column(vec_idx).to_pylist()
-            if any(r is not None and len(r) != dim for r in rows):
-                raise ValueError(
-                    f"cell assignment: vectors must all have dim {dim}"
-                )
-            # a NULL vector gets a NULL cell (and ccos); its row is kept
-            null = np.array([r is None for r in rows])
-            zero = [0.0] * dim
-            V = np.array(
-                [zero if r is None else r for r in rows], dtype=np.float64
-            )
-            nv = np.zeros(n)
-            for d in range(dim):
-                nv = nv + V[:, d] * V[:, d]
-            nv = np.sqrt(nv)
+            V, null = _vector_batch(batch, vec_idx, id_idx, dim)
+            VT = V.T
+            nv = np.sqrt(_seqdot(VT, VT))
             cos = np.empty((n, n_cells))
             for j in range(n_cells):
-                acc = np.zeros(n)
-                cj = Cb[j]
-                for d in range(dim):
-                    acc = acc + V[:, d] * cj[d]
-                cos[:, j] = acc / (nv * ncb[j])
+                cos[:, j] = _seqdot(VT, C[j]) / (nv * ncj[j])
             neg = -cos
             neg = np.where(np.isnan(neg), np.inf, neg)
             cells = np.argmin(neg, axis=1).astype(np.int32)
-            arrays = [batch.column(i) for i in range(len(in_fields))]
-            arrays.append(pa.array(cells, mask=null))
+            arrays = batch.columns + [pa.array(cells, mask=null)]
             if with_ccos:
                 arrays.append(pa.array(cos[np.arange(n), cells], mask=null))
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
+            yield pa.RecordBatch.from_arrays(arrays, names=out_names)
 
-    return df.mapInArrow(assign, schema=out_schema)
-
-
-def ivf_assign_expr(
-    emb: DataFrame,
-    centroids: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, cell) via the pure-JVM expression form (plan literal /
-    broadcast-frame centroid table) — the equivalence twin the Arrow
-    assignment is pinned against in tests; also the algebra the DuckDB
-    oracle mirrors."""
-    base = _spread(
-        emb.select(
-            F.col(id_col), F.col(vec_col).cast("array<double>").alias("v")
-        )
-    )
-    base, cents = _centroids_ref(base, centroids)
-    return base.select(
-        F.col(id_col), _cell_expr_over("v", cents).alias("cell")
-    )
+    return df.mapInArrow(assign, schema=T.StructType(fields))
 
 
 def ivf_assign(
@@ -627,15 +526,14 @@ def ivf_assign(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """(id, cell) assignment — one scan, no shuffle; the per-row argmax
-    runs in the Arrow stage (_arrow_cell_assign, bit-identical to the
-    expression form ivf_assign_expr). A NULL embedding keeps its row
-    with a NULL cell."""
+    runs in the Arrow stage (_arrow_cell_assign). A NULL embedding keeps
+    its row with a NULL cell; a ragged one raises naming its id."""
     base = _spread(
         emb.select(
             F.col(id_col), F.col(vec_col).cast("array<double>").alias("v")
         )
     )
-    return _arrow_cell_assign(base, centroids, "v").select(
+    return _arrow_cell_assign(base, centroids, id_col).select(
         F.col(id_col), "cell"
     )
 
@@ -703,7 +601,7 @@ def ivf_topk(
         )
     )
     v = (
-        _arrow_cell_assign(v, centroids, "v")
+        _arrow_cell_assign(v, centroids, id_col)
         .filter(F.col("cell").isin(probes))
         .select(F.col(id_col), "v")
     )
@@ -736,7 +634,7 @@ def ivf_index_write(
             F.col(vec_col).cast("array<double>").alias("v"),
         )
     )
-    assigned = _arrow_cell_assign(base, centroids, "v").filter(
+    assigned = _arrow_cell_assign(base, centroids, id_col).filter(
         F.col("cell").isNotNull()
     )
     # assign in parallel (spread above), then one hash exchange on cell so
@@ -791,7 +689,9 @@ def hard_negatives(
     drop); for ``pos_cos > 0`` the two forms are identical.
 
     Deterministic (ties to the lower id), so an exact SQL twin exists
-    (driver gate ``hard_negatives``).
+    (driver gate ``hard_negatives``). A corpus row with a NULL embedding
+    has a NULL cosine and is never a negative; a query whose embedding is
+    NULL gets no rows.
 
     Scale: the query set is broadcast against one corpus scan; per-query
     top-k is a window over the scored rows keyed by query_id — the same

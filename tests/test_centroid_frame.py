@@ -1,125 +1,94 @@
-"""Big-centroid broadcast-frame switch (similarity._centroids_ref).
+"""Centroid-table pins for the IVF cell-assignment kernel
+(similarity._arrow_cell_assign).
 
-Above _LIT_ELEMS_MAX elements the centroid table ships as a broadcast
-1-row Arrow frame instead of a plan literal (the bloom.py words switch,
-ported per the round-5 verdict). These tests pin:
-
-  1. result identity: literal path and frame path assign identical cells
-     and keep identical semdedup survivors;
-  2. plan shape: the frame path adds NO data shuffle — the only join is
-     a broadcast against one row;
-  3. literal bit-exactness: the SQL-string double literals re-create the
-     exact IEEE-754 bits F.lit would have produced.
+  1. exactness: cells and ccos equal the JVM expression twin
+     (tests/vector_twins.py) with ``==``, including planted ties and a
+     NaN row;
+  2. size: a centroid table above 1 MB (where PySpark broadcasts the
+     pickled kernel itself) is assigned exactly like a small one.
 """
 
 from __future__ import annotations
-
-import struct
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from letarette_spark.functions import similarity as S
+from tests import vector_twins as twins
 
 
 @pytest.fixture(scope="module")
 def emb(spark):
     rng = np.random.default_rng(7)
-    rows = [
-        (i, [float(x) for x in rng.standard_normal(16)]) for i in range(300)
-    ]
+    vecs = rng.standard_normal((300, 16))
+    vecs[20] = vecs[3]  # exact duplicate of the seed centroid 3
+    vecs[21] = vecs[3] * 2.0  # same direction: cosine ties across copies
+    rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
+    rows[23] = (23, [float("nan")] + rows[23][1][1:])  # every cosine NaN
     return spark.createDataFrame(
         rows, "vec_id long, embedding array<double>"
     ).cache()
 
 
-def _force_frame(monkeypatch):
-    # any centroid set above 0 elements takes the broadcast-frame path
-    monkeypatch.setattr(S, "_LIT_ELEMS_MAX", 0)
+def _base(emb):
+    return emb.select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    )
 
 
-def test_assign_identical_between_paths(spark, emb, monkeypatch):
-    # the JVM expression form still has literal/frame variants (it is the
-    # twin the DuckDB oracle mirrors); both must agree with each other AND
-    # with the Arrow assignment that production paths now use
+def test_assign_matches_expression_twin(spark, emb):
+    # planted ties: centroids 0 and 1 are the same direction, so every
+    # vector nearer them ties and must take the lower cell
     cents = S.ivf_centroids(emb, n_cells=8)
+    cents[1] = [2.0 * x for x in cents[0]]
     arrow = {
-        r["vec_id"]: r["cell"] for r in S.ivf_assign(emb, cents).collect()
-    }
-    lit = {
         r["vec_id"]: r["cell"]
-        for r in S.ivf_assign_expr(emb, cents).collect()
+        for r in S._arrow_cell_assign(_base(emb), cents, "vec_id").collect()
     }
-    _force_frame(monkeypatch)
-    frame = {
+    twin = {
         r["vec_id"]: r["cell"]
-        for r in S.ivf_assign_expr(emb, cents).collect()
+        for r in twins.cell_assign(_base(emb), cents, "vec_id").collect()
     }
-    assert lit == frame == arrow and len(lit) == 300
-
-
-def test_semdedup_identical_between_paths(spark, emb, monkeypatch):
-    from letarette_spark.functions.semdedup import semdedup_kept
-
-    cents = S.ivf_centroids(emb, n_cells=4)
-    lit = sorted(
-        r["vec_id"]
-        for r in semdedup_kept(emb, centroids=cents, threshold=0.5).collect()
-    )
-    _force_frame(monkeypatch)
-    frame = sorted(
-        r["vec_id"]
-        for r in semdedup_kept(emb, centroids=cents, threshold=0.5).collect()
-    )
-    assert lit == frame and lit
-
-
-def test_frame_path_plan_has_no_data_shuffle(spark, emb, monkeypatch):
-    _force_frame(monkeypatch)
-    cents = S.ivf_centroids(emb, n_cells=8)
-    plan = (
-        S.ivf_assign_expr(emb, cents)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    # the only exchanges allowed: the _spread round-robin rebalance and
-    # the broadcast of the 1-row centroid frame — never a hash exchange
-    # of the data
-    assert "Exchange hashpartitioning" not in plan
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
-
-
-def test_sql_double_literals_bit_exact(spark):
-    vals = [
-        0.1, -0.0, 2.0 ** -1074, 1.7976931348623157e308, -3.5476011073e-05,
-        123456789.123456789, 1e-307, float("nan"), float("inf"),
-        float("-inf"),
-    ]
-    row = (
-        spark.range(1)
-        .select(
-            S._double_array_lit(vals).alias("a"),
-            F.array(*[F.lit(float(v)) for v in vals]).alias("b"),
-        )
-        .first()
-    )
-    pa, pb = (
-        [struct.pack("<d", x) for x in row["a"]],
-        [struct.pack("<d", x) for x in row["b"]],
-    )
-    assert pa == pb
+    assert arrow == twin and len(arrow) == 300
+    assert arrow[23] == 0  # NaN cosines sort last
+    assert 1 not in arrow.values()  # every tie went to cell 0
 
 
 def test_semdedup_assigned_arrow_matches_expr_twin(spark, emb):
-    from letarette_spark.functions.semdedup import _assigned, _assigned_expr
+    from letarette_spark.functions.semdedup import _assigned
 
     cents = S.ivf_centroids(emb, n_cells=8)
     arrow = {
         r["id"]: (r["cell"], r["ccos"])
         for r in _assigned(emb, cents, "vec_id", "embedding").collect()
     }
-    jvm = {
+    base = _base(emb).withColumnRenamed("vec_id", "id")
+    twin = {
         r["id"]: (r["cell"], r["ccos"])
-        for r in _assigned_expr(emb, cents, "vec_id", "embedding").collect()
+        for r in twins.cell_assign(base, cents, "id", with_ccos=True).collect()
     }
-    assert arrow == jvm and len(arrow) == 300  # ccos compared EXACTLY
+    # ccos compared EXACTLY; NaN != NaN, so the NaN rows compare by repr
+    assert {i: repr(t) for i, t in arrow.items()} == {
+        i: repr(t) for i, t in twin.items()
+    }
+    assert len(arrow) == 300
+
+
+def test_centroid_table_above_1mb_matches_numpy(spark):
+    rng = np.random.default_rng(11)
+    C = rng.standard_normal((512, 288))  # 1.18 MB of float64
+    V = rng.standard_normal((64, 288))
+    assert C.nbytes > 1024 * 1024
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(V)],
+        "vec_id long, v array<double>",
+    )
+    got = {
+        r["vec_id"]: r["cell"]
+        for r in S._arrow_cell_assign(df, C.tolist(), "vec_id").collect()
+    }
+    cos = (V @ C.T) / np.outer(
+        np.linalg.norm(V, axis=1), np.linalg.norm(C, axis=1)
+    )
+    assert got == {i: int(j) for i, j in enumerate(np.argmax(cos, axis=1))}

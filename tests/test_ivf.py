@@ -2,11 +2,14 @@
 refinement vs a numpy reference, and the partitioned-layout pruning
 claim (cell dirs are the partition-pruning unit at scale)."""
 
+import struct
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from letarette_spark.functions.similarity import (
+    _double_array_lit,
     cosine_topk,
     ivf_assign,
     ivf_centroids,
@@ -172,6 +175,18 @@ def test_ivf_assign_null_embedding_gets_null_cell(spark):
     )
     with pytest.raises(Exception, match="must all have dim"):
         ivf_assign(ragged, cents).collect()
+    # ...whose message names the offending row, in a Lloyd round too
+    bad = mixed.unionByName(
+        spark.createDataFrame(
+            [(1002, [1.0, 2.0])], "vec_id long, embedding array<double>"
+        )
+    )
+    for run in (
+        lambda: ivf_assign(bad, cents).collect(),
+        lambda: ivf_centroids(bad, n_cells=4, n_iter=1),
+    ):
+        with pytest.raises(Exception, match="row vec_id=1002 has dim 2"):
+            run()
 
 
 def test_ivf_topk_never_returns_null_embedding(spark):
@@ -196,3 +211,26 @@ def test_ivf_index_write_skips_null_embedding(spark, tmp_path):
     qv = list(emb.filter(F.col("vec_id") == 3).first()["embedding"])
     got = ivf_index_topk(spark, path, qv, cents, k=100, nprobe=4).collect()
     assert len(got) == 40 and not {1000, 1001} & {r["vec_id"] for r in got}
+
+
+def test_sql_double_literals_bit_exact(spark):
+    """The SQL-string double literals (ADC LUT, LSH planes, IVF query
+    vector) re-create the exact IEEE-754 bits F.lit would have produced."""
+    vals = [
+        0.1, -0.0, 2.0 ** -1074, 1.7976931348623157e308, -3.5476011073e-05,
+        123456789.123456789, 1e-307, float("nan"), float("inf"),
+        float("-inf"),
+    ]
+    row = (
+        spark.range(1)
+        .select(
+            _double_array_lit(vals).alias("a"),
+            F.array(*[F.lit(float(v)) for v in vals]).alias("b"),
+        )
+        .first()
+    )
+    pa, pb = (
+        [struct.pack("<d", x) for x in row["a"]],
+        [struct.pack("<d", x) for x in row["b"]],
+    )
+    assert pa == pb

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from letarette_spark.functions.pq import (
     pq_adc_lut,
@@ -300,26 +301,128 @@ def test_null_embeddings_dropped_from_codes_and_topk(spark):
     assert all(r["vec_id"] != 99 for r in top)
 
 
+def _tie_nan_df(spark, n=64, dim=16):
+    """Random vectors with planted exact ties (a duplicated row, a seed
+    subvector copied into a later row) and one NaN element."""
+    rng = np.random.default_rng(7)
+    vecs = rng.standard_normal((n, dim))
+    vecs[10] = vecs[11]
+    vecs[30, :4] = vecs[2, :4]
+    rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
+    rows[40][1][5] = float("nan")
+    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+
+def _bits(x):
+    """Exact comparison key for nested float lists (NaN-safe)."""
+    return np.asarray(x, dtype=np.float64).tobytes()
+
+
 def test_arrow_encode_matches_jvm_expr_twin(spark):
     """The Arrow encoder (pq_encode) must be code-for-code identical to
-    the JVM expression formulation (pq_encode_expr) — including near-tie
-    distances, negative values, and the corpus embeddings."""
-    import numpy as np
+    the JVM expression twin (tests/vector_twins.py) — including planted
+    ties, a NaN element, and the corpus embeddings."""
+    from tests import vector_twins as twins
 
-    from letarette_spark.functions.pq import pq_encode_expr
+    def twin_encode(emb, books):
+        src = emb.select(
+            "vec_id", F.col("embedding").cast("array<double>").alias("v")
+        )
+        return {
+            r["vec_id"]: r["codes"]
+            for r in twins.codes(src, books, "vec_id").collect()
+        }
 
-    rng = np.random.default_rng(7)
-    vecs = rng.standard_normal((64, 16)).astype(np.float64)
-    # plant exact ties: duplicate codeword subvectors
-    vecs[10] = vecs[11]
-    books = pq_codebooks(_df(spark, vecs), m=4, k=8, n_iter=1)
-    df = _df(spark, vecs)
-    arrow = {r["vec_id"]: list(r["codes"]) for r in pq_encode(df, books).collect()}
-    jvm = {r["vec_id"]: list(r["codes"]) for r in pq_encode_expr(df, books).collect()}
-    assert arrow == jvm
+    df = _tie_nan_df(spark)
+    for books in (
+        pq_codebooks(df.filter("vec_id != 40"), m=4, k=8, n_iter=1),
+        # the NaN row's subspace-1 codeword goes NaN: a NaN distance
+        # among finite ones must sort last
+        pq_codebooks(df, m=4, k=8, n_iter=1),
+    ):
+        arrow = {
+            r["vec_id"]: list(r["codes"]) for r in pq_encode(df, books).collect()
+        }
+        assert arrow == twin_encode(df, books)
+        assert arrow[10] == arrow[11]
+    assert np.isnan(np.asarray(books)).any()
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     books2 = pq_codebooks(emb, m=8, k=16, n_iter=1)
     arrow2 = {r["vec_id"]: list(r["codes"]) for r in pq_encode(emb, books2).collect()}
-    jvm2 = {r["vec_id"]: list(r["codes"]) for r in pq_encode_expr(emb, books2).collect()}
-    assert arrow2 == jvm2
+    assert arrow2 == twin_encode(emb, books2)
+
+
+@pytest.mark.parametrize("n_iter", [1, 2])
+def test_lloyd_codebooks_match_twin_rounds(spark, monkeypatch, n_iter):
+    """pq_codebooks' Lloyd rounds encode through the Arrow kernel; the
+    same rounds driven by the expression twin give bitwise-identical
+    codebooks (NaN row included: the codeword it lands on goes NaN)."""
+    from letarette_spark.functions import pq as P
+    from tests import vector_twins as twins
+
+    df = _tie_nan_df(spark)
+    arrow = pq_codebooks(df, m=4, k=8, n_iter=n_iter)
+    monkeypatch.setattr(P, "_arrow_codes", twins.codes)
+    twin = pq_codebooks(df, m=4, k=8, n_iter=n_iter)
+    assert _bits(arrow) == _bits(twin)
+    assert np.isnan(np.asarray(arrow)).any()
+
+
+def _index_rows(spark, path):
+    return sorted(
+        (r["vec_id"], tuple(r["codes"]), r["cell"])
+        for r in spark.read.parquet(path).collect()
+    )
+
+
+def test_pq_index_write_rows_match_twins(spark, monkeypatch, tmp_path):
+    """The written (vec_id, codes, cell) rows equal the rows written with
+    both kernels swapped for their expression twins."""
+    from letarette_spark.functions import pq as P
+    from letarette_spark.functions import similarity as S
+    from letarette_spark.functions.similarity import ivf_centroids
+    from tests import vector_twins as twins
+
+    df = _tie_nan_df(spark)
+    clean = df.filter("vec_id != 40")
+    cents = ivf_centroids(clean, n_cells=4, n_iter=1)
+    cents[1] = [2.0 * x for x in cents[0]]  # tied cells: lower one wins
+    books = pq_codebooks(clean, m=4, k=8, n_iter=1)
+    P.pq_index_write(df, str(tmp_path / "arrow"), cents, books)
+    monkeypatch.setattr(P, "_arrow_codes", twins.codes)
+    monkeypatch.setattr(S, "_arrow_cell_assign", twins.cell_assign)
+    P.pq_index_write(df, str(tmp_path / "twin"), cents, books)
+    got = _index_rows(spark, str(tmp_path / "arrow"))
+    assert got == _index_rows(spark, str(tmp_path / "twin"))
+    assert len(got) == 64 and 1 not in {cell for _, _, cell in got}
+
+
+def test_pq_index_write_skips_null_embedding(spark, tmp_path):
+    from letarette_spark.functions.pq import pq_index_topk, pq_index_write
+    from letarette_spark.functions.similarity import ivf_centroids
+
+    vecs = _vectors(20)
+    rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
+    emb = spark.createDataFrame(
+        rows + [(98, None), (99, None)], "vec_id long, embedding array<double>"
+    )
+    cents = ivf_centroids(emb, n_cells=4)
+    books = pq_codebooks(emb, m=M, k=K)
+    path = str(tmp_path / "pq_nulls")
+    pq_index_write(emb, path, cents, books)
+    assert [r[0] for r in _index_rows(spark, path)] == list(range(20))
+    got = pq_index_topk(spark, path, rows[0][1], cents, books, k=50, nprobe=4)
+    assert sorted(r["vec_id"] for r in got.collect()) == list(range(20))
+
+
+def test_ragged_vector_error_names_row(spark):
+    vecs = _vectors(8)
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
+        + [(77, [1.0, 2.0])],
+        "vec_id long, embedding array<double>",
+    )
+    books = pq_codebooks(emb.filter("vec_id < 8"), m=M, k=K)
+    with pytest.raises(Exception, match="row vec_id=77 has dim 2"):
+        pq_encode(emb, books).collect()

@@ -77,9 +77,33 @@ def test_matches_live_library_on_fresh_randoms(lang, mod):
     assert not bad, bad[:10]
 
 
+@pytest.mark.skipif(not _HAVE_LIB, reason="compiled libstemmer not available")
+def test_russian_superlative_tidy_up_matches_live_library():
+    """Seeded draws ending in a superlative (optionally after нн or ь):
+    tidy_up is one among, so after ейш/ейше only нн -> н may follow and
+    a final ь the deletion exposes must stay."""
+    import sys
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+    from gen_snowball_goldens import SnowballStemmer
+
+    st = SnowballStemmer("russian")
+    rng = random.Random(20261017)
+    alpha = "абвгдежзийклмнопрстуфхцчшщъыьэюяё" + "аеиоуыэюя" * 2
+    bad = []
+    for _ in range(4000):
+        w = "".join(rng.choice(alpha) for _ in range(rng.randint(0, 10)))
+        w += rng.choice(("", "", "нн", "ь", "нь")) + rng.choice(("ейш", "ейше"))
+        if russian.stem(w) != st.stem(w):
+            bad.append((w, st.stem(w), russian.stem(w)))
+    assert not bad, bad[:10]
+
+
 def test_known_forms():
     assert russian.stem("возможность") == "возможн"
     assert russian.stem("красивейший") == "красив"
+    assert russian.stem("нэюьнюьейш") == "нэюьнюь"
+    assert russian.stem("аюиьейше") == "аюиь"
     assert russian.stem("вернувшись") == "вернувш"
     assert russian.stem("партнёр") == "партнер"
     assert dutch.stem("lichamelijke") == "licham"

@@ -40,6 +40,12 @@ def _cos(a, b):
     return dot / (math.sqrt(sum(x * x for x in a)) * math.sqrt(sum(x * x for x in b)))
 
 
+def _null_rows(spark):
+    return spark.createDataFrame(
+        [(98, None), (99, None)], "vec_id long, embedding array<float>"
+    )
+
+
 class TestSemDeDup:
     def test_pairs_match_brute_force_within_cells(self, spark, emb):
         from letarette_spark.functions.semdedup import semdedup_pairs
@@ -90,6 +96,18 @@ class TestSemDeDup:
         }
         assert got == expected
         assert losers  # something was actually dropped
+
+    def test_null_embedding_is_never_paired_or_kept(self, spark, emb):
+        from letarette_spark.functions.semdedup import (
+            semdedup_kept,
+            semdedup_pairs,
+        )
+
+        mixed = emb.unionByName(_null_rows(spark))
+        for op in (semdedup_pairs, semdedup_kept):
+            got = sorted(op(mixed, n_cells=2, threshold=0.9).collect())
+            assert got == sorted(op(emb, n_cells=2, threshold=0.9).collect())
+            assert got and not {98, 99} & {v for r in got for v in r}
 
     def test_no_cartesian_product_in_plan(self, spark, emb):
         from letarette_spark.functions.semdedup import semdedup_pairs
@@ -245,6 +263,14 @@ class TestHardNegatives:
             for r, (_, c) in zip(rows, expected):
                 assert r["cos"] == pytest.approx(c, abs=1e-9)
                 assert r["cos"] < pos_cos - (1.0 - 0.95) * abs(pos_cos)
+
+    def test_null_embedding_is_never_a_negative(self, spark, emb):
+        from letarette_spark.functions.similarity import hard_negatives
+
+        mixed = emb.unionByName(_null_rows(spark))
+        got = sorted(hard_negatives(mixed, query_ids=[0, 3, 99], k=5).collect())
+        assert got == sorted(hard_negatives(emb, query_ids=[0, 3], k=5).collect())
+        assert got and not {98, 99} & {r["neg_id"] for r in got}
 
     def test_margin_holds_when_pos_cos_negative(self, spark):
         """When the best corpus cosine is negative, the exclusion zone
