@@ -298,6 +298,12 @@ class AnalyzerConfig:
             "separators": self.separators,
         }
 
+    @classmethod
+    def from_key(cls, key: dict) -> "AnalyzerConfig":
+        """The config a stamped ``key()`` (index manifest, shard clone)
+        describes."""
+        return cls(**dict(key, languages=tuple(key["languages"])))
+
 
 @dataclass
 class Analyzer:

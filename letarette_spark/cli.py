@@ -33,7 +33,9 @@ Command-for-command mapping:
     index optimize main.go:259 -> streaming/indexer.run_housekeeping
                                   (FTS5 optimize ~ compaction + aux rebuild)
     index rebuild main.go:261  -> full re-index from the stored docs table,
-                                  staged sibling dir + atomic swap
+                                  staged sibling dir + atomic swap (the
+                                  index must open: a stale layout is
+                                  rebuilt from the source documents)
     index forcestemmer main.go:263 -> restamp the manifest analyzer
                                   (stemmer.go force-update semantics:
                                   postings are NOT re-stemmed)
@@ -53,7 +55,8 @@ docs table — every parquet column here is already zstd-compressed, and
 the compress/uncompress/iscompressed scalar functions exist in
 functions/compression.py for payload-level use), `resetmigration`
 (sqlite schema migrations — the manifest's layout version replaces
-them; entry() wipes stale cache layouts automatically).
+them: every command refuses an index stamped with another layout, and
+such an index is rebuilt from its source documents with `load`).
 """
 
 from __future__ import annotations
@@ -227,7 +230,9 @@ def cmd_index_optimize(args) -> int:
 def cmd_index_rebuild(args) -> int:
     """Full re-index from the stored docs (optimizeIndex/rebuildIndex,
     indextools.go): build into a staged sibling dir, then atomically swap
-    the roots so a crash mid-rebuild never leaves a half-written index."""
+    the roots so a crash mid-rebuild never leaves a half-written index.
+    It reads the docs through Index.open, so an index with a stale layout
+    is refused here too; rebuild that one from its source documents."""
     spark = _spark("rebuild")
     import shutil
 

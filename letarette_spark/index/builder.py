@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from letarette_spark.analysis.tokenizer import Analyzer, AnalyzerConfig
-from letarette_spark.index.manifest import Manifest
+from letarette_spark.index.manifest import Manifest, data_dirs
 
 POSTINGS_SCHEMA = T.StructType(
     [
@@ -120,8 +120,8 @@ DEFAULT_DOC_BUCKETS = 16  # rowid-hash partition dirs for the docs table
 # position lists so wildcard queries never scan the full postings table
 DEFAULT_PREFIX_LENGTHS = (2, 3, 4)
 PREFIX_BUCKETS = 64  # partition dirs keyed by hash of the FIRST character
-# bumped whenever the on-disk layout changes shape (readers rebuild stale
-# cached indexes instead of misreading them)
+# bumped whenever the on-disk layout changes shape; Index.open refuses any
+# other version, so readers never branch on older layouts
 LAYOUT_VERSION = 4
 
 PREFIX_SCHEMA = T.StructType(
@@ -150,6 +150,59 @@ def bucket_of(term: str, n_buckets: int) -> int:
     import hashlib
 
     return int(hashlib.md5(term.encode("utf-8")).hexdigest()[:8], 16) % n_buckets
+
+
+def write_postings(
+    postings: DataFrame, path: str, n_buckets: int, n_files: int
+) -> None:
+    """Write posting rows in the bucketed layout every reader assumes:
+    partitionBy(bucket = md5(term) % n_buckets) dirs give EXACT partition
+    pruning for query terms, and term-sorted files add row-group min/max
+    pruning for prefix scans. A hash shuffle has no sampling pass (unlike
+    repartitionByRange), so the upstream runs exactly once."""
+    (
+        postings.withColumn("bucket", bucket_expr(n_buckets))
+        .repartition(n_files, "bucket")
+        .sortWithinPartitions("bucket", "term", "rowid")
+        .write.partitionBy("bucket")
+        .mode("overwrite")
+        .parquet(path)
+    )
+
+
+def term_aggregate(postings: DataFrame) -> DataFrame:
+    """Per-term (df, cnt). Postings hold one row per (term, rowid), so df
+    is count(*): a partial-aggregatable shuffle with no distinct."""
+    return postings.groupBy("term").agg(
+        F.count(F.lit(1)).alias("df"),
+        F.sum(F.col("tf0") + F.col("tf1")).alias("cnt"),
+    )
+
+
+def write_term_stats(
+    term_stats: DataFrame, path: str, n_files: int
+) -> tuple[int, int]:
+    """Write a term_stats table range-partitioned and sorted by term
+    (lookups range-prune by term) and return its (nterms, sum_dl) from one
+    aggregate over the written table — sum over terms of cnt == total
+    tokens == sum over docs of dl, so no postings scan is needed.
+
+    repartitionByRange SAMPLES its child: without the persist the upstream
+    would run twice (sample pass + write pass). The frame is one row per
+    term — cheap to hold."""
+    ts = term_stats.persist()
+    try:
+        ts.repartitionByRange(max(2, n_files), "term").sortWithinPartitions(
+            "term"
+        ).write.mode("overwrite").parquet(path)
+    finally:
+        ts.unpersist()
+    spark = term_stats.sparkSession
+    row = spark.read.schema(TERM_STATS_SCHEMA).parquet(path).agg(
+        F.count(F.lit(1)).alias("nterms"),
+        F.coalesce(F.sum("cnt"), F.lit(0)).alias("sum_dl"),
+    ).collect()[0]
+    return int(row["nterms"]), int(row["sum_dl"])
 
 
 def prefix_bucket_expr(prefix_col: str = "prefix", n_buckets: int = PREFIX_BUCKETS):
@@ -324,15 +377,7 @@ def tokenize_postings(docs: DataFrame, config: AnalyzerConfig) -> DataFrame:
     )
 
     def tok(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
-        analyzer = Analyzer(AnalyzerConfig(
-            mode=cfg["mode"],
-            languages=tuple(cfg["languages"]),
-            min_token_length=cfg["min_token_length"],
-            stem_min=cfg["stem_min"],
-            stem_max=cfg["stem_max"],
-            token_chars=cfg.get("token_chars", ""),
-            separators=cfg.get("separators", ""),
-        ))
+        analyzer = Analyzer(AnalyzerConfig.from_key(cfg))
         for batch in batches:
             rowids = batch.column("rowid").to_pylist()
             spaces = batch.column("space").to_pylist()
@@ -428,6 +473,15 @@ def build_index(
     references, and ``index.incremental.expire_snapshots`` reclaims them.
     """
     config = config or AnalyzerConfig()
+    sizes = {
+        "n_buckets": n_buckets,
+        "docs_buckets": docs_buckets,
+        "n_build_partitions": n_build_partitions,
+        "chunk_size": chunk_size,
+    }
+    for name, v in sizes.items():
+        if v < 1:
+            raise ValueError(f"build_index: {name} must be >= 1, got {v}")
     if "rowid" not in docs.columns:
         docs = docs.withColumn("rowid", F.xxhash64("doc_id"))
 
@@ -489,13 +543,8 @@ def build_index(
                 .parquet(docs_dir)
             )
 
-        # Layout: hash-bucket directories + term-sorted rows. A single hash
-        # shuffle (no sampling pass, unlike repartitionByRange — tokenize
-        # runs exactly once), partitionBy('bucket') directories give EXACT
-        # partition pruning for query terms, and within-file term sorting
-        # gives row-group min/max pruning for prefix scans. Head-term skew
-        # is bounded: one term is one bucket slice, and buckets >> tasks
-        # average the rest out.
+        # Head-term skew in the bucketed layout is bounded: one term is one
+        # bucket slice, and buckets >> tasks average the rest out.
         # Tokenization is CPU-bound Python: spread it over all cores even
         # when the source is a single parquet file (one input split would
         # otherwise serialize the whole chunk through one task). The
@@ -510,14 +559,7 @@ def build_index(
                 ),
                 config,
             )
-            (
-                postings.withColumn("bucket", bucket_expr(n_buckets))
-                .repartition(files_per_chunk, "bucket")
-                .sortWithinPartitions("bucket", "term", "rowid")
-                .write.partitionBy("bucket")
-                .mode("overwrite")
-                .parquet(post_dir)
-            )
+            write_postings(postings, post_dir, n_buckets, files_per_chunk)
 
         # The two chunk writes are independent jobs over independent
         # scans into disjoint dirs: submit both so the docs write's I/O
@@ -539,35 +581,14 @@ def build_index(
     ts_dir = os.path.join(root, "term_stats")
 
     def _finalize_term_stats():
-        term_stats = postings_all.groupBy("term").agg(
-            F.count(F.lit(1)).alias("df"),
-            F.sum(F.col("tf0") + F.col("tf1")).alias("cnt"),
-        )
         ts_tmp = os.path.join(root, "term_stats.tmp")
-        # repartitionByRange SAMPLES its child: without a persist the full
-        # postings scan + groupBy would run twice (sample pass + write
-        # pass). The aggregated frame is one row per term — cheap to hold;
-        # the range layout is worth it (term_stats lookups range-prune by
-        # term).
-        ts = term_stats.persist()
-        try:
-            ts.repartitionByRange(
-                max(2, files_per_chunk), "term"
-            ).sortWithinPartitions("term").write.mode("overwrite").parquet(
-                ts_tmp
-            )
-        finally:
-            ts.unpersist()
+        stats = write_term_stats(
+            term_aggregate(postings_all), ts_tmp, files_per_chunk
+        )
         if os.path.exists(ts_dir):
             shutil.rmtree(ts_dir)
         os.replace(ts_tmp, ts_dir)
-        # global stats from the (small) term_stats table — no extra
-        # postings scan: sum over terms of cnt == total tokens == sum
-        # over docs of dl
-        return spark.read.parquet(ts_dir).agg(
-            F.coalesce(F.sum("cnt"), F.lit(0)).alias("sum_dl"),
-            F.count(F.lit(1)).alias("nterms"),
-        ).collect()[0]
+        return stats
 
     def _finalize_prefix():
         if not prefix_lengths:
@@ -599,10 +620,9 @@ def build_index(
         f_ts = pool.submit(_finalize_term_stats)
         f_pf = pool.submit(_finalize_prefix)
         f_nd = pool.submit(_finalize_ndocs)
-        agg = f_ts.result()
+        nterms, sum_dl = f_ts.result()
         f_pf.result()
         ndocs = f_nd.result()
-    nterms = int(agg["nterms"])
 
     man.reset_history()  # a full (re)build starts a fresh snapshot history
     man.commit_snapshot(
@@ -610,7 +630,7 @@ def build_index(
             "analyzer": config.key(),
             "layout": LAYOUT_VERSION,
             "ndocs": ndocs,
-            "sum_dl": int(agg["sum_dl"]),
+            "sum_dl": sum_dl,
             "nterms": nterms,
             "weights": {"title": TITLE_WEIGHT, "body": BODY_WEIGHT},
             "postings_buckets": n_buckets,
@@ -623,7 +643,7 @@ def build_index(
         }
     )
     man.clear_plan()
-    return BuildResult(root, ndocs, nterms, int(agg["sum_dl"]), built, skipped)
+    return BuildResult(root, ndocs, nterms, sum_dl, built, skipped)
 
 
 @dataclass
@@ -646,28 +666,30 @@ class Index:
         ``snapshot_retention > 1``). Time-travel reads force the exhaustive
         scoring path: the WAND blocks table tracks only the CURRENT
         snapshot, so serving it for an older state could surface rows the
-        old snapshot never contained."""
+        old snapshot never contained.
+
+        Raises ValueError when the snapshot's stamped layout is not
+        LAYOUT_VERSION: such an index is rebuilt from its source documents,
+        never read through compatibility branches."""
         if snapshot_id is None:
             man = Manifest.load(root)
         else:
             man = Manifest.load_snapshot(root, snapshot_id)
             man.state = dict(man.state, blocks=None)
+        found = man.state.get("layout")
+        if found != LAYOUT_VERSION:
+            raise ValueError(
+                f"index at {root} has layout {found}, this version reads "
+                f"layout {LAYOUT_VERSION}; rebuild it from the source "
+                "documents with build_index"
+            )
         if config is not None:
             man.require_analyzer(config.key())
         return cls(spark, root, man.state)
 
     @property
     def analyzer_config(self) -> AnalyzerConfig:
-        a = self.meta["analyzer"]
-        return AnalyzerConfig(
-            mode=a["mode"],
-            languages=tuple(a["languages"]),
-            min_token_length=a["min_token_length"],
-            stem_min=a["stem_min"],
-            stem_max=a["stem_max"],
-            token_chars=a.get("token_chars", ""),
-            separators=a.get("separators", ""),
-        )
+        return AnalyzerConfig.from_key(self.meta["analyzer"])
 
     @property
     def segments(self) -> list[dict]:
@@ -749,12 +771,8 @@ class Index:
         self.__dict__.pop("_speling_df", None)
 
     @property
-    def n_buckets(self) -> int | None:
-        return self.meta.get("postings_buckets")
-
-    def bucket_of_term(self, term: str) -> int | None:
-        b = self.n_buckets
-        return bucket_of(term, b) if b else None
+    def n_buckets(self) -> int:
+        return self.meta["postings_buckets"]
 
     # ---- storage-dir pointers: committed snapshots reference versioned
     # dirs (term_stats.vN / postings.vN / docs.vN) so mutations stage new
@@ -762,16 +780,16 @@ class Index:
     # snapshot reading half-written stats (the analog of the reference's
     # single SQLite transaction around upsert + stats).
     def term_stats_dir(self) -> str:
-        return os.path.join(self.root, self.meta.get("term_stats_dir", "term_stats"))
+        return os.path.join(self.root, data_dirs(self.meta)["term_stats"])
 
     def postings_base_dir(self) -> str:
-        return os.path.join(self.root, self.meta.get("postings_dir", "postings"))
+        return os.path.join(self.root, data_dirs(self.meta)["postings"])
 
     def prefix_base_dir(self) -> str:
-        return os.path.join(self.root, self.meta.get("prefix_dir", "prefix"))
+        return os.path.join(self.root, data_dirs(self.meta)["prefix"])
 
     def docs_base_dir(self) -> str:
-        return os.path.join(self.root, self.meta.get("docs_dir", "docs"))
+        return os.path.join(self.root, data_dirs(self.meta)["docs"])
 
     def _postings_base(self) -> DataFrame:
         """Base-snapshot postings only (seq 0, no segment overlay)."""
@@ -797,16 +815,13 @@ class Index:
         cond = F.col("term").isin(terms) if len(terms) > 1 else (
             F.col("term") == terms[0]
         )
-        b = self.n_buckets
-        if b:
-            buckets = sorted({bucket_of(t, b) for t in terms})
-            bcond = (
-                F.col("bucket").isin(buckets)
-                if len(buckets) > 1
-                else (F.col("bucket") == buckets[0])
-            )
-            cond = bcond & cond
-        return cond
+        buckets = sorted({bucket_of(t, self.n_buckets) for t in terms})
+        bcond = (
+            F.col("bucket").isin(buckets)
+            if len(buckets) > 1
+            else (F.col("bucket") == buckets[0])
+        )
+        return bcond & cond
 
     def postings_for_terms(self, terms: list[str]) -> DataFrame:
         """Term-pruned postings scan over the live (overlaid) view."""
@@ -816,7 +831,7 @@ class Index:
     def _prefix_base(self, plen: int, prefix: str) -> DataFrame:
         """Base-snapshot prefix-aggregate rows for one (plen, first-char
         bucket) partition dir; empty frame when the dir does not exist."""
-        npb = self.meta.get("prefix_buckets") or PREFIX_BUCKETS
+        npb = self.meta["prefix_buckets"]
         d = os.path.join(
             self.prefix_base_dir(),
             f"plen={plen}",
@@ -836,9 +851,8 @@ class Index:
         matching term) with disjoint positions; the caller merges them in
         whatever exchange it already runs.
 
-        Returns None when no aggregate covers this prefix length (longer
-        than the largest configured length, or a pre-prefix-layout index)
-        — the caller falls back to dictionary expansion.
+        Returns None for an empty prefix or an index built with
+        prefix_lengths=() — the caller falls back to dictionary expansion.
 
         Delta segments are overlaid at query time: base rows for
         tombstoned rowids are dropped and the (compaction-bounded)
@@ -882,7 +896,7 @@ class Index:
                     .filter(self._terms_cond(short_terms))
                     .select(*cols)
                 )
-        elif self.meta.get("prefix_tail"):
+        else:
             # longer than every aggregate: the plen=-1 term-range tail
             # (prefix = whole term, first-char dir, term-sorted files) —
             # one partition dir + startswith row-group pruning,
@@ -892,8 +906,6 @@ class Index:
                 .filter(F.col("prefix").startswith(prefix))
                 .select(*cols)
             )
-        else:
-            return None
 
         if not self.segments:
             return base
@@ -930,32 +942,26 @@ class Index:
         (bounded by compaction) are read in full; tombstone overlay rules
         apply as in docs()."""
         rowids = [int(r) for r in rowids]
-        nb = self.meta.get("docs_buckets")
+        nb = self.meta["docs_buckets"]
         base_dir = self.docs_base_dir()
-        paths = []
-        if nb:
-            want = sorted({r % nb for r in rowids})
-            if os.path.isdir(base_dir):
-                for chunk in os.listdir(base_dir):
-                    if not chunk.startswith("chunk="):
-                        continue
-                    for b in want:
-                        p = os.path.join(base_dir, chunk, f"rb={b}")
-                        if os.path.isdir(p):
-                            paths.append(p)
-        if nb and paths:
+        want = sorted({r % nb for r in rowids})
+        chunks = os.listdir(base_dir) if os.path.isdir(base_dir) else []
+        paths = [
+            os.path.join(base_dir, chunk, f"rb={b}")
+            for chunk in chunks
+            if chunk.startswith("chunk=")
+            for b in want
+        ]
+        paths = [p for p in paths if os.path.isdir(p)]
+        if paths:
             base = (
                 self.spark.read.schema(DOCS_SCHEMA)
                 .option("basePath", base_dir)
                 .parquet(*paths)
                 .drop("chunk", "rb")
             )
-        elif nb and not paths:  # none of the keys' buckets exist on disk
+        else:  # none of the keys' buckets exist on disk
             base = self.spark.createDataFrame([], DOCS_SCHEMA)
-        else:  # pre-layout-2 index: no bucket dirs to prune
-            base = _read_tree(self.spark, base_dir, "chunk=*", DOCS_SCHEMA).drop(
-                "chunk", "rb"
-            )
         return self._overlay(base, "docs").filter(F.col("rowid").isin(rowids))
 
     def term_stats(self) -> DataFrame:

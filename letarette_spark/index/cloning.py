@@ -94,16 +94,7 @@ def import_shard(
         manifest = json.load(f)
     if manifest["version"] > CLONE_VERSION:
         raise ValueError("incompatible clone format")
-    a = manifest["analyzer"]
-    cfg = AnalyzerConfig(
-        mode=a["mode"],
-        languages=tuple(a["languages"]),
-        min_token_length=a["min_token_length"],
-        stem_min=a["stem_min"],
-        stem_max=a["stem_max"],
-        token_chars=a.get("token_chars", ""),
-        separators=a.get("separators", ""),
-    )
+    cfg = AnalyzerConfig.from_key(manifest["analyzer"])
     docs = spark.read.parquet(os.path.join(src, "docs"))
     result = build_index(spark, docs, root, config=cfg, **build_kwargs)
     if housekeep:

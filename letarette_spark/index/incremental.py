@@ -46,21 +46,25 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from letarette_spark.index.builder import (
-    DEFAULT_BUCKETS,
-    DEFAULT_DOC_BUCKETS,
+    DOCS_SCHEMA,
+    POSTINGS_READ_SCHEMA,
     POSTINGS_SCHEMA,
     Index,
-    bucket_expr,
+    _read_tree,
+    build_prefix_aggregates,
+    term_aggregate,
     tokenize_postings,
+    write_postings,
+    write_term_stats,
 )
-from letarette_spark.index.manifest import Manifest
+from letarette_spark.index.manifest import Manifest, data_dirs
 
 # above this batch size the merge path (which collects the batch's rowid
 # set to the driver for bucket pruning) falls back to a full recompute —
 # at that scale the recompute cost is amortized anyway
 MERGE_MAX_BATCH = 100_000
 
-_VERSIONED = re.compile(r"^(postings|docs|term_stats|prefix)(\.v\d+|\.tmp|\.compact)?$")
+_VERSIONED = re.compile(r"^(postings|docs|term_stats|prefix)(\.v\d+|\.tmp)?$")
 
 
 def _gc_stale_dirs(root: str, keep_rel: set[str]) -> None:
@@ -108,15 +112,7 @@ def expire_snapshots(root: str, keep_last: int = 1) -> list[int]:
     man = Manifest.load(root)
     man.prune_snapshot_files(keep_last)
     cur = man.state
-    _gc_stale_dirs(
-        root,
-        keep_rel={
-            cur.get("postings_dir", "postings"),
-            cur.get("docs_dir", "docs"),
-            cur.get("prefix_dir", "prefix"),
-            cur.get("term_stats_dir", "term_stats"),
-        },
-    )
+    _gc_stale_dirs(root, keep_rel=set(data_dirs(cur).values()))
     _gc_seg_dirs(root, keep_seqs={int(s["seq"]) for s in cur.get("segments", [])})
     return Manifest.retained_ids(root)
 
@@ -127,65 +123,26 @@ def _drop_blocks(root: str) -> None:
         shutil.rmtree(blocks_dir, ignore_errors=True)
 
 
-def _write_term_stats(spark: SparkSession, ts: DataFrame, path: str) -> int:
-    """Write a term_stats table range-partitioned + sorted by term (prefix
-    scans get row-group pruning). Persist first: repartitionByRange samples
-    its child and would run the upstream twice. Returns nterms."""
-    par = max(2, spark.sparkContext.defaultParallelism // 2)
-    ts = ts.persist()
-    nterms = ts.count()
-    (
-        ts.repartitionByRange(par, "term")
-        .sortWithinPartitions("term")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-    ts.unpersist()
-    return nterms
-
-
 def _merged_stats(
     spark: SparkSession,
     index: Index,
-    root: str,
     seg_post_path: str,
     batch_rowids: list[int],
     alive_add: int,
-    ts_new_rel: str,
+    ts_path: str,
 ) -> dict:
     """Additive stats merge for one upsert batch (called with the index
     still reflecting the PRE-batch snapshot, so docs_for_rowids sees the
     replaced versions). Returns the new global-stat meta fields."""
-    cfg = index.analyzer_config
-
     # a delete-only batch writes a footerless postings dir: empty delta
     seg_post = index._read_seg(seg_post_path, POSTINGS_SCHEMA)
-    add = (
-        seg_post.groupBy("term")
-        .agg(
-            F.count(F.lit(1)).alias("df_a"),
-            F.sum(F.col("tf0") + F.col("tf1")).alias("cnt_a"),
-        )
-        .persist()
-    )
-    dl_add = int(
-        add.agg(F.coalesce(F.sum("cnt_a"), F.lit(0)).alias("d")).collect()[0]["d"]
-    )
+    add = term_aggregate(seg_post).toDF("term", "df_a", "cnt_a")
 
     # previously-live versions of the batch's rowids: rowid-bucket-pruned
     # point lookup + re-tokenize of only those K docs (no postings scan)
     old = index.docs_for_rowids(batch_rowids).filter(F.col("alive"))
-    sub = (
-        tokenize_postings(old, cfg)
-        .groupBy("term")
-        .agg(
-            F.count(F.lit(1)).alias("df_s"),
-            F.sum(F.col("tf0") + F.col("tf1")).alias("cnt_s"),
-        )
-        .persist()
-    )
-    dl_sub = int(
-        sub.agg(F.coalesce(F.sum("cnt_s"), F.lit(0)).alias("d")).collect()[0]["d"]
+    sub = term_aggregate(tokenize_postings(old, index.analyzer_config)).toDF(
+        "term", "df_s", "cnt_s"
     )
     alive_sub = old.count()
 
@@ -209,31 +166,26 @@ def _merged_stats(
         )
         .filter(F.col("df") > 0)
     )
-    nterms = _write_term_stats(spark, merged, os.path.join(root, ts_new_rel))
-    add.unpersist()
-    sub.unpersist()
+    nterms, sum_dl = write_term_stats(
+        merged, ts_path, spark.sparkContext.defaultParallelism // 2
+    )
     return {
         "ndocs": int(index.meta["ndocs"]) + alive_add - alive_sub,
-        "sum_dl": int(index.meta["sum_dl"]) + dl_add - dl_sub,
+        "sum_dl": sum_dl,
         "nterms": nterms,
     }
 
 
-def _full_stats(spark: SparkSession, index: Index, root: str, ts_new_rel: str) -> dict:
-    """Full recompute from the overlaid view (compaction / huge batches)."""
-    postings = index.postings()
-    ts = postings.groupBy("term").agg(
-        F.count(F.lit(1)).alias("df"),
-        F.sum(F.col("tf0") + F.col("tf1")).alias("cnt"),
+def _full_stats(
+    spark: SparkSession, postings: DataFrame, docs: DataFrame, ts_path: str
+) -> dict:
+    """Full recompute from *postings* and *docs* (compaction / huge
+    batches)."""
+    nterms, sum_dl = write_term_stats(
+        term_aggregate(postings), ts_path, spark.sparkContext.defaultParallelism // 2
     )
-    nterms = _write_term_stats(spark, ts, os.path.join(root, ts_new_rel))
-    agg = (
-        spark.read.parquet(os.path.join(root, ts_new_rel))
-        .agg(F.coalesce(F.sum("cnt"), F.lit(0)).alias("sum_dl"))
-        .collect()[0]
-    )
-    ndocs = index.docs().filter(F.col("alive")).count()
-    return {"ndocs": ndocs, "sum_dl": int(agg["sum_dl"]), "nterms": nterms}
+    ndocs = docs.filter(F.col("alive")).count()
+    return {"ndocs": ndocs, "sum_dl": sum_dl, "nterms": nterms}
 
 
 def upsert_documents(
@@ -285,47 +237,32 @@ def upsert_documents(
     keep = ["rowid", "doc_id", "space", "title", "body", "alive"]
     if "content_sha256" in docs.columns:
         keep.append("content_sha256")
-    seg_docs = docs.select(*keep)
-    db = index.meta.get("docs_buckets")
-    if db:
-        # same rowid-bucket layout as the base: point lookups prune segments
-        (
-            seg_docs.withColumn("rb", F.pmod(F.col("rowid"), F.lit(db)).cast("int"))
-            .write.partitionBy("rb")
-            .mode("overwrite")
-            .parquet(os.path.join(root, seg_rel["docs"]))
-        )
-    else:
-        seg_docs.write.mode("overwrite").parquet(os.path.join(root, seg_rel["docs"]))
+    db = index.meta["docs_buckets"]
+    # same rowid-bucket layout as the base: point lookups prune segments
+    (
+        docs.select(*keep)
+        .withColumn("rb", F.pmod(F.col("rowid"), F.lit(db)).cast("int"))
+        .write.partitionBy("rb")
+        .mode("overwrite")
+        .parquet(os.path.join(root, seg_rel["docs"]))
+    )
     docs.select("rowid").distinct().write.mode("overwrite").parquet(
         os.path.join(root, seg_rel["tombstones"])
     )
-    cfg = index.analyzer_config
     par = spark.sparkContext.defaultParallelism
     seg_post = tokenize_postings(
-        docs.filter(F.col("alive")).repartition(par), cfg
+        docs.filter(F.col("alive")).repartition(par), index.analyzer_config
     )
-    if index.n_buckets:
-        # keep the segment layout union-compatible with the bucketed base
-        (
-            seg_post.withColumn("bucket", bucket_expr(index.n_buckets))
-            .repartition(max(2, par // 2), "bucket")
-            .sortWithinPartitions("bucket", "term", "rowid")
-            .write.partitionBy("bucket")
-            .mode("overwrite")
-            .parquet(os.path.join(root, seg_rel["postings"]))
-        )
-    else:  # pre-bucket index layouts
-        (
-            seg_post.repartition(max(2, par // 2), "term")
-            .sortWithinPartitions("term", "rowid")
-            .write.mode("overwrite")
-            .parquet(os.path.join(root, seg_rel["postings"]))
-        )
+    # same bucketed layout as the base, so the overlay unions by name
+    write_postings(
+        seg_post, os.path.join(root, seg_rel["postings"]), index.n_buckets,
+        max(2, par // 2),
+    )
 
     # ---- stats: additive merge (pre-batch snapshot still current) ----
     ver = int(index.meta.get("snapshot_id", 0)) + 1
     ts_new_rel = f"term_stats.v{ver}"
+    ts_path = os.path.join(root, ts_new_rel)
     batch_rowids = [
         r["rowid"]
         for r in docs.select("rowid").distinct().limit(MERGE_MAX_BATCH + 1).collect()
@@ -337,16 +274,15 @@ def upsert_documents(
         stats = _merged_stats(
             spark,
             index,
-            root,
             os.path.join(root, seg_rel["postings"]),
             batch_rowids,
             alive_add=docs.filter(F.col("alive")).count(),
-            ts_new_rel=ts_new_rel,
+            ts_path=ts_path,
         )
     else:
         index.meta = dict(index.meta, segments=new_segments)
         index.invalidate()  # overlay must see the new segment
-        stats = _full_stats(spark, index, root, ts_new_rel)
+        stats = _full_stats(spark, index.postings(), index.docs(), ts_path)
 
     meta = dict(index.meta)
     meta.update(stats)
@@ -386,15 +322,7 @@ def upsert_documents(
     # post-commit GC of unreferenced dirs + stale WAND blocks. The prefix
     # aggregates are NOT rewritten on the upsert path (prefix_rows overlays
     # segments at query time) — keep the base dir alive.
-    _gc_stale_dirs(
-        root,
-        keep_rel={
-            index.meta.get("postings_dir", "postings"),
-            index.meta.get("docs_dir", "docs"),
-            index.meta.get("prefix_dir", "prefix"),
-            ts_new_rel,
-        },
-    )
+    _gc_stale_dirs(root, keep_rel=set(data_dirs(index.meta).values()))
     _drop_blocks(root)
     return index
 
@@ -417,18 +345,13 @@ def compact_index(spark: SparkSession, root: str) -> Index:
         f"docs.v{ver}",
         f"term_stats.v{ver}",
     )
-    nb = index.n_buckets or DEFAULT_BUCKETS
-    db = index.meta.get("docs_buckets", DEFAULT_DOC_BUCKETS)
+    db = index.meta["docs_buckets"]
 
-    post = index.postings()
-    if "bucket" not in post.columns:
-        post = post.withColumn("bucket", bucket_expr(nb))
-    (
-        post.repartition(max(2, par // 2), "bucket")
-        .sortWithinPartitions("bucket", "term", "rowid")
-        .write.partitionBy("bucket")
-        .mode("overwrite")
-        .parquet(os.path.join(root, post_rel, "chunk=0"))
+    write_postings(
+        index.postings().drop("bucket"),
+        os.path.join(root, post_rel, "chunk=0"),
+        index.n_buckets,
+        max(2, par // 2),
     )
     (
         index.docs()
@@ -438,66 +361,32 @@ def compact_index(spark: SparkSession, root: str) -> Index:
         .mode("overwrite")
         .parquet(os.path.join(root, docs_rel, "chunk=0"))
     )
-
-    new_post = spark.read.option(
-        "basePath", os.path.join(root, post_rel)
-    ).parquet(os.path.join(root, post_rel, "chunk=*"))
+    new_post = _read_tree(
+        spark, os.path.join(root, post_rel), "chunk=*", POSTINGS_READ_SCHEMA
+    )
 
     # rebuild the prefix aggregates from the compacted postings (the one
     # place that pays the index-wide scan; upserts only overlay)
-    prefix_lengths = tuple(index.meta.get("prefix_lengths") or ())
-    pf_rel = None
+    prefix_lengths = tuple(index.meta["prefix_lengths"])
+    meta = dict(index.meta, segments=[], blocks=None)
     if prefix_lengths:
-        from letarette_spark.index.builder import build_prefix_aggregates
-
-        pf_rel = f"prefix.v{ver}"
+        meta["prefix_dir"] = f"prefix.v{ver}"
         build_prefix_aggregates(
-            spark, new_post, os.path.join(root, pf_rel), prefix_lengths,
-            files_per_len=max(2, par // 4),
+            spark, new_post, os.path.join(root, meta["prefix_dir"]),
+            prefix_lengths, files_per_len=max(2, par // 4),
         )
 
-    ts = new_post.groupBy("term").agg(
-        F.count(F.lit(1)).alias("df"),
-        F.sum(F.col("tf0") + F.col("tf1")).alias("cnt"),
+    new_docs = _read_tree(
+        spark, os.path.join(root, docs_rel), "chunk=*", DOCS_SCHEMA
     )
-    nterms = _write_term_stats(spark, ts, os.path.join(root, ts_rel))
-    agg = (
-        spark.read.parquet(os.path.join(root, ts_rel))
-        .agg(F.coalesce(F.sum("cnt"), F.lit(0)).alias("sum_dl"))
-        .collect()[0]
-    )
-    ndocs = (
-        spark.read.option("basePath", os.path.join(root, docs_rel))
-        .parquet(os.path.join(root, docs_rel, "chunk=*"))
-        .filter(F.col("alive"))
-        .count()
-    )
-
-    meta = dict(
-        index.meta,
-        segments=[],
-        postings_dir=post_rel,
-        docs_dir=docs_rel,
-        term_stats_dir=ts_rel,
-        postings_buckets=nb,
-        docs_buckets=db,
-        ndocs=ndocs,
-        sum_dl=int(agg["sum_dl"]),
-        nterms=nterms,
-        blocks=None,
-    )
-    if pf_rel:
-        meta["prefix_dir"] = pf_rel
-        meta["prefix_tail"] = True  # rebuilt aggregates include the tail
+    meta.update(_full_stats(spark, new_post, new_docs, os.path.join(root, ts_rel)))
+    meta.update(postings_dir=post_rel, docs_dir=docs_rel, term_stats_dir=ts_rel)
     meta.pop("snapshot_id", None)
     man.commit_snapshot(meta)  # ← the atomic commit point
     index.meta = man.state
     index.invalidate()
 
-    keep = {post_rel, docs_rel, ts_rel}
-    if pf_rel:
-        keep.add(pf_rel)
-    _gc_stale_dirs(root, keep_rel=keep)
+    _gc_stale_dirs(root, keep_rel=set(data_dirs(index.meta).values()))
     # the compacted snapshot overlays nothing, but retained time-travel
     # snapshots may still reference delta segments — GC only unreferenced
     _gc_seg_dirs(root, keep_seqs=set())

@@ -32,6 +32,18 @@ def _atomic_write_json(path: str, obj: Any) -> None:
     os.replace(tmp, path)  # POSIX-atomic commit point
 
 
+def data_dirs(state: dict) -> dict[str, str]:
+    """Root-relative data dir of each base table in a snapshot *state*. A
+    fresh build writes the unversioned names; compaction and upserts stamp
+    ``<table>_dir`` pointers at staged copies (postings.vN ...)."""
+    return {
+        "postings": state.get("postings_dir", "postings"),
+        "docs": state.get("docs_dir", "docs"),
+        "term_stats": state.get("term_stats_dir", "term_stats"),
+        "prefix": state.get("prefix_dir", "prefix"),
+    }
+
+
 @dataclass
 class Manifest:
     root: str
@@ -123,14 +135,15 @@ class Manifest:
         rows = []
         for sid in cls.retained_ids(root):
             st = cls.load_snapshot(root, sid).state
+            dirs = data_dirs(st)
             rows.append(
                 {
                     "snapshot_id": sid,
                     "ndocs": st.get("ndocs"),
                     "nterms": st.get("nterms"),
                     "segments": len(st.get("segments", [])),
-                    "postings_dir": st.get("postings_dir", "postings"),
-                    "term_stats_dir": st.get("term_stats_dir", "term_stats"),
+                    "postings_dir": dirs["postings"],
+                    "term_stats_dir": dirs["term_stats"],
                 }
             )
         return rows
@@ -144,10 +157,7 @@ class Manifest:
         seqs: set = set()
         for sid in cls.retained_ids(root):
             st = cls.load_snapshot(root, sid).state
-            dirs.add(st.get("postings_dir", "postings"))
-            dirs.add(st.get("docs_dir", "docs"))
-            dirs.add(st.get("term_stats_dir", "term_stats"))
-            dirs.add(st.get("prefix_dir", "prefix"))
+            dirs.update(data_dirs(st).values())
             for s in st.get("segments", []):
                 seqs.add(int(s["seq"]))
         return dirs, seqs

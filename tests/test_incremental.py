@@ -8,12 +8,17 @@ segments + tombstones + stats refresh)."""
 
 from __future__ import annotations
 
+import json
 import math
+import os
+import shutil
 
 import pytest
 
 from letarette_spark.analysis.tokenizer import AnalyzerConfig
-from letarette_spark.index.builder import Index, build_index
+from letarette_spark.index.builder import (
+    LAYOUT_VERSION, PREFIX_BUCKETS, Index, build_index,
+)
 from letarette_spark.index.incremental import compact_index, upsert_documents
 from letarette_spark.query.executor import Searcher
 from tests.fts5_oracle import Fts5Index
@@ -505,3 +510,88 @@ def test_randomized_upsert_sequences_match_rebuild_oracle(spark, tmp_path):
         assert math.isclose(sg, se, rel_tol=1e-9, abs_tol=1e-12)
 
     check(compact_index(spark, root))
+
+
+# ---- the layout contract: Index.open is the one gate ----
+
+@pytest.fixture(scope="module")
+def layout4_root(spark, tmp_path_factory):
+    root = str(tmp_path_factory.mktemp("layout4"))
+    build_index(spark, _docs_df(spark, BASE), root, config=CFG,
+                n_build_partitions=2, chunk_size=2)
+    return root
+
+
+def _tree(root):
+    """Every file under *root* with its size and mtime."""
+    out = {}
+    for d, _, fs in os.walk(root):
+        for f in fs:
+            st = os.stat(os.path.join(d, f))
+            out[os.path.join(d, f)] = (st.st_size, st.st_mtime_ns)
+    return out
+
+
+@pytest.mark.parametrize("stamp", [3, None], ids=["layout3", "no_layout"])
+def test_stale_layout_is_refused_everywhere(spark, layout4_root, tmp_path, stamp):
+    root = str(tmp_path / "stale")
+    shutil.copytree(layout4_root, root)
+    current = os.path.join(root, "_manifest", "CURRENT.json")
+    with open(current) as f:
+        state = json.load(f)
+    if stamp is None:
+        state.pop("layout")
+    else:
+        state["layout"] = stamp
+    snap = os.path.join(root, "_manifest", "snapshots", f"{state['snapshot_id']}.json")
+    for path in (current, snap):
+        with open(path, "w") as f:
+            json.dump(state, f)
+
+    for kwargs in ({}, {"snapshot_id": state["snapshot_id"]}):
+        with pytest.raises(ValueError) as err:
+            Index.open(spark, root, **kwargs)
+        msg = str(err.value)
+        assert f"layout {stamp}" in msg and f"layout {LAYOUT_VERSION}" in msg, msg
+        assert "rebuild" in msg, msg
+
+    before = _tree(root)
+    with pytest.raises(ValueError, match="rebuild"):
+        upsert_documents(spark, root, _docs_df(spark, UPDATES_1), batch_id=1)
+    with pytest.raises(ValueError, match="rebuild"):
+        compact_index(spark, root)
+    assert _tree(root) == before
+
+
+@pytest.mark.parametrize("prefix_lengths", [(2, 3, 4), ()], ids=["default", "none"])
+def test_build_stamps_every_key_readers_index(
+    spark, layout4_root, tmp_path, prefix_lengths
+):
+    """Readers index these manifest keys without a default, so every build
+    must stamp them."""
+    if prefix_lengths:
+        root = layout4_root  # built with the default prefix_lengths
+    else:
+        root = str(tmp_path / "noprefix")
+        build_index(spark, _docs_df(spark, BASE), root, config=CFG,
+                    n_build_partitions=2, chunk_size=2, prefix_lengths=())
+    meta = Index.open(spark, root).meta
+    assert meta["layout"] == LAYOUT_VERSION
+    assert AnalyzerConfig.from_key(meta["analyzer"]) == CFG
+    for key in ("ndocs", "sum_dl", "nterms", "postings_buckets", "docs_buckets"):
+        assert isinstance(meta[key], int) and meta[key] >= 1, (key, meta[key])
+    assert meta["prefix_lengths"] == list(prefix_lengths)
+    assert meta["prefix_tail"] is bool(prefix_lengths)
+    if prefix_lengths:
+        assert meta["prefix_buckets"] == PREFIX_BUCKETS
+
+
+@pytest.mark.parametrize(
+    "param", ["n_buckets", "docs_buckets", "n_build_partitions", "chunk_size"]
+)
+def test_build_rejects_nonpositive_sizes(spark, tmp_path, param):
+    root = tmp_path / "never"
+    with pytest.raises(ValueError, match=f"{param} must be >= 1"):
+        build_index(spark, _docs_df(spark, BASE), str(root), config=CFG,
+                    **{param: 0})
+    assert not root.exists()
