@@ -63,13 +63,14 @@ def main() -> None:
     spark.range(par * 4, numPartitions=par).select(_warm("id")).count()
     if args.preload:
         idx.preload()  # pin postings+docs executor-side (db.go:504-540)
-    searcher = Searcher(idx, timeout=args.timeout if args.timeout > 0 else None)
     cache = None
     if args.cache_size > 0:
-        from letarette_spark.query.cache import CachingSearcher, ResultCache
+        from letarette_spark.query.cache import ResultCache
 
         cache = ResultCache(max_entries=args.cache_size)
-        searcher = CachingSearcher(searcher, cache)
+    searcher = Searcher(
+        idx, timeout=args.timeout if args.timeout > 0 else None, cache=cache
+    )
     from letarette_spark.monitoring import METRICS
 
     for q in args.query:

@@ -37,7 +37,7 @@ def __getattr__(name):
         from letarette_spark.query import executor
 
         return getattr(executor, name)
-    if name in ("CachingSearcher", "ResultCache"):
+    if name == "ResultCache":
         from letarette_spark.query import cache
 
         return getattr(cache, name)

@@ -17,8 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-K1 = 1.2
-B = 0.75
+from letarette_spark.query.executor import bm25_term, idf_col
 
 TOKEN_SPLIT_RE = "[^a-z0-9]+"
 
@@ -95,14 +94,12 @@ def bm25_scores(
     terms: list[str],
     id_col: str = "doc_id",
     text_col: str = "text",
-    k1: float = K1,
-    b: float = B,
 ) -> DataFrame:
     """(id, score) BM25 over a single text column, AND semantics (doc must
-    contain every query term), FTS5 idf convention (ln((N-n+0.5)/(n+0.5)),
-    clamped to 1e-6 when <= 0). Higher = better (no FTS5 sign flip here —
-    this is the relational operator; the engine's Searcher reproduces the
-    negative-ascending convention).
+    contain every query term), the engine's scoring contract (executor.py
+    ``idf_col``/``bm25_term``: FTS5 idf, k1=1.2, b=0.75). Higher = better
+    (no FTS5 sign flip here — this is the relational operator; the
+    engine's Searcher reproduces the negative-ascending convention).
 
     Plan shape: ONE tokenize pass producing per-doc (dl, tf per term) via
     array intrinsics — no explode, no groupBy; global stats (N, avgdl, df
@@ -138,15 +135,10 @@ def bm25_scores(
     ).crossJoin(F.broadcast(stats))
 
     avgdl = F.col("sumdl") / F.col("n")
-    denom_dl = k1 * (1.0 - b + b * F.col("dl") / avgdl)
     score = F.lit(0.0)
     for i in range(len(uterms)):
-        raw_idf = F.ln(
-            (F.col("n") - F.col(f"dfreq_{i}") + 0.5) / (F.col(f"dfreq_{i}") + 0.5)
-        )
-        idf = F.when(raw_idf <= 0.0, F.lit(1e-6)).otherwise(raw_idf)
-        tf = F.col(f"tf_{i}")
-        score = score + idf * tf * (k1 + 1.0) / (tf + denom_dl)
+        idf = idf_col(F.col("n"), F.col(f"dfreq_{i}"))
+        score = score + bm25_term(idf, F.col(f"tf_{i}"), F.col("dl"), avgdl)
     return cand.select(F.col(id_col), score.alias("score"))
 
 

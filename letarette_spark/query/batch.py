@@ -26,8 +26,8 @@ Semantics vs ``Searcher.search`` (db_search.go:60-96, search_1.sql):
   window and participant-filtered tf do NOT apply in batch — a documented
   divergence; route proximity-sensitive queries through ``Searcher``.
 * **'-' excludes**: per-query anti-join, same contract as the interactive
-  path (exclude phrases are analyzed without the stopword rule,
-  executor.py `search_df`).
+  path (both analyze a query with executor.py's ``analyze_query``, which
+  applies no stopword rule to exclude phrases).
 * **multi-word ("quoted") phrases and wildcards** are not batchable
   (they need position arrays / prefix aggregates per query); they raise
   by default or are skipped with ``on_unsupported="skip"``.
@@ -35,7 +35,8 @@ Semantics vs ``Searcher.search`` (db_search.go:60-96, search_1.sql):
 Phrase df is computed in-plan over the live postings view BEFORE space
 filters and excludes (FTS5 computes idf from table-wide stats the same
 way), so results stay exact through delta-segment overlays and deletes —
-no reliance on term_stats freshness.
+no reliance on term_stats freshness. Scores come from executor.py's
+``idf_col`` and ``bm25_term``, the scoring contract's one implementation.
 
 Scale shape: with a driver-side query list the postings scan is
 term-pruned (bucket partition dirs + row-group pushdown on the sorted
@@ -48,27 +49,26 @@ correct regime when the batch covers most of the vocabulary anyway.
 
 from __future__ import annotations
 
-from typing import Iterable, Sequence
+from typing import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from letarette_spark.query.parser import parse_query, reduce_phrases
+from letarette_spark.query.executor import analyze_query, bm25_term, idf_col
 
 # Above this many distinct terms an isin() pruning predicate stops paying
 # for itself (the engine's wildcard expansion batches at the same size) —
 # switch to the full-scan shuffle join on term.
 MAX_PRUNED_TERMS = 4096
 
-_QTERMS_FIELDS = [
+QTERMS_SCHEMA = T.StructType([
     T.StructField("query_id", T.StringType(), False),
     T.StructField("pidx", T.IntegerType(), False),
     T.StructField("exclude", T.BooleanType(), False),
     T.StructField("term", T.StringType(), False),
     T.StructField("n_inc", T.IntegerType(), False),
-]
-QTERMS_SCHEMA = T.StructType(_QTERMS_FIELDS)
+])
 
 
 class UnsupportedBatchQuery(ValueError):
@@ -76,49 +76,30 @@ class UnsupportedBatchQuery(ValueError):
     (multi-word phrases, wildcards) — route these through Searcher."""
 
 
-def _analyze_one(searcher, query_id: str, text: str) -> list[tuple]:
+def _analyze_one(analyzer, stopwords, synonyms, query_id: str, text: str) -> list[tuple]:
     """Analyze one query into qterms rows; [] when the reduced query is
     empty (the interactive path returns no result then, search_df)."""
-    phrases = reduce_phrases(parse_query(text))
-    includes = [p for p in phrases if not p.exclude]
-    excludes = [p for p in phrases if p.exclude]
-
-    inc_alts = []
-    for p in includes:
-        alts = searcher.analyze_phrase(p)  # stopword rule applies here
-        if not alts:
-            continue
+    inc, exc = analyze_query(analyzer, stopwords, synonyms, text)
+    if not inc:
+        return []
+    rows: list[tuple] = []
+    n_inc = len(inc)
+    for i, (p, alts) in enumerate(inc):
         if p.wildcard or len(alts) > 1:
             raise UnsupportedBatchQuery(
                 f"query {query_id!r}: phrase {p.text!r} needs positional "
                 "evaluation (wildcard or multi-word phrase); use Searcher"
             )
-        inc_alts.append(alts[0])
-    if not inc_alts:
-        return []
-
-    rows: list[tuple] = []
-    n_inc = len(inc_alts)
-    for i, terms in enumerate(inc_alts):
-        for t in terms:
+        for t in alts[0]:
             rows.append((query_id, i, False, t, n_inc))
-    pidx = n_inc
-    for p in excludes:
-        # interactive path: excludes via query_alternatives, NO stopword
-        # drop (executor.py search_df exclude loop)
-        alts = searcher.analyzer.query_alternatives(
-            p.text, synonyms=searcher.synonyms, prefix=p.wildcard
-        )
-        if not alts:
-            continue
-        if p.wildcard or len(alts) > 1:
+    for pidx, (alts, wildcard) in enumerate(exc, start=n_inc):
+        if wildcard or len(alts) > 1:
             raise UnsupportedBatchQuery(
-                f"query {query_id!r}: exclude phrase {p.text!r} needs "
-                "positional evaluation; use Searcher"
+                f"query {query_id!r}: an exclude phrase needs positional "
+                "evaluation (wildcard or multi-word phrase); use Searcher"
             )
         for t in alts[0]:
             rows.append((query_id, pidx, True, t, n_inc))
-        pidx += 1
     return rows
 
 
@@ -127,7 +108,10 @@ def _qterms_from_list(searcher, queries, on_unsupported: str):
     rows: list[tuple] = []
     for qid, text in queries:
         try:
-            rows.append(_analyze_one(searcher, str(qid), text))
+            rows.append(_analyze_one(
+                searcher.analyzer, searcher.stopwords, searcher.synonyms,
+                str(qid), text,
+            ))
         except UnsupportedBatchQuery:
             if on_unsupported == "error":
                 raise
@@ -150,34 +134,18 @@ def _qterms_from_df(searcher, queries: DataFrame, on_unsupported: str):
         import pandas as pd
 
         from letarette_spark.analysis.tokenizer import Analyzer
-        from letarette_spark.query.executor import Searcher as _S
 
-        class _Ctx:  # the three attrs _analyze_one touches
-            pass
-
-        ctx = _Ctx()
-        ctx.analyzer = Analyzer(cfg)
-        ctx.synonyms = synonyms
-        ctx.stopwords = stopwords
-        ctx.analyze_phrase = lambda p: _S.analyze_phrase(ctx, p)
-
+        analyzer = Analyzer(cfg)
         for pdf in it:
             out: list[tuple] = []
             for qid, text in zip(pdf["query_id"], pdf["query"]):
                 try:
-                    out.extend(_analyze_one(ctx, str(qid), text))
+                    out.extend(_analyze_one(analyzer, stopwords, synonyms, str(qid), text))
                 except UnsupportedBatchQuery:
                     if strict:
                         raise
-            yield pd.DataFrame(
-                out, columns=[f.name for f in _QTERMS_FIELDS]
-            ).astype(
+            yield pd.DataFrame(out, columns=QTERMS_SCHEMA.names).astype(
                 {"pidx": "int32", "exclude": "bool", "n_inc": "int32"}
-            ) if out else pd.DataFrame(
-                {f.name: pd.Series(dtype=d) for f, d in zip(
-                    _QTERMS_FIELDS,
-                    ["object", "int32", "bool", "object", "int32"],
-                )}
             )
 
     return queries.mapInPandas(gen, QTERMS_SCHEMA), None
@@ -254,15 +222,10 @@ def search_batch(
     if spaces:
         inc = inc.filter(F.col("space").isin(list(spaces)))
 
-    from letarette_spark.query.executor import B, K1
-
-    raw_idf = F.ln(
-        (F.lit(float(searcher.ndocs)) - F.col("df") + 0.5)
-        / (F.col("df") + 0.5)
+    contrib = bm25_term(
+        idf_col(float(searcher.ndocs), F.col("df")),
+        F.col("tfw"), F.col("dl"), searcher.avgdl,
     )
-    idf = F.when(raw_idf <= 0.0, F.lit(1e-6)).otherwise(raw_idf)
-    denom_dl = K1 * (1.0 - B + B * F.col("dl") / F.lit(searcher.avgdl))
-    contrib = idf * F.col("tfw") * (K1 + 1.0) / (F.col("tfw") + denom_dl)
 
     docs = inc.groupBy("query_id", "rowid").agg(
         F.first("space").alias("space"),

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import time
 from collections import OrderedDict
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Hashable
 
 from letarette_spark.query.parser import canonicalize, parse_query, reduce_phrases
@@ -111,26 +111,15 @@ class ResultCache:
         self._data.clear()
         self._by_doc.clear()
 
-
-class CachingSearcher:
-    """Searcher wrapper: canonical-key result caching around search()."""
-
-    def __init__(self, searcher, cache: ResultCache | None = None):
-        self.searcher = searcher
-        self.cache = cache or ResultCache()
-
-    def search(self, query, spaces=None, limit=10, offset=0, **kw):
-        key = cache_key(query, spaces, limit, offset, **kw)
-        hit = self.cache.get(key)
+    def get_or_compute(self, key: Hashable, compute):
+        """The cached result for *key* marked ``cache_hit`` (reference:
+        SearchStatusCacheHit, searcher.go:95-97), else ``compute()``'s
+        result, stored unless it timed out — only successful searches are
+        cached (searcher.go:98-103: cache.Put runs only when err == nil)."""
+        hit = self.get(key)
         if hit is not None:
-            # reference marks served-from-cache responses distinctly
-            # (SearchStatusCacheHit, searcher.go:95-97)
-            from dataclasses import replace as _dc_replace
-
-            return _dc_replace(hit, status="cache_hit")
-        res = self.searcher.search(query, spaces, limit, offset, **kw)
+            return replace(hit, status="cache_hit")
+        res = compute()
         if res.status != "timeout":
-            # only successful searches are cached (searcher.go:98-103:
-            # cache.Put runs only when err == nil)
-            self.cache.put(key, res, {h.doc_id for h in res.hits})
+            self.put(key, res, {h.doc_id for h in res.hits})
         return res

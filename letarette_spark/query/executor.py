@@ -16,6 +16,9 @@ pinned by tests/test_search_rank_identity.py):
 
 with k1=1.2, b=0.75, weights title=5.0 body=1.0 (db.go:357-361); ascending
 score = best first, ties broken by rowid (FTS5 visits rowids in order).
+Every scoring path (interactive, WAND/exhaustive, batch, simple_text)
+uses this module's ``idf``/``idf_col``, ``bm25_term`` and ``index_avgdl``;
+the interactive and batch paths analyze queries with ``analyze_query``.
 
 NEAR semantics (empirical, matching FTS5): all include phrases must occur
 in the SAME column with a selection of one instance per phrase such that
@@ -74,6 +77,71 @@ _HITS_SCHEMA = T.StructType(
 _POS = T.ArrayType(T.IntegerType())
 
 
+def idf(ndocs: float, df: float) -> float:
+    """FTS5 idf of a term or phrase found in *df* of *ndocs* documents,
+    clamped to 1e-6 when <= 0."""
+    v = math.log((ndocs - df + 0.5) / (df + 0.5))
+    return v if v > 0.0 else 1e-6
+
+
+def idf_col(n, df: Column) -> Column:
+    """``idf`` as a Column expression; *n* is a number or a Column."""
+    raw = F.ln((n - df + 0.5) / (df + 0.5))
+    return F.when(raw <= 0.0, F.lit(1e-6)).otherwise(raw)
+
+
+def bm25_term(idf, tf, dl, avgdl):
+    """One summand of the BM25 score, in the contract's operation order.
+    Plain operators only, so floats and Columns take the same path."""
+    return idf * tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl))
+
+
+def term_dfs(index: Index, terms: list[str]) -> dict[str, int]:
+    """df of each of *terms* found in the dictionary — one range-pruned
+    term_stats scan."""
+    return {
+        r["term"]: int(r["df"])
+        for r in index.term_stats().filter(F.col("term").isin(terms)).collect()
+    }
+
+
+def index_avgdl(index: Index) -> float:
+    """avgdl = sum(dl) / N over the index's live documents (1.0 when empty)."""
+    ndocs = int(index.meta["ndocs"])
+    return float(index.meta["sum_dl"]) / ndocs if ndocs else 1.0
+
+
+def _stopword_dropped(p: Phrase, alts: list[list[str]], stopwords) -> bool:
+    """The single-word stopword rule: only a single-word, non-prefix phrase
+    is dropped (snowball.c:248-262: a space in the phrase or the PREFIX
+    flag disables it)."""
+    return bool(
+        stopwords
+        and not p.wildcard
+        and " " not in p.text
+        and len(alts) == 1
+        and alts[0][0] in stopwords
+    )
+
+
+def analyze_query(analyzer: Analyzer, stopwords, synonyms, text: str) -> tuple[list, list]:
+    """Parse, reduce and analyze a query: the include ``(Phrase, alts)``
+    pairs left after the stopword rule, and the exclude ``(alts,
+    wildcard)`` pairs (excludes skip the stopword rule). ``alts`` holds a
+    phrase's per-position term alternatives (primary + colocated
+    synonyms); phrases that analyze to nothing are left out."""
+    inc, exc = [], []
+    for p in reduce_phrases(parse_query(text)):
+        alts = analyzer.query_alternatives(p.text, synonyms=synonyms, prefix=p.wildcard)
+        if not alts:
+            continue
+        if p.exclude:
+            exc.append((alts, p.wildcard))
+        elif not _stopword_dropped(p, alts, stopwords):
+            inc.append((p, alts))
+    return inc, exc
+
+
 @dataclass
 class Hit:
     space: str
@@ -120,9 +188,7 @@ class Searcher:
 
         self.analyzer = Analyzer(self.index.analyzer_config)
         self.ndocs = int(self.index.meta["ndocs"])
-        self.avgdl = (
-            float(self.index.meta["sum_dl"]) / self.ndocs if self.ndocs else 1.0
-        )
+        self.avgdl = index_avgdl(self.index)
         if self.stopwords is None:
             self.stopwords = load_stopwords(self.index)
         if self.synonyms is None:
@@ -130,22 +196,13 @@ class Searcher:
 
     # ------------------------------------------------------------------
     def analyze_phrase(self, p: Phrase) -> list[list[str]]:
-        """Query-time analysis of one phrase: per-position term
-        alternatives (primary + colocated synonyms). Stopword removal
-        applies only to single-word, non-prefix phrases (snowball.c:248-262:
-        a space in the phrase or the PREFIX flag disables it)."""
+        """Query-time analysis of one include phrase: per-position term
+        alternatives, [] when the stopword rule drops it (see
+        ``analyze_query``)."""
         alts = self.analyzer.query_alternatives(
             p.text, synonyms=self.synonyms, prefix=p.wildcard
         )
-        if (
-            self.stopwords
-            and not p.wildcard
-            and " " not in p.text
-            and len(alts) == 1
-            and alts[0][0] in self.stopwords
-        ):
-            return []
-        return alts
+        return [] if _stopword_dropped(p, alts, self.stopwords) else alts
 
     # ------------------------------------------------------------------
     def _scan(self, terms: list[str], wildcard: bool, counts: bool) -> DataFrame:
@@ -236,10 +293,6 @@ class Searcher:
         return F.expr(f"coalesce({per_col[0]}, false) or coalesce({per_col[1]}, false)")
 
     # ------------------------------------------------------------------
-    def _idf(self, df_count: int) -> float:
-        v = math.log((self.ndocs - df_count + 0.5) / (df_count + 0.5))
-        return v if v > 0.0 else 1e-6
-
     def _candidates(
         self,
         inc: list[list[list[str]]],
@@ -344,7 +397,7 @@ class Searcher:
         product in the formula's fixed order: the driver gates hash the
         rounded scores."""
         k = len(dfs)
-        idf = [self._idf(d) for d in dfs]
+        idfs = [idf(self.ndocs, d) for d in dfs]
         w = (self.w_title, self.w_body)
         out = []
         for r in rows:
@@ -359,11 +412,9 @@ class Searcher:
                     if counts is not None:
                         for i in range(k):
                             tfw[i] += w[c] * counts[i]
-            denom_dl = K1 * (1.0 - B + B * r["dl"] / self.avgdl)
             score = 0.0
             for i in range(k):
-                tf = tfw[i]
-                score = score + idf[i] * tf * (K1 + 1.0) / (tf + denom_dl)
+                score = score + bm25_term(idfs[i], tfw[i], r["dl"], self.avgdl)
             out.append((r["rowid"], r["space"], -score))
         return out
 
@@ -380,21 +431,14 @@ class Searcher:
         The DataFrame has columns (rowid, space, score) sorted best-first
         and is a local relation (collecting it runs no Spark job); None
         when the reduced query is empty (db_search.go:64-66). One Spark
-        action: the candidate collect, at most cap+1 rows."""
+        action: the candidate collect, at most cap+1 rows. A negative
+        *offset* raises ValueError."""
+        if offset < 0:
+            raise ValueError(f"offset must be >= 0, got {offset}")
         limit = max(1, min(limit, MAX_PAGE_LIMIT))
-        phrases = reduce_phrases(parse_query(query))
-        inc = [(p, self.analyze_phrase(p)) for p in phrases if not p.exclude]
-        inc = [(p, a) for p, a in inc if a]
+        inc, exc = analyze_query(self.analyzer, self.stopwords, self.synonyms, query)
         if not inc:
             return None, 0, False
-        exc = []
-        for p in phrases:
-            if p.exclude:
-                alts = self.analyzer.query_alternatives(
-                    p.text, synonyms=self.synonyms, prefix=p.wildcard
-                )
-                if alts:
-                    exc.append((alts, p.wildcard))
         cand, obs = self._candidates(
             [a for _p, a in inc], [p.wildcard for p, _a in inc], exc, spaces
         )
@@ -457,31 +501,25 @@ class Searcher:
         an empty result with status='timeout' instead of raising, exactly
         like the reference maps interrupts to SearchStatusTimeout
         (searcher.go:107-118)."""
-        key = None
-        if self.cache is not None:
-            from dataclasses import replace as _dc_replace
-
-            from letarette_spark.query.cache import cache_key
-
-            key = cache_key(
-                query, spaces, limit, offset,
-                autocorrect=autocorrect, snippets=snippets, strategy=strategy,
-            )
-            hit = self.cache.get(key)
-            if hit is not None:
-                return _dc_replace(hit, status="cache_hit")
-        try:
-            res = self._with_deadline(
-                lambda: self._search_impl(
-                    query, spaces, limit, offset, autocorrect, snippets, strategy
+        def run() -> SearchResult:
+            try:
+                return self._with_deadline(
+                    lambda: self._search_impl(
+                        query, spaces, limit, offset, autocorrect, snippets, strategy
+                    )
                 )
-            )
-        except SearchTimeout:
-            return SearchResult([], 0, False, status="timeout")
-        if key is not None:
-            # only successful searches are cached (searcher.go:98-103)
-            self.cache.put(key, res, {h.doc_id for h in res.hits})
-        return res
+            except SearchTimeout:
+                return SearchResult([], 0, False, status="timeout")
+
+        if self.cache is None:
+            return run()
+        from letarette_spark.query.cache import cache_key
+
+        key = cache_key(
+            query, spaces, limit, offset,
+            autocorrect=autocorrect, snippets=snippets, strategy=strategy,
+        )
+        return self.cache.get_or_compute(key, run)
 
     # ------------------------------------------------------------------
     def search_terms_df(
@@ -494,23 +532,24 @@ class Searcher:
         blocks reflect the current snapshot; otherwise scores exactly from
         the bucket-pruned row postings. Returns (rowid, space, score) in
         the FTS5 negative-ascending convention, or None for an empty
-        analyzed query."""
-        terms = []
-        for w in words:
-            alts = self.analyzer.query_alternatives(w, synonyms=self.synonyms)
-            if alts and alts[0]:
-                terms.append(alts[0][0])
+        analyzed query.
+
+        Every token of every word counts as its own term (its primary
+        term; synonyms are not expanded): ``["error-handler"]`` ranks like
+        ``["error", "handler"]``."""
+        terms = [
+            position[0]
+            for w in words
+            for position in self.analyzer.query_alternatives(w, synonyms=self.synonyms)
+        ]
         if not terms:
             return None
         from letarette_spark.index.blocks import has_blocks
         from letarette_spark.query.wand import exhaustive_topk, wand_topk
 
-        if has_blocks(self.index) and not self.index.segments:
-            return wand_topk(
-                self.index, terms, k=limit, mode=mode,
-                w_title=self.w_title, w_body=self.w_body,
-            )
-        return exhaustive_topk(
+        blocks_current = has_blocks(self.index) and not self.index.segments
+        topk = wand_topk if blocks_current else exhaustive_topk
+        return topk(
             self.index, terms, k=limit, mode=mode,
             w_title=self.w_title, w_body=self.w_body,
         )
@@ -560,21 +599,19 @@ class Searcher:
                 for h, d in rows
             ]
             return SearchResult(hits, total, capped, respelt, respelt_distance, status)
-        builder = None
         phrase_alts: list[list[list[str]]] = []
         if snippets:
             from letarette_spark.query.snippets import SnippetBuilder
 
             builder = SnippetBuilder(self.analyzer)
-            for p in reduce_phrases(parse_query(query)):
-                if not p.exclude:
-                    alts = self.analyze_phrase(p)
-                    if alts:
-                        phrase_alts.append(alts)
+            inc, _exc = analyze_query(
+                self.analyzer, self.stopwords, self.synonyms, query
+            )
+            phrase_alts = [alts for _p, alts in inc]
         hits = []
         for h, d in rows:
             snip = ""
-            if builder is not None and phrase_alts:
+            if phrase_alts:
                 snip = builder.snippet(d["title"], d["body"], phrase_alts)
             hits.append(Hit(h["space"], d["doc_id"], h["rowid"], h["score"], snip))
         return SearchResult(hits, total, capped, respelt, respelt_distance, status)
@@ -607,7 +644,7 @@ class Searcher:
             cand[i] = term
         unknown: list[str] = []
         if cand:
-            existing = self._terms_exist(sorted(set(cand.values())))
+            existing = term_dfs(self.index, sorted(set(cand.values())))
             unknown = sorted({t for t in cand.values() if t not in existing})
         fixes = respell_terms(self.index, unknown) if unknown else {}
 
@@ -624,17 +661,6 @@ class Searcher:
             dist_sum += dist
             changed = True
         return " ".join(str(p) for p in fixed), dist_sum, changed
-
-    def _terms_exist(self, terms: list[str]) -> set[str]:
-        """The subset of *terms* present in the dictionary — one
-        range-pruned term_stats scan for the whole query."""
-        return {
-            r["term"]
-            for r in self.index.term_stats()
-            .filter(F.col("term").isin(terms))
-            .select("term")
-            .collect()
-        }
 
 
 def _hits_frame(spark, hits: list[tuple]) -> DataFrame:

@@ -108,38 +108,26 @@ class ShardedSearcher:
         page_offset: int = 0,
         **search_kwargs,
     ) -> SearchResult:
-        from dataclasses import replace as _dc_replace
-
         from letarette_spark.query.cache import cache_key
 
-        key = cache_key(
-            query, spaces, page_limit, page_offset, **search_kwargs
+        key = cache_key(query, spaces, page_limit, page_offset, **search_kwargs)
+        return self.cache.get_or_compute(
+            key,
+            lambda: sharded_search(
+                self.searchers, query, spaces, page_limit, page_offset,
+                **search_kwargs,
+            ),
         )
-        hit = self.cache.get(key)
-        if hit is not None:
-            return _dc_replace(hit, status="cache_hit")
-        res = sharded_search(
-            self.searchers, query, spaces, page_limit, page_offset,
-            **search_kwargs,
-        )
-        if res.status != "timeout":
-            # only successful responses are cached (searcher.go:98-103)
-            self.cache.put(key, res, {h.doc_id for h in res.hits})
-        return res
+
+    def _caches(self) -> list:
+        shard_caches = (getattr(s, "cache", None) for s in self.searchers)
+        return [self.cache, *(c for c in shard_caches if c is not None)]
 
     def invalidate_doc(self, doc_id) -> int:
         """Drop *doc_id* from the merge-layer cache and every shard
         Searcher's cache. Returns total entries dropped."""
-        n = self.cache.invalidate_doc(doc_id)
-        for s in self.searchers:
-            c = getattr(s, "cache", None)
-            if c is not None:
-                n += c.invalidate_doc(doc_id)
-        return n
+        return sum(c.invalidate_doc(doc_id) for c in self._caches())
 
     def clear(self) -> None:
-        self.cache.clear()
-        for s in self.searchers:
-            c = getattr(s, "cache", None)
-            if c is not None:
-                c.clear()
+        for c in self._caches():
+            c.clear()

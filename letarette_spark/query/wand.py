@@ -10,13 +10,16 @@ prune-then-verify plan.
   round 2 (prune): a block (t, b) can influence the final top-k only if
       ub(t, b) + sum over other terms of their global max block ub >= theta
       — every other block is skipped without decoding.
-  verify: exact scores for the candidate docs come from the row postings
-      (term-pruned scan + rowid join), so the result is EXACT: any doc
-      outside the candidate set has score upper bound < theta <= k-th best.
+  verify: the exhaustive scorer (``_exact_topk``, shared with
+      ``exhaustive_topk``) restricted to the candidate rowids, so the
+      result is EXACT: any doc outside the candidate set has score upper
+      bound < theta <= k-th best.
 
-Upper bound per block: idf_t * sat(w0*tf0_max + w1*tf1_max, dl_min) — the
-BM25 saturation term is increasing in tf and decreasing in dl, so block-max
-tf with block-min dl bounds every doc in the block.
+Upper bound per block: bm25_term(idf_t, w0*tf0_max + w1*tf1_max, dl_min)
+— a BM25 term is increasing in tf and decreasing in dl, so block-max tf
+with block-min dl bounds every doc in the block. Every score comes from
+executor.py's ``idf``/``bm25_term``, the scoring contract's one
+implementation.
 
 Property-tested equal to exhaustive scoring in tests/test_wand.py and
 FTS5 rank-identity-tested through Searcher.search_terms_df, the
@@ -25,21 +28,20 @@ bag-of-words API that routes through it.
 
 from __future__ import annotations
 
-import math
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from letarette_spark.index.blocks import blocks_df
 from letarette_spark.index.builder import BODY_WEIGHT, TITLE_WEIGHT, Index
 from letarette_spark.index.varbyte import decode_ints, decode_rowids
+from letarette_spark.query.executor import bm25_term, idf, index_avgdl, term_dfs
 
-K1 = 1.2
-B = 0.75
+_EMPTY = "rowid long, space string, score double"
 
 _DECODED = T.StructType(
     [
@@ -86,59 +88,48 @@ def _decode(blocks: DataFrame) -> DataFrame:
     return blocks.mapInPandas(dec, schema=_DECODED)
 
 
-def _sat(tf, dl, avgdl):
-    return tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / F.lit(avgdl)))
-
-
 def _term_idf(index: Index, terms: list[str], mode: str) -> dict[str, float] | None:
-    """FTS5-convention idf per term with 1e-6 clamp; None when the query
-    can have no hits (an AND over a missing term)."""
+    """FTS5-convention idf per term; None when the query can have no hits
+    (no term is indexed, or an AND over a missing term)."""
     ndocs = int(index.meta["ndocs"])
-    stats = {
-        r["term"]: int(r["df"])
-        for r in index.term_stats().filter(F.col("term").isin(terms)).collect()
-    }
-    idf: dict[str, float] = {}
-    for t in terms:
-        n_t = stats.get(t, 0)
-        if n_t == 0:
-            if mode == "and":
-                return None
-            continue
-        v = math.log((ndocs - n_t + 0.5) / (n_t + 0.5))
-        idf[t] = v if v > 0.0 else 1e-6
-    return idf or None
+    dfs = {t: n for t, n in term_dfs(index, terms).items() if n > 0}
+    if not dfs or (mode == "and" and len(dfs) < len(terms)):
+        return None
+    return {t: idf(ndocs, n) for t, n in dfs.items()}
 
 
-def exhaustive_topk(
-    index: Index,
-    terms: list[str],
-    k: int = 10,
-    mode: str = "or",
-    w_title: float = TITLE_WEIGHT,
-    w_body: float = BODY_WEIGHT,
-) -> DataFrame:
-    """Exact bag-of-words BM25 top-k straight from the row postings
-    (bucket-pruned term scan + one groupBy) — no blocks required, so it
-    also serves indexes with pending delta segments. Same contract and
-    scoring as wand_topk; WAND is strictly a pruning optimization."""
-    spark = index.spark
-    terms = sorted(set(terms))
-    ndocs = int(index.meta["ndocs"])
-    avgdl = float(index.meta["sum_dl"]) / ndocs if ndocs else 1.0
-    idf = _term_idf(index, terms, mode)
-    if not idf:
-        return spark.createDataFrame([], "rowid long, space string, score double")
-    live_terms = sorted(idf)
-    idf_col = F.create_map(
-        *[x for t in live_terms for x in (F.lit(t), F.lit(idf[t]))]
+def _by_term(values: dict[str, float]) -> Column:
+    """The value of each row's ``term`` column, looked up in *values*."""
+    return F.create_map(
+        *[x for t in sorted(values) for x in (F.lit(t), F.lit(values[t]))]
     )[F.col("term")]
-    contrib = idf_col * _sat(
-        F.col("tf0") * w_title + F.col("tf1") * w_body, F.col("dl"), avgdl
-    )
+
+
+def _contrib(idfs: dict[str, float], avgdl: float, w_title: float, w_body: float) -> Column:
+    """A (term, tf0, tf1, dl) row's BM25 term."""
+    tfw = F.col("tf0") * w_title + F.col("tf1") * w_body
+    return bm25_term(_by_term(idfs), tfw, F.col("dl"), avgdl)
+
+
+def _exact_topk(
+    index: Index,
+    idfs: dict[str, float],
+    k: int,
+    mode: str,
+    w_title: float,
+    w_body: float,
+    cand: DataFrame | None = None,
+) -> DataFrame:
+    """Exact bag-of-words top-k from the row postings of the terms in
+    *idfs* (term-pruned scan -> per-row BM25 term -> one groupBy rowid ->
+    AND filter -> top-k), optionally restricted to the rowids of *cand*."""
+    live_terms = sorted(idfs)
+    post = index.postings_for_terms(live_terms)
+    if cand is not None:
+        post = post.join(cand, "rowid", "inner")
+    contrib = _contrib(idfs, index_avgdl(index), w_title, w_body)
     exact = (
-        index.postings_for_terms(live_terms)
-        .select("rowid", "space", contrib.alias("c"), F.lit(1).alias("one"))
+        post.select("rowid", "space", contrib.alias("c"), F.lit(1).alias("one"))
         .groupBy("rowid")
         .agg(
             F.first("space").alias("space"),
@@ -155,6 +146,24 @@ def exhaustive_topk(
     )
 
 
+def exhaustive_topk(
+    index: Index,
+    terms: list[str],
+    k: int = 10,
+    mode: str = "or",
+    w_title: float = TITLE_WEIGHT,
+    w_body: float = BODY_WEIGHT,
+) -> DataFrame:
+    """Exact bag-of-words BM25 top-k straight from the row postings
+    (bucket-pruned term scan + one groupBy) — no blocks required, so it
+    also serves indexes with pending delta segments. Same contract and
+    scoring as wand_topk; WAND is strictly a pruning optimization."""
+    idfs = _term_idf(index, sorted(set(terms)), mode)
+    if not idfs:
+        return index.spark.createDataFrame([], _EMPTY)
+    return _exact_topk(index, idfs, k, mode, w_title, w_body)
+
+
 def wand_topk(
     index: Index,
     terms: list[str],
@@ -167,24 +176,17 @@ def wand_topk(
     for a bag of terms, decoding only score-relevant blocks.
 
     mode='or': docs matching any term; mode='and': docs matching all."""
-    spark = index.spark
-    terms = sorted(set(terms))
-    ndocs = int(index.meta["ndocs"])
-    avgdl = float(index.meta["sum_dl"]) / ndocs if ndocs else 1.0
+    idfs = _term_idf(index, sorted(set(terms)), mode)
+    if not idfs:
+        return index.spark.createDataFrame([], _EMPTY)
+    live_terms = sorted(idfs)
+    avgdl = index_avgdl(index)
 
-    idf = _term_idf(index, terms, mode)
-    if not idf:
-        return spark.createDataFrame([], "rowid long, space string, score double")
-    live_terms = sorted(idf)
-
-    idf_col = F.create_map(
-        *[x for t in live_terms for x in (F.lit(t), F.lit(idf[t]))]
-    )[F.col("term")]
+    tfw_max = F.col("tf0_max") * w_title + F.col("tf1_max") * w_body
     meta = (
         blocks_df(index)
         .filter(F.col("term").isin(live_terms))
-        .withColumn("tfw_max", F.col("tf0_max") * w_title + F.col("tf1_max") * w_body)
-        .withColumn("ub", idf_col * _sat(F.col("tfw_max"), F.col("dl_min"), avgdl))
+        .withColumn("ub", bm25_term(_by_term(idfs), tfw_max, F.col("dl_min"), avgdl))
         .cache()
     )
 
@@ -196,20 +198,17 @@ def wand_topk(
     gsum = sum(gmax.values())
 
     # ---- round 1: seed theta from the top blocks of each term ----
-    from pyspark.sql import Window
-
     w = Window.partitionBy("term").orderBy(F.desc("ub"), F.asc("min_rowid"))
     block_size = int(index.meta.get("blocks", {}).get("block_size", 128))
     seed_blocks = meta.withColumn("rk", F.row_number().over(w)).filter(
         F.col("rk") <= max(1, -(-k // block_size) + 1)
     )
-    seeded = _decode(seed_blocks)
-    contrib = idf_col * _sat(
-        F.col("tf0") * w_title + F.col("tf1") * w_body, F.col("dl"), avgdl
-    )
-    seed_scores = seeded.select("term", "rowid", contrib.alias("c"), F.lit(1).alias("one"))
-    agg = seed_scores.groupBy("rowid").agg(
-        F.sum("c").alias("lb"), F.count("one").alias("nterms")
+    contrib = _contrib(idfs, avgdl, w_title, w_body)
+    agg = (
+        _decode(seed_blocks)
+        .select("rowid", contrib.alias("c"), F.lit(1).alias("one"))
+        .groupBy("rowid")
+        .agg(F.sum("c").alias("lb"), F.count("one").alias("nterms"))
     )
     if mode == "and":
         agg = agg.filter(F.col("nterms") == len(live_terms))
@@ -218,31 +217,10 @@ def wand_topk(
 
     # ---- round 2: decode only blocks that can still matter ----
     # ub(t,b) + sum_{t'!=t} gmax(t') >= theta  <=>  ub + (gsum - gmax(t)) >= theta
-    gmax_col = F.create_map(
-        *[x for t in live_terms for x in (F.lit(t), F.lit(gmax[t]))]
-    )[F.col("term")]
-    sel = meta.filter(F.col("ub") + (F.lit(gsum) - gmax_col) >= F.lit(theta))
+    sel = meta.filter(F.col("ub") + (F.lit(gsum) - _by_term(gmax)) >= F.lit(theta))
     cand = _decode(sel).select("rowid").distinct()
 
-    # ---- verify: exact scores from row postings for candidates ----
-    post = (
-        index.postings_for_terms(live_terms)
-        .join(cand, "rowid", "inner")
-        .select("term", "rowid", "space", "tf0", "tf1", "dl")
-    )
-    exact = post.select(
-        "rowid", "space", contrib.alias("c"), F.lit(1).alias("one")
-    ).groupBy("rowid").agg(
-        F.first("space").alias("space"),
-        F.sum("c").alias("score"),
-        F.count("one").alias("nterms"),
-    )
-    if mode == "and":
-        exact = exact.filter(F.col("nterms") == len(live_terms))
-    out = (
-        exact.select("rowid", "space", (-F.col("score")).alias("score"))
-        .orderBy("score", "rowid")
-        .limit(k)
-    )
+    # ---- verify: the exhaustive scorer on the candidates ----
+    out = _exact_topk(index, idfs, k, mode, w_title, w_body, cand)
     meta.unpersist()
     return out

@@ -44,7 +44,6 @@ def run_housekeeping(
     spelling_max_lag: int = 100,
     stopword_cutoff: float = 0.01,
     compact_segments_over: int | None = 8,
-    rebuild_blocks: bool = True,
 ) -> dict:
     """One housekeeping pass — the analog of the reference's idle-cycle
     doHousekeeping (indexer.go:476-487, every 5 min): rebuild the spelling
@@ -66,7 +65,7 @@ def run_housekeeping(
     if compact_segments_over is not None and len(index.segments) > compact_segments_over:
         index = compact_index(spark, index_root)
         did["compacted"] = True
-    if rebuild_blocks and not index.segments and not has_blocks(index):
+    if not index.segments and not has_blocks(index):
         build_blocks(index)
         did["blocks"] = True
     if spelling_lag(index, min_count=spelling_min_count) >= spelling_max_lag:

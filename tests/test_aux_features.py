@@ -156,9 +156,11 @@ class TestSpelling:
 
 class TestResultCache:
     def test_cache_hit_status_and_timeout_not_cached(self, aux_index):
-        from letarette_spark.query.cache import CachingSearcher, ResultCache
+        from letarette_spark.query.cache import ResultCache, cache_key
 
-        s = CachingSearcher(Searcher(aux_index, stopwords=frozenset(), synonyms={}))
+        s = Searcher(
+            aux_index, stopwords=frozenset(), synonyms={}, cache=ResultCache()
+        )
         r1 = s.search("parser", limit=5)
         assert r1.status == "index_hit" and r1.hits
         r2 = s.search("parser", limit=5)
@@ -166,21 +168,23 @@ class TestResultCache:
         assert [h.doc_id for h in r2.hits] == [h.doc_id for h in r1.hits]
 
         # timeouts are never cached (reference caches only err == nil)
-        slow = CachingSearcher(
-            Searcher(aux_index, timeout=0.001, stopwords=frozenset(), synonyms={})
+        slow = Searcher(
+            aux_index, timeout=0.001, stopwords=frozenset(), synonyms={},
+            cache=ResultCache(),
         )
         t1 = slow.search("zephyr", limit=5)
         assert t1.status == "timeout"
         assert slow.cache.get(
-            __import__("letarette_spark.query.cache", fromlist=["cache_key"]).cache_key(
-                "zephyr", None, 5, 0
-            )
+            cache_key("zephyr", None, 5, 0, autocorrect=True, snippets=True, strategy=1)
         ) is None
+        assert slow.cache.stats()["entries"] == 0
 
     def test_doc_invalidation(self, aux_index):
-        from letarette_spark.query.cache import CachingSearcher, ResultCache
+        from letarette_spark.query.cache import ResultCache
 
-        s = CachingSearcher(Searcher(aux_index, stopwords=frozenset(), synonyms={}))
+        s = Searcher(
+            aux_index, stopwords=frozenset(), synonyms={}, cache=ResultCache()
+        )
         r1 = s.search("parser", limit=5)
         dropped = s.cache.invalidate_doc(r1.hits[0].doc_id)
         assert dropped == 1
@@ -190,9 +194,11 @@ class TestResultCache:
         """Calls differing only in snippets/autocorrect/strategy must not
         share a cache entry (a snippet-bearing result would otherwise be
         served to a caller that disabled snippets)."""
-        from letarette_spark.query.cache import CachingSearcher
+        from letarette_spark.query.cache import ResultCache
 
-        s = CachingSearcher(Searcher(aux_index, stopwords=frozenset(), synonyms={}))
+        s = Searcher(
+            aux_index, stopwords=frozenset(), synonyms={}, cache=ResultCache()
+        )
         with_snip = s.search("parser", limit=5, snippets=True)
         assert with_snip.status == "index_hit" and with_snip.hits[0].snippet
         no_snip = s.search("parser", limit=5, snippets=False)

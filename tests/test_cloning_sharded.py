@@ -277,6 +277,27 @@ class TestShardedSearch:
         # the invalidation is per-doc, not a blanket clear
         assert ss.cache.stats()["entries"] >= 0
 
+    @pytest.mark.parametrize("entry", ["search_df", "search", "sharded"])
+    def test_negative_offset_is_refused(self, spark, full_and_shards, entry):
+        """offset=-3 must not page from the end of the ranked hits (a
+        plain slice would return the last ranks as the page)."""
+        from letarette_spark.query.sharded import ShardedSearcher
+
+        _f, shard_roots, _by, _o = full_and_shards
+        searchers = [
+            Searcher(Index.open(spark, r, CFG), stopwords=frozenset())
+            for r in shard_roots
+        ]
+        run = {
+            "search_df": lambda: searchers[0].search_df("parser", offset=-3),
+            "search": lambda: searchers[0].search("parser", offset=-3),
+            "sharded": lambda: ShardedSearcher(searchers).search(
+                "parser", page_offset=-3
+            ),
+        }[entry]
+        with pytest.raises(ValueError, match="offset"):
+            run()
+
     def test_status_and_cap_merge(self):
         from letarette_spark.query.executor import SearchResult
 

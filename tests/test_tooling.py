@@ -10,7 +10,7 @@ import pytest
 from letarette_spark.analysis.tokenizer import AnalyzerConfig
 from letarette_spark.index.builder import Index, build_index
 from letarette_spark.index.stats import index_stats
-from letarette_spark.query.cache import CachingSearcher, ResultCache, cache_key
+from letarette_spark.query.cache import ResultCache, cache_key
 from letarette_spark.query.executor import Searcher
 from letarette_spark.sources.bulkload import load_json_docs
 
@@ -79,24 +79,24 @@ class TestResultCache:
     def test_cache_roundtrip_and_invalidation(self):
         from letarette_spark.query.executor import Hit, SearchResult
 
-        class FakeSearcher:
-            calls = 0
+        calls = []
 
-            def search(self, query, spaces=None, limit=10, offset=0, **kw):
-                self.calls += 1
-                return SearchResult([Hit("s", "d1", 1, -1.0)], 1, False)
+        def compute():
+            calls.append(1)
+            return SearchResult([Hit("s", "d1", 1, -1.0)], 1, False)
 
-        fake = FakeSearcher()
-        cs = CachingSearcher(fake, ResultCache(ttl_seconds=60))
-        r1 = cs.search("hello world")
-        r2 = cs.search('"hello" "world"'.lower())  # canonically equal
-        assert fake.calls == 1
+        cache = ResultCache(ttl_seconds=60)
+        r1 = cache.get_or_compute(cache_key("hello world", None, 10, 0), compute)
+        r2 = cache.get_or_compute(  # canonically equal
+            cache_key('"hello" "world"'.lower(), None, 10, 0), compute
+        )
+        assert len(calls) == 1
         assert r1.status == "index_hit" and r2.status == "cache_hit"
         assert [h.doc_id for h in r2.hits] == [h.doc_id for h in r1.hits]
-        dropped = cs.cache.invalidate_doc("d1")
+        dropped = cache.invalidate_doc("d1")
         assert dropped == 1
-        cs.search("hello world")
-        assert fake.calls == 2
+        cache.get_or_compute(cache_key("hello world", None, 10, 0), compute)
+        assert len(calls) == 2
 
     def test_ttl_expiry(self):
         c = ResultCache(ttl_seconds=0.0)

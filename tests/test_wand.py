@@ -191,6 +191,43 @@ def test_searcher_bag_of_words_rank_identity(blocked_index, monkeypatch):
     assert calls["wand"] == len(cases)  # fallback did not touch WAND
 
 
+def test_bag_of_words_scores_every_token_of_a_word(blocked_index, monkeypatch):
+    """A word that analyzes to several tokens contributes every token:
+    ["error-handler"] ranks exactly like ["error", "handler"] and like
+    FTS5 '"error" OR "handler"', on the WAND and the exhaustive route."""
+    from letarette_spark.query.executor import Searcher
+    from tests.fts5_oracle import Fts5Index
+    import letarette_spark.index.blocks as blocks_mod
+    import letarette_spark.query.wand as wand_mod
+
+    docs = blocked_index.docs().select("rowid", "title", "body").collect()
+    oracle = Fts5Index.build([(r["rowid"], r["title"], r["body"]) for r in docs])
+    expected = oracle.search('"error" OR "handler"', limit=10)
+    s = Searcher(blocked_index, stopwords=frozenset(), synonyms={})
+
+    def ranked(words):
+        return [
+            (r["rowid"], r["score"])
+            for r in s.search_terms_df(words, limit=10).collect()
+        ]
+
+    def boom(*a, **k):  # pragma: no cover - failure signal
+        raise AssertionError("wrong bag-of-words route")
+
+    for route in ("wand", "exhaustive"):
+        with monkeypatch.context() as m:
+            if route == "wand":
+                m.setattr(wand_mod, "exhaustive_topk", boom)
+            else:
+                m.setattr(blocks_mod, "has_blocks", lambda idx: False)
+                m.setattr(wand_mod, "wand_topk", boom)
+            got = ranked(["error-handler"])
+            assert got == ranked(["error", "handler"]), route
+        assert [r for r, _ in got] == [r for r, _ in expected], route
+        for (_, sg), (_, se) in zip(got, expected):
+            assert math.isclose(sg, se, rel_tol=1e-9, abs_tol=1e-12)
+
+
 def test_query_timeout_budget(blocked_index):
     """Reference behavior: a blown per-query budget (4s default,
     config.go:69) maps to SearchStatusTimeout with an empty result."""
