@@ -115,18 +115,14 @@ def _read_tree(spark: SparkSession, base_dir: str, glob: str, schema):
 
 DEFAULT_BUCKETS = 64
 DEFAULT_DOC_BUCKETS = 16  # rowid-hash partition dirs for the docs table
-# prefix posting aggregates: the analog of the reference's prefix='2 3 4'
-# B-trees (1_init.up.sql:96) — per (plen, prefix, rowid) pre-merged
-# position lists so wildcard queries never scan the full postings table
-DEFAULT_PREFIX_LENGTHS = (2, 3, 4)
-PREFIX_BUCKETS = 64  # partition dirs keyed by hash of the FIRST character
+PREFIX_BUCKETS = 64  # prefix-tail dirs keyed by hash of the FIRST character
 # bumped whenever the on-disk layout changes shape; Index.open refuses any
 # other version, so readers never branch on older layouts
-LAYOUT_VERSION = 4
+LAYOUT_VERSION = 5
 
 PREFIX_SCHEMA = T.StructType(
     [
-        T.StructField("prefix", T.StringType(), False),
+        T.StructField("term", T.StringType(), False),
         T.StructField("rowid", T.LongType(), False),
         T.StructField("space", T.StringType(), True),
         T.StructField("dl", T.IntegerType(), False),
@@ -205,145 +201,44 @@ def write_term_stats(
     return int(row["nterms"]), int(row["sum_dl"])
 
 
-def prefix_bucket_expr(prefix_col: str = "prefix", n_buckets: int = PREFIX_BUCKETS):
-    """Partition bucket for prefix aggregates: hash of the FIRST character
-    only. An exact prefix lookup prunes to one dir, and a query SHORTER
-    than the smallest configured length (e.g. 'a*' with lengths 2 3 4) can
-    still prune to the one dir holding every 'a?' group."""
+def prefix_bucket_expr(term_col: str = "term"):
+    """Partition bucket of the prefix tail: hash of the FIRST character
+    only, so every term a wildcard can match — whatever the prefix's
+    length — lives in one dir."""
     return F.pmod(
         F.conv(
-            F.substring(F.md5(F.substring(F.col(prefix_col), 1, 1)), 1, 8), 16, 10
+            F.substring(F.md5(F.substring(F.col(term_col), 1, 1)), 1, 8), 16, 10
         ).cast("long"),
-        F.lit(n_buckets),
+        F.lit(PREFIX_BUCKETS),
     ).cast("int")
 
 
-def prefix_bucket_of(prefix: str, n_buckets: int) -> int:
-    return bucket_of(prefix[:1], n_buckets)
+def prefix_bucket_of(prefix: str) -> int:
+    return bucket_of(prefix[:1], PREFIX_BUCKETS)
 
 
-def build_prefix_aggregates(
-    spark: SparkSession,
-    postings: DataFrame,
-    dest: str,
-    prefix_lengths: tuple[int, ...],
-    files_per_len: int = 8,
-    n_buckets: int = PREFIX_BUCKETS,
-) -> None:
-    """Materialize per-(plen, prefix, rowid) merged position lists.
+def write_term_ranges(postings: DataFrame, dest: str, n_files: int) -> None:
+    """Write the term-range tail that serves every wildcard query: the
+    postings' (term, rowid, space, dl, pos0, pos1) laid out by first-char
+    bucket (dest/pb=<bucket>/) and sorted by (term, rowid) within files.
 
-    Reference analog: FTS5's prefix indexes store, for each configured
-    prefix length, the merged doclist of every term sharing that prefix
-    (1_init.up.sql:96 `prefix='2 3 4'`) — paying ~1x the postings volume
-    per length at build time so prefix queries are O(result), not
-    O(index), at any vocabulary size.
-
-    Layout: dest/plen=L/pb=<first-char bucket>/..., rows sorted by
-    (prefix, rowid) within files — exact dir pruning for a prefix lookup
-    plus parquet row-group min/max pruning on the prefix column. One
-    postings scan + one shuffle for all lengths (explode by length).
-
-    plen=-1 is the TERM-RANGE TAIL: the full postings laid out by
-    (first-char bucket, term-sorted) with prefix = the whole term. It
-    serves wildcard queries LONGER than the largest configured length
-    (FTS5's equivalent is a term-range scan of its term-ordered main
-    B-tree; our main postings are hash-bucketed for exact-term pruning,
-    so prefix range scans get their own ordered copy): one partition
-    dir + a startswith row-group-pruned scan, O(matching postings) at
-    any vocabulary size — the dictionary-expansion/full-scan fallback
-    is unreachable for tail-enabled indexes."""
-    # two independent writes land under dest (the plen=-1 tail and the
-    # merged plen=L dirs): a stale dest from a crashed earlier attempt
-    # must not leak rows, so start from an empty dir like the old single
-    # mode-overwrite write did
-    if os.path.exists(dest):
-        shutil.rmtree(dest)
-    # The tail (plen=-1) groups by (prefix=term, rowid) — already UNIQUE
-    # in postings (one row per term per live doc; chunk-disjoint builds
-    # and tombstoned compaction both preserve it), so its "aggregation"
-    # is the identity: skip the groupBy exchange and the collect_list
-    # machinery outright and lay the rows out with ONE hash exchange.
-    # The tail is the largest slice (full postings volume vs. the
-    # prefix-merged lengths), so this halves the shuffled bytes.
-    tail = postings.select(
-        F.col("term").alias("prefix"), "rowid", "space", "dl", "pos0", "pos1"
-    ).withColumn("pb", prefix_bucket_expr("prefix", n_buckets))
-
-    def _write_tail():
-        (
-            # 2x files_per_len: the tail is the full-postings-volume write
-            # and was the narrowest stage of the build (measured 2.0s at 8
-            # tasks vs 1.4s at 16 for 1.26M postings); pb dirs still cap
-            # the per-query file count at tasks-per-dir
-            tail.repartition(max(2, files_per_len * 2), "pb")
-            .sortWithinPartitions("pb", "prefix", "rowid")
-            .write.partitionBy("pb")
-            .mode("overwrite")
-            .parquet(os.path.join(dest, "plen=-1"))
-        )
-
-    if not prefix_lengths:
-        _write_tail()
-        return
-    # NOTE(r6): a one-exchange variant (hash on (plen, pb) + in-partition
-    # sort + Arrow adjacent-row merge) was implemented and A/B-measured
-    # 2x SLOWER than this two-exchange groupBy form (6.7s vs 3.4s at
-    # 1.26M postings): converting 3.8M list-typed rows through the
-    # Python boundary costs more than the second exchange + collect_list
-    # buffering. Kept the JVM groupBy.
-    lens = F.array(*[F.lit(int(x)) for x in prefix_lengths])
-    rows = (
-        postings.select(
-            F.explode(lens).alias("plen"),
-            "term", "rowid", "space", "dl", "pos0", "pos1",
-        )
-        .filter(F.length("term") >= F.col("plen"))
-        .select(
-            "plen",
-            F.expr("substring(term, 1, plen)").alias("prefix"),
-            "rowid", "space", "dl", "pos0", "pos1",
-        )
-        .groupBy("plen", "prefix", "rowid")
-        .agg(
-            F.first("space").alias("space"),
-            F.first("dl").alias("dl"),
-            F.array_sort(F.flatten(F.collect_list("pos0"))).alias("pos0"),
-            F.array_sort(F.flatten(F.collect_list("pos1"))).alias("pos1"),
-        )
-        .withColumn("pb", prefix_bucket_expr("prefix", n_buckets))
+    FTS5 answers `par*` with a term-range scan of its term-ordered B-tree;
+    the reference's prefix='2 3 4' indexes (1_init.up.sql:96) only speed
+    that scan up. Our main postings are hash-bucketed for exact-term
+    pruning, so range scans get this ordered copy: a lookup reads one
+    partition dir with a startswith predicate that row-group-prunes on the
+    sorted term column — O(matching postings) at any prefix length and
+    vocabulary size. Postings hold one row per (term, rowid), so the
+    layout needs one hash exchange and no aggregation."""
+    (
+        postings.select("term", "rowid", "space", "dl", "pos0", "pos1")
+        .withColumn("pb", prefix_bucket_expr())
+        .repartition(max(2, n_files), "pb")
+        .sortWithinPartitions("pb", "term", "rowid")
+        .write.partitionBy("pb")
+        .mode("overwrite")
+        .parquet(dest)
     )
-    # The tail write and the merged-lengths write are independent jobs
-    # over independent scans into disjoint plen dirs: overlap them
-    # (guide §2.6 back-fill). The merged write goes to a sibling staging
-    # dir (NOT a concurrent append into dest — two committers listing
-    # the same target would race) and its plen=L dirs are renamed in
-    # after both jobs succeed; the caller's pf_tmp -> pf_dir swap
-    # remains the atomic commit.
-    lens_tmp = dest + ".lens"
-    if os.path.exists(lens_tmp):
-        shutil.rmtree(lens_tmp)
-
-    def _write_lens():
-        (
-            rows.repartition(
-                max(2, files_per_len * len(prefix_lengths)), "plen", "pb"
-            )
-            .sortWithinPartitions("plen", "pb", "prefix", "rowid")
-            .write.partitionBy("plen", "pb")
-            .mode("overwrite")
-            .parquet(lens_tmp)
-        )
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        futs = [pool.submit(_write_tail), pool.submit(_write_lens)]
-        for f in futs:
-            f.result()
-    for name in os.listdir(lens_tmp):
-        if name.startswith("plen="):
-            os.rename(
-                os.path.join(lens_tmp, name), os.path.join(dest, name)
-            )
-    shutil.rmtree(lens_tmp, ignore_errors=True)
 
 
 def tokenize_postings(docs: DataFrame, config: AnalyzerConfig) -> DataFrame:
@@ -455,7 +350,6 @@ def build_index(
     files_per_chunk: int | None = None,
     n_buckets: int = DEFAULT_BUCKETS,
     docs_buckets: int = DEFAULT_DOC_BUCKETS,
-    prefix_lengths: tuple[int, ...] = DEFAULT_PREFIX_LENGTHS,
     verify_sha256: bool = False,
     snapshot_retention: int = 1,
     fail_after_chunks: int | None = None,  # test hook: simulate a killed build
@@ -496,7 +390,6 @@ def build_index(
         "chunk_size": chunk_size,
         "n_buckets": n_buckets,
         "docs_buckets": docs_buckets,
-        "prefix_lengths": sorted(int(x) for x in prefix_lengths),
         "analyzer": config.key(),
     }
     lineage = man.start_plan(plan)
@@ -591,14 +484,9 @@ def build_index(
         return stats
 
     def _finalize_prefix():
-        if not prefix_lengths:
-            return
         pf_tmp = os.path.join(root, "prefix.tmp")
         pf_dir = os.path.join(root, "prefix")
-        build_prefix_aggregates(
-            spark, postings_all, pf_tmp, tuple(prefix_lengths),
-            files_per_len=max(2, files_per_chunk // 2),
-        )
+        write_term_ranges(postings_all, pf_tmp, max(4, files_per_chunk))
         if os.path.exists(pf_dir):
             shutil.rmtree(pf_dir)
         os.replace(pf_tmp, pf_dir)
@@ -635,9 +523,6 @@ def build_index(
             "weights": {"title": TITLE_WEIGHT, "body": BODY_WEIGHT},
             "postings_buckets": n_buckets,
             "docs_buckets": docs_buckets,
-            "prefix_lengths": sorted(int(x) for x in prefix_lengths),
-            "prefix_buckets": PREFIX_BUCKETS if prefix_lengths else None,
-            "prefix_tail": bool(prefix_lengths),
             "snapshot_retention": max(1, int(snapshot_retention)),
             "plan": plan,
         }
@@ -827,86 +712,37 @@ class Index:
         """Term-pruned postings scan over the live (overlaid) view."""
         return self.postings().filter(self._terms_cond(terms))
 
-    # ---- prefix aggregates (wildcard fast path) ----
-    def _prefix_base(self, plen: int, prefix: str) -> DataFrame:
-        """Base-snapshot prefix-aggregate rows for one (plen, first-char
-        bucket) partition dir; empty frame when the dir does not exist."""
-        npb = self.meta["prefix_buckets"]
-        d = os.path.join(
-            self.prefix_base_dir(),
-            f"plen={plen}",
-            f"pb={prefix_bucket_of(prefix, npb)}",
-        )
+    # ---- wildcard lookups: the prefix tail ----
+    def _prefix_base(self, prefix: str) -> DataFrame:
+        """Base-snapshot prefix-tail rows of the first-char bucket dir that
+        holds every term starting with *prefix* (the whole tail for an
+        empty prefix); empty frame when that dir does not exist."""
+        d = self.prefix_base_dir()
+        if prefix:
+            d = os.path.join(d, f"pb={prefix_bucket_of(prefix)}")
         if not os.path.isdir(d):
             return self.spark.createDataFrame([], PREFIX_SCHEMA)
-        return self.spark.read.schema(PREFIX_SCHEMA).parquet(d)
+        return _parquet_or_empty(self.spark, d, d, PREFIX_SCHEMA)
 
-    def prefix_rows(self, prefix: str) -> DataFrame | None:
+    def prefix_rows(self, prefix: str) -> DataFrame:
         """Hit rows (rowid, space, dl, pos0, pos1) for the wildcard query
-        `prefix*`, served from the build-time prefix aggregates — the
-        analog of the reference's prefix='2 3 4' B-trees
-        (1_init.up.sql:96). O(result) at any vocabulary size: one
-        partition dir + row-group-pruned prefix predicate, never a full
-        postings scan. A rowid may appear on several rows (one per
-        matching term) with disjoint positions; the caller merges them in
-        whatever exchange it already runs.
-
-        Returns None for an empty prefix or an index built with
-        prefix_lengths=() — the caller falls back to dictionary expansion.
+        `prefix*`, one per matching (term, rowid): one partition dir of
+        the prefix tail plus a startswith predicate that row-group-prunes
+        on its sorted term column — never the postings table or the
+        dictionary, O(matching postings) at any prefix length. A rowid
+        repeats when several terms match it, with disjoint positions; the
+        caller merges them in whatever exchange it already runs.
 
         Delta segments are overlaid at query time: base rows for
         tombstoned rowids are dropped and the (compaction-bounded)
         segment postings contribute their startswith-filtered rows —
-        upserts never rewrite the base aggregates."""
-        lengths = self.meta.get("prefix_lengths") or []
-        if not lengths or not prefix:
-            return None
-        L = len(prefix)
+        upserts never rewrite the base tail."""
         cols = ["rowid", "space", "dl", "pos0", "pos1"]
-        if L in lengths:
-            base = (
-                self._prefix_base(L, prefix)
-                .filter(F.col("prefix") == prefix)
-                .select(*cols)
-            )
-        elif L < min(lengths):
-            # shorter than every aggregate (e.g. 'a*' with lengths 2 3 4):
-            # all length-Lp groups extending the prefix live in ONE
-            # first-char dir; terms shorter than Lp that match (at most a
-            # handful, e.g. the bare term 'a') come from the dictionary +
-            # an exact-pruned base-postings lookup
-            Lp = min(x for x in lengths if x > L)
-            base = (
-                self._prefix_base(Lp, prefix)
-                .filter(F.col("prefix").startswith(prefix))
-                .select(*cols)
-            )
-            short_terms = [
-                r["term"]
-                for r in self.term_stats()
-                .filter(
-                    F.col("term").startswith(prefix) & (F.length("term") < Lp)
-                )
-                .select("term")
-                .collect()
-            ]
-            if short_terms:
-                base = base.unionByName(
-                    self._postings_base()
-                    .filter(self._terms_cond(short_terms))
-                    .select(*cols)
-                )
-        else:
-            # longer than every aggregate: the plen=-1 term-range tail
-            # (prefix = whole term, first-char dir, term-sorted files) —
-            # one partition dir + startswith row-group pruning,
-            # O(matching postings) at any vocabulary size
-            base = (
-                self._prefix_base(-1, prefix)
-                .filter(F.col("prefix").startswith(prefix))
-                .select(*cols)
-            )
-
+        base = (
+            self._prefix_base(prefix)
+            .filter(F.col("term").startswith(prefix))
+            .select(*cols)
+        )
         if not self.segments:
             return base
 

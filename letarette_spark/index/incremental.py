@@ -51,10 +51,10 @@ from letarette_spark.index.builder import (
     POSTINGS_SCHEMA,
     Index,
     _read_tree,
-    build_prefix_aggregates,
     term_aggregate,
     tokenize_postings,
     write_postings,
+    write_term_ranges,
     write_term_stats,
 )
 from letarette_spark.index.manifest import Manifest, data_dirs
@@ -320,7 +320,7 @@ def upsert_documents(
     docs.unpersist()
 
     # post-commit GC of unreferenced dirs + stale WAND blocks. The prefix
-    # aggregates are NOT rewritten on the upsert path (prefix_rows overlays
+    # tail is NOT rewritten on the upsert path (prefix_rows overlays
     # segments at query time) — keep the base dir alive.
     _gc_stale_dirs(root, keep_rel=set(data_dirs(index.meta).values()))
     _drop_blocks(root)
@@ -340,10 +340,11 @@ def compact_index(spark: SparkSession, root: str) -> Index:
         return index
     par = spark.sparkContext.defaultParallelism
     ver = int(index.meta.get("snapshot_id", 0)) + 1
-    post_rel, docs_rel, ts_rel = (
+    post_rel, docs_rel, ts_rel, pf_rel = (
         f"postings.v{ver}",
         f"docs.v{ver}",
         f"term_stats.v{ver}",
+        f"prefix.v{ver}",
     )
     db = index.meta["docs_buckets"]
 
@@ -365,22 +366,19 @@ def compact_index(spark: SparkSession, root: str) -> Index:
         spark, os.path.join(root, post_rel), "chunk=*", POSTINGS_READ_SCHEMA
     )
 
-    # rebuild the prefix aggregates from the compacted postings (the one
-    # place that pays the index-wide scan; upserts only overlay)
-    prefix_lengths = tuple(index.meta["prefix_lengths"])
-    meta = dict(index.meta, segments=[], blocks=None)
-    if prefix_lengths:
-        meta["prefix_dir"] = f"prefix.v{ver}"
-        build_prefix_aggregates(
-            spark, new_post, os.path.join(root, meta["prefix_dir"]),
-            prefix_lengths, files_per_len=max(2, par // 4),
-        )
+    # rebuild the prefix tail from the compacted postings (the one place
+    # that pays the index-wide scan; upserts only overlay)
+    write_term_ranges(new_post, os.path.join(root, pf_rel), max(4, par // 2))
 
     new_docs = _read_tree(
         spark, os.path.join(root, docs_rel), "chunk=*", DOCS_SCHEMA
     )
+    meta = dict(index.meta, segments=[], blocks=None)
     meta.update(_full_stats(spark, new_post, new_docs, os.path.join(root, ts_rel)))
-    meta.update(postings_dir=post_rel, docs_dir=docs_rel, term_stats_dir=ts_rel)
+    meta.update(
+        postings_dir=post_rel, docs_dir=docs_rel, term_stats_dir=ts_rel,
+        prefix_dir=pf_rel,
+    )
     meta.pop("snapshot_id", None)
     man.commit_snapshot(meta)  # ← the atomic commit point
     index.meta = man.state

@@ -29,7 +29,7 @@ Semantics vs ``Searcher.search`` (db_search.go:60-96, search_1.sql):
   path (both analyze a query with executor.py's ``analyze_query``, which
   applies no stopword rule to exclude phrases).
 * **multi-word ("quoted") phrases and wildcards** are not batchable
-  (they need position arrays / prefix aggregates per query); they raise
+  (they need position arrays / a prefix-tail scan per query); they raise
   by default or are skipped with ``on_unsupported="skip"``.
 
 Phrase df is computed in-plan over the live postings view BEFORE space
@@ -58,8 +58,7 @@ from pyspark.sql import types as T
 from letarette_spark.query.executor import analyze_query, bm25_term, idf_col
 
 # Above this many distinct terms an isin() pruning predicate stops paying
-# for itself (the engine's wildcard expansion batches at the same size) —
-# switch to the full-scan shuffle join on term.
+# for itself — switch to the full-scan shuffle join on term.
 MAX_PRUNED_TERMS = 4096
 
 QTERMS_SCHEMA = T.StructType([

@@ -27,8 +27,9 @@ instances inside the NEAR window.
 
 Scale notes: a query is two bounded actions.
   1. One candidate action. Every include and exclude phrase position is a
-     term-pruned postings scan (bucket-dir + row-group pruning) or a
-     prefix-aggregate scan; the scans are tagged and unioned, and ONE
+     term-pruned postings scan (bucket-dir + row-group pruning) or, for a
+     wildcard, a startswith scan of one prefix-tail dir
+     (Index.prefix_rows); the scans are tagged and unioned, and ONE
      exchange groups them by rowid (a one-word, one-term query has unique
      rowids and needs none). Each phrase's index-wide df is observed
      (DataFrame.observe) on that grouped frame, beneath the match filters
@@ -65,7 +66,6 @@ B = 0.75
 NEAR_RANGE = 15          # db_search.go:46-50
 DEFAULT_CAP = 10000      # config.go:70
 MAX_PAGE_LIMIT = 500     # searcher.go:51-52
-MAX_PREFIX_EXPANSION = 4096  # wildcard terms resolved via the dictionary
 
 _HITS_SCHEMA = T.StructType(
     [
@@ -209,16 +209,13 @@ class Searcher:
         """Hit rows of one phrase position as (rowid, space, dl, tf0, tf1,
         pos0, pos1). ``terms`` are the position's alternatives (synonym
         expansion: union of posting lists, like FTS5 colocated tokens), or
-        the prefix of a wildcard. With ``counts`` only the per-column hit
-        counts are kept (an exact term's positions are never read; a
-        wildcard's counts are its position-list sizes); otherwise only the
-        positions. A rowid repeats when several terms match it."""
+        the prefix of a wildcard, read from the prefix tail at any length.
+        With ``counts`` only the per-column hit counts are kept (an exact
+        term's positions are never read; a wildcard's counts are its
+        position-list sizes); otherwise only the positions. A rowid repeats
+        when several terms match it."""
         if wildcard:
-            # prefix: build-time prefix aggregates (the analog of the
-            # reference's prefix='2 3 4' B-trees, 1_init.up.sql:96)
             rows = self.index.prefix_rows(terms[0])
-            if rows is None:
-                rows = self._expand_prefix(terms[0])
             tf0, tf1 = F.size("pos0"), F.size("pos1")
         else:
             # exact terms: bucket partition-dir pruning + term pushdown
@@ -234,28 +231,6 @@ class Searcher:
             "rowid", "space", "dl",
             tf[0].alias("tf0"), tf[1].alias("tf1"),
             pos[0].alias("pos0"), pos[1].alias("pos1"),
-        )
-
-    def _expand_prefix(self, prefix: str) -> DataFrame:
-        """Indexes without prefix aggregates: resolve the full expansion
-        from the range-partitioned dictionary (startswith-pruned scan),
-        then read postings in exact-pruned batches — bucket-dir + term
-        row-group pruning per batch, never an unpruned postings scan."""
-        expansion = [
-            r["term"]
-            for r in self.index.term_stats()
-            .filter(F.col("term").startswith(prefix))
-            .select("term")
-            .collect()
-        ]
-        if not expansion:
-            return self.index.postings().filter(F.lit(False))
-        return _reduce(
-            DataFrame.unionByName,
-            (
-                self.index.postings_for_terms(expansion[j : j + MAX_PREFIX_EXPANSION])
-                for j in range(0, len(expansion), MAX_PREFIX_EXPANSION)
-            ),
         )
 
     # ------------------------------------------------------------------

@@ -17,7 +17,7 @@ import pytest
 
 from letarette_spark.analysis.tokenizer import AnalyzerConfig
 from letarette_spark.index.builder import (
-    LAYOUT_VERSION, PREFIX_BUCKETS, Index, build_index,
+    LAYOUT_VERSION, Index, build_index,
 )
 from letarette_spark.index.incremental import compact_index, upsert_documents
 from letarette_spark.query.executor import Searcher
@@ -515,8 +515,8 @@ def test_randomized_upsert_sequences_match_rebuild_oracle(spark, tmp_path):
 # ---- the layout contract: Index.open is the one gate ----
 
 @pytest.fixture(scope="module")
-def layout4_root(spark, tmp_path_factory):
-    root = str(tmp_path_factory.mktemp("layout4"))
+def built_root(spark, tmp_path_factory):
+    root = str(tmp_path_factory.mktemp("built"))
     build_index(spark, _docs_df(spark, BASE), root, config=CFG,
                 n_build_partitions=2, chunk_size=2)
     return root
@@ -532,10 +532,12 @@ def _tree(root):
     return out
 
 
-@pytest.mark.parametrize("stamp", [3, None], ids=["layout3", "no_layout"])
-def test_stale_layout_is_refused_everywhere(spark, layout4_root, tmp_path, stamp):
+@pytest.mark.parametrize(
+    "stamp", [3, 4, None], ids=["layout3", "layout4", "no_layout"]
+)
+def test_stale_layout_is_refused_everywhere(spark, built_root, tmp_path, stamp):
     root = str(tmp_path / "stale")
-    shutil.copytree(layout4_root, root)
+    shutil.copytree(built_root, root)
     current = os.path.join(root, "_manifest", "CURRENT.json")
     with open(current) as f:
         state = json.load(f)
@@ -563,27 +565,14 @@ def test_stale_layout_is_refused_everywhere(spark, layout4_root, tmp_path, stamp
     assert _tree(root) == before
 
 
-@pytest.mark.parametrize("prefix_lengths", [(2, 3, 4), ()], ids=["default", "none"])
-def test_build_stamps_every_key_readers_index(
-    spark, layout4_root, tmp_path, prefix_lengths
-):
+def test_build_stamps_every_key_readers_index(spark, built_root):
     """Readers index these manifest keys without a default, so every build
     must stamp them."""
-    if prefix_lengths:
-        root = layout4_root  # built with the default prefix_lengths
-    else:
-        root = str(tmp_path / "noprefix")
-        build_index(spark, _docs_df(spark, BASE), root, config=CFG,
-                    n_build_partitions=2, chunk_size=2, prefix_lengths=())
-    meta = Index.open(spark, root).meta
+    meta = Index.open(spark, built_root).meta
     assert meta["layout"] == LAYOUT_VERSION
     assert AnalyzerConfig.from_key(meta["analyzer"]) == CFG
     for key in ("ndocs", "sum_dl", "nterms", "postings_buckets", "docs_buckets"):
         assert isinstance(meta[key], int) and meta[key] >= 1, (key, meta[key])
-    assert meta["prefix_lengths"] == list(prefix_lengths)
-    assert meta["prefix_tail"] is bool(prefix_lengths)
-    if prefix_lengths:
-        assert meta["prefix_buckets"] == PREFIX_BUCKETS
 
 
 @pytest.mark.parametrize(

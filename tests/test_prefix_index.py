@@ -1,12 +1,12 @@
-"""Prefix posting aggregates — the analog of the reference's prefix='2 3 4'
-B-trees (1_init.up.sql:96).
+"""The prefix tail — the term-range copy of the postings that serves every
+wildcard query (FTS5's term-range scan; the reference's prefix='2 3 4'
+indexes, 1_init.up.sql:96, only speed that scan up).
 
-Wildcard queries must (a) stay rank-identical to live FTS5 through the
-aggregates, (b) agree exactly with the dictionary-expansion fallback
-(an index built with prefix_lengths=()), (c) scan ONLY prefix-aggregate
-files for covered lengths — never the postings table — and (d) stay
-correct through upserts (query-time segment overlay) and compaction
-(aggregate rebuild under a versioned dir)."""
+Wildcard queries must (a) stay rank-identical to live FTS5 at every prefix
+length, (b) read ONLY one first-character dir of the tail — never the
+postings table or the dictionary — and (c) stay correct through upserts
+(query-time segment overlay) and compaction (tail rewrite under a
+versioned dir)."""
 
 from __future__ import annotations
 
@@ -28,9 +28,9 @@ from tests.fts5_oracle import Fts5Index
 
 N_DOCS = 120
 
-# covered lengths (2-4), below-minimum (digit survives reduction), above
-# -maximum (dictionary-expansion fallback), wildcard inside NEAR / phrase /
-# exclude combinations, and 1-byte letters (reduced away -> no hits)
+# prefixes of 1 (a digit survives reduction) to 7 characters, wildcards
+# inside NEAR / phrase / exclude combinations, and 1-byte letters (reduced
+# away -> no hits)
 QUERIES = [
     "pa*", "par*", "pars*", "bu*", "er*", "to*", "tok*",
     "4*", "p*", "e*",
@@ -41,24 +41,13 @@ QUERIES = [
 @pytest.fixture(scope="module")
 def built(spark, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("pfx_index"))
-    root_plain = str(tmp_path_factory.mktemp("pfx_index_plain"))
     corpus = spark.createDataFrame(generate_corpus_local(N_DOCS, seed=11))
     docs = docs_from_corpus(corpus)
     cfg = AnalyzerConfig(mode="porter")
     build_index(spark, docs, root, config=cfg, n_build_partitions=4, chunk_size=2)
-    build_index(
-        spark, docs, root_plain, config=cfg, n_build_partitions=4, chunk_size=2,
-        prefix_lengths=(),
-    )
     local = docs.select("rowid", "title", "body").collect()
     oracle = Fts5Index.build([(r["rowid"], r["title"], r["body"]) for r in local])
-    return (
-        Index.open(spark, root, cfg),
-        Index.open(spark, root_plain, cfg),
-        oracle,
-        docs,
-        cfg,
-    )
+    return Index.open(spark, root, cfg), oracle, docs, cfg
 
 
 def _results(searcher, q, limit=10):
@@ -69,67 +58,90 @@ def _results(searcher, q, limit=10):
     return rows, total
 
 
-@pytest.mark.parametrize("query", QUERIES)
-def test_wildcard_rank_identity_and_fallback_agreement(built, query):
-    index, plain, oracle, _docs, _cfg = built
-    got, total = _results(Searcher(index), query)
-    # (a) live FTS5
+def _assert_fts5(searcher, oracle, query):
+    got, total = _results(searcher, query)
     match = compile_match_string(reduce_phrases(parse_query(query)))
     expected = oracle.search(match, limit=10) if match else []
+    assert total == (len(oracle.match_rowids(match)) if match else 0), query
     assert [r for r, _ in got] == [r for r, _ in expected], query
     for (_, sg), (_, se) in zip(got, expected):
         assert math.isclose(sg, se, rel_tol=1e-9, abs_tol=1e-12), query
-    # (b) dictionary-expansion fallback build agrees exactly
-    got_p, total_p = _results(Searcher(plain), query)
-    assert got == got_p and total == total_p, query
 
 
-def test_covered_lengths_scan_only_prefix_files(built):
-    """The core scale property: a covered-length prefix lookup reads ONLY
-    the one (plen, first-char-bucket) aggregate dir — no postings files,
-    no dictionary scan — regardless of how many terms match."""
-    index, _plain, _oracle, _docs, _cfg = built
-    for p in ("pa", "par", "pars", "bu", "err"):
+def _tail_dirs(files):
+    """The prefix-tail partition dirs a scan reads."""
+    return {f.rsplit("/", 1)[0] for f in files}
+
+
+@pytest.mark.parametrize("query", QUERIES)
+def test_wildcard_rank_identity_and_fallback_agreement(built, query):
+    """Live FTS5 rank identity and hit count for every wildcard shape."""
+    index, oracle, _docs, _cfg = built
+    _assert_fts5(Searcher(index), oracle, query)
+
+
+def test_every_length_reads_one_tail_dir(built):
+    """The core scale property: a wildcard of any length reads ONLY the
+    one first-character dir of the prefix tail — no postings files, no
+    dictionary scan — regardless of how many terms match."""
+    index, _oracle, _docs, _cfg = built
+    for p in ("4", "pa", "par", "pars", "parse", "tokeniz"):
         files = index.prefix_rows(p).inputFiles()
         assert files, p
-        assert all(f"/prefix/plen={len(p)}/" in f for f in files), (p, files)
+        assert all("/prefix/pb=" in f for f in files), (p, files)
+        assert not any("/postings/" in f or "/term_stats" in f for f in files)
+        assert len(_tail_dirs(files)) == 1, (p, files)
+    # an empty prefix matches every term: the whole tail
+    n_postings = index.postings().count()
+    assert index.prefix_rows("").count() == n_postings
 
 
-def test_below_minimum_length_prunes_to_one_bucket_dir(built):
-    """'4*' (digit survives phrase reduction): served from the plen=2
-    aggregates of ONE first-char bucket dir plus an exact-pruned postings
-    lookup for bare short terms — never a full postings scan."""
-    index, _plain, _oracle, _docs, _cfg = built
-    files = index.prefix_rows("4").inputFiles()
-    pfx = [f for f in files if "/prefix/" in f]
-    assert pfx and all("/prefix/plen=2/" in f for f in pfx)
-    # the one aggregate dir, not all of them
-    dirs = {f.rsplit("/", 1)[0] for f in pfx}
-    assert len(dirs) == 1
+CYRILLIC = (
+    "парус пароход парк память пакет правда право привет прибор книга "
+    "кошка корабль мир море молоко Парк"
+).split()
 
 
-def test_longer_than_max_serves_from_term_range_tail(built):
-    """5+-char prefixes read ONLY the plen=-1 term-range tail of the one
-    first-char bucket dir — never the postings table, never the
-    dictionary, at ANY number of completions."""
-    index, plain, _oracle, _docs, _cfg = built
-    for p in ("parse", "tokeniz"):
-        df = index.prefix_rows(p)
-        assert df is not None, p
-        files = df.inputFiles()
-        assert files, p
-        assert all("/prefix/plen=-1/" in f for f in files), (p, files)
-        dirs = {f.rsplit("/", 1)[0] for f in files}
-        assert len(dirs) == 1, (p, dirs)
-    assert index.prefix_rows("") is None
-    # a pre-tail index (prefix_lengths=()) still reports no coverage
-    assert plain.prefix_rows("parse") is None
+def test_non_ascii_first_character(spark, tmp_path_factory):
+    """The tail dir is picked twice — md5 of the first character in Python
+    (prefix_bucket_of) and in Spark (prefix_bucket_expr). For a multibyte
+    first character both must name the same dir: a one-rune wildcard
+    (2 UTF-8 bytes, so it survives phrase reduction) and a three-rune one
+    read one pb= dir and match live FTS5."""
+    import random
+
+    rng = random.Random(5)
+    rows = [
+        (d, " ".join(rng.choices(CYRILLIC, k=2)),
+         " ".join(rng.choices(CYRILLIC, k=rng.randint(4, 12))))
+        for d in range(1, 41)
+    ]
+    docs = spark.createDataFrame(
+        [
+            {"doc_id": f"d{d}", "rowid": d, "space": "m", "title": t,
+             "body": b, "alive": True}
+            for d, t, b in rows
+        ]
+    )
+    cfg = AnalyzerConfig(mode="porter")
+    root = str(tmp_path_factory.mktemp("pfx_cyrillic"))
+    build_index(spark, docs, root, config=cfg, n_build_partitions=2,
+                chunk_size=2)
+    index = Index.open(spark, root, cfg)
+    oracle = Fts5Index.build(rows)
+    for p in ("п", "пар", "к"):
+        files = index.prefix_rows(p).inputFiles()
+        assert files and all("/prefix/pb=" in f for f in files), (p, files)
+        assert len(_tail_dirs(files)) == 1, (p, files)
+    s = Searcher(index)
+    for q in ("п*", "пар*", "к*", "мо* -море", "пар* кош*"):
+        _assert_fts5(s, oracle, q)
 
 
 def test_huge_expansion_stays_on_tail(spark, tmp_path_factory):
-    """The round-4 corner: a 5-char prefix with >4096 completions. The
-    tail serves it from one partition dir (no dictionary collect, no
-    full postings scan) and the result matches a direct computation."""
+    """A 5-char prefix with >4096 completions: the tail serves it from one
+    partition dir (no dictionary collect, no full postings scan) and the
+    result matches a direct computation."""
     import pyspark.sql.functions as F
 
     n_terms, n_docs = 4200, 64
@@ -156,8 +168,8 @@ def test_huge_expansion_stays_on_tail(spark, tmp_path_factory):
 
     hits = index.prefix_rows("zqxwv")
     files = hits.inputFiles()
-    assert files and all("/prefix/plen=-1/" in f for f in files), files
-    assert len({f.rsplit("/", 1)[0] for f in files}) == 1
+    assert files and all("/prefix/pb=" in f for f in files), files
+    assert len(_tail_dirs(files)) == 1
     # every doc contains zqxwv* terms; tf == its share of the terms
     got = {}
     for r in hits.collect():
@@ -176,11 +188,11 @@ def test_huge_expansion_stays_on_tail(spark, tmp_path_factory):
 
 def test_wildcards_through_upsert_and_compaction(spark, tmp_path_factory, built):
     """Segment overlay: upserts must be visible to wildcard queries without
-    rewriting the base aggregates; compaction rebuilds them under a
-    versioned dir and drops the old one."""
+    rewriting the base tail; compaction rewrites it under a versioned dir
+    and drops the old one."""
     from letarette_spark.index.incremental import compact_index, upsert_documents
 
-    _i, _p, _o, docs, cfg = built
+    _i, _o, docs, cfg = built
     root = str(tmp_path_factory.mktemp("pfx_upsert"))
     # upsert batches carry the documented (doc_id, space, title, body,
     # alive) columns — build the base without the optional sha column so
@@ -232,12 +244,7 @@ def test_wildcards_through_upsert_and_compaction(spark, tmp_path_factory, built)
     def check(index):
         s = Searcher(index)
         for q in ("pa*", "par*", "pars*", "patt*", "4*"):
-            got, _t = _results(s, q)
-            match = compile_match_string(reduce_phrases(parse_query(q)))
-            exp = oracle.search(match, limit=10)
-            assert [r for r, _ in got] == [r for r, _ in exp], q
-            for (_, sg), (_, se) in zip(got, exp):
-                assert math.isclose(sg, se, rel_tol=1e-9, abs_tol=1e-12), q
+            _assert_fts5(s, oracle, q)
 
     check(idx)
 
@@ -248,6 +255,7 @@ def test_wildcards_through_upsert_and_compaction(spark, tmp_path_factory, built)
     assert os.path.isdir(os.path.join(root, idx2.meta["prefix_dir"]))
     assert not os.path.isdir(os.path.join(root, "prefix"))  # old dir GC'd
     check(idx2)
-    # compacted aggregates serve covered lengths from prefix files only
+    # the compacted tail serves wildcards from one of its dirs only
     files = idx2.prefix_rows("par").inputFiles()
-    assert files and all(f"/{idx2.meta['prefix_dir']}/plen=3/" in f for f in files)
+    assert files and all(f"/{idx2.meta['prefix_dir']}/pb=" in f for f in files)
+    assert len(_tail_dirs(files)) == 1

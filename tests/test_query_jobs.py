@@ -37,6 +37,8 @@ CLASSES = [
     ("not", "rotor -wing", None),
     ("phrase", '"error handler"', None),
     ("prefix", "pars*", None),
+    ("prefix2", "ro*", None),
+    ("prefix6", "handl*", None),
     ("nohit", '"zzqq xxvv"', None),
     ("spaced", "rotor", ["alpha"]),
 ]

@@ -115,7 +115,7 @@ def run_one(cpus: int, corpus_dir: str) -> dict:
 # Engine query suite for --mode query. Every query shape of
 # Searcher.search_df: rare single term (df <= cap), common term
 # (df > cap), NEAR conjunction, NOT exclusion, exact phrase, and
-# prefix-aggregate wildcard.
+# prefix-tail wildcard.
 QUERY_SUITE = [
     ("single_rare_wand", "zephyr"),
     ("single_common", "value"),
