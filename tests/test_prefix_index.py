@@ -80,18 +80,39 @@ def test_wildcard_rank_identity_and_fallback_agreement(built, query):
     _assert_fts5(Searcher(index), oracle, query)
 
 
-def test_every_length_reads_one_tail_dir(built):
-    """The core scale property: a wildcard of any length reads ONLY the
-    one first-character dir of the prefix tail — no postings files, no
-    dictionary scan — regardless of how many terms match."""
+def _assert_one_tail_dir(index, p):
+    """A wildcard of any length reads ONLY the one first-character dir of
+    the prefix tail — no postings files, no dictionary scan."""
+    files = index.prefix_rows(p).inputFiles()
+    assert files, p
+    assert all("/prefix/pb=" in f for f in files), (p, files)
+    assert not any("/postings/" in f or "/term_stats" in f for f in files)
+    assert len(_tail_dirs(files)) == 1, (p, files)
+
+
+def test_covered_lengths_scan_only_prefix_files(built):
+    """The core scale property: a 2-4-char prefix lookup (the lengths the
+    reference indexes with prefix='2 3 4') reads ONLY its one tail dir,
+    regardless of how many terms match."""
     index, _oracle, _docs, _cfg = built
-    for p in ("4", "pa", "par", "pars", "parse", "tokeniz"):
-        files = index.prefix_rows(p).inputFiles()
-        assert files, p
-        assert all("/prefix/pb=" in f for f in files), (p, files)
-        assert not any("/postings/" in f or "/term_stats" in f for f in files)
-        assert len(_tail_dirs(files)) == 1, (p, files)
-    # an empty prefix matches every term: the whole tail
+    for p in ("pa", "par", "pars", "bu", "err"):
+        _assert_one_tail_dir(index, p)
+
+
+def test_below_minimum_length_prunes_to_one_bucket_dir(built):
+    """'4*' (a digit survives phrase reduction): a 1-char prefix is served
+    from the same one bucket dir — no dictionary collect, no postings
+    scan."""
+    index, _oracle, _docs, _cfg = built
+    _assert_one_tail_dir(index, "4")
+
+
+def test_longer_than_max_serves_from_term_range_tail(built):
+    """5+-char prefixes read ONLY the one first-char dir of the term-range
+    tail; an empty prefix matches every term and reads the whole tail."""
+    index, _oracle, _docs, _cfg = built
+    for p in ("parse", "tokeniz"):
+        _assert_one_tail_dir(index, p)
     n_postings = index.postings().count()
     assert index.prefix_rows("").count() == n_postings
 
