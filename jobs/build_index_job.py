@@ -55,9 +55,12 @@ def main() -> None:
 
     from letarette_spark.analysis.tokenizer import AnalyzerConfig
     from letarette_spark.index.builder import Index, build_index
+    from letarette_spark.session import ENGINE_CONF
     from letarette_spark.sources.corpus import docs_from_corpus, generate_corpus
 
-    spark = SparkSession.builder.appName("letarette_build").getOrCreate()
+    spark = SparkSession.builder.appName("letarette_build").config(
+        map=ENGINE_CONF
+    ).getOrCreate()
     cfg = AnalyzerConfig(mode=args.mode)
 
     if args.synthesize:

@@ -44,8 +44,11 @@ def main() -> None:
 
     from letarette_spark.index.builder import Index
     from letarette_spark.query.executor import Searcher
+    from letarette_spark.session import ENGINE_CONF
 
-    spark = SparkSession.builder.appName("letarette_search").getOrCreate()
+    spark = SparkSession.builder.appName("letarette_search").config(
+        map=ENGINE_CONF
+    ).getOrCreate()
     idx = Index.open(spark, args.root)
     # warm the session OUTSIDE the budget, like the reference's
     # long-lived worker: touch the index (file listing/metadata) AND fork

@@ -8,6 +8,14 @@ per-term groupBy. A Zipf head term's doclist simply spans many partitions,
 each producing its own blocks: term-frequency skew cannot concentrate on a
 single reducer (SURVEY.md §7 watch-list #5).
 
+Blocks are cut by one Arrow kernel per batch (``block_batches``, run
+through mapInArrow): term starts from one ``pc.not_equal``, block starts
+at position-in-term modulo block_size, the block-max columns from
+``np.maximum/minimum.reduceat``, and each payload column LEB128-encoded
+once and cut into per-block binary values by offset buffers
+(varbyte.encode_u64_runs). No Python runs per term or per block. A term
+cut by a batch boundary restarts its blocks in the next batch.
+
 Columns:
   term, n, min_rowid, max_rowid         block membership + range pruning
   tf0_max, tf1_max, dl_min              block-max score-bound ingredients
@@ -20,16 +28,17 @@ postings; blocks serve pure BM25 scoring (the WAND path).
 from __future__ import annotations
 
 import os
+import shutil
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import functions as F
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import types as T
 
 from letarette_spark.index.builder import Index
 from letarette_spark.index.manifest import Manifest
-from letarette_spark.index.varbyte import encode_ints, encode_rowids
+from letarette_spark.index.varbyte import encode_u64_runs, rowid_deltas
 
 DEFAULT_BLOCK_SIZE = 128
 
@@ -50,39 +59,57 @@ BLOCKS_SCHEMA = T.StructType(
 )
 
 
+def _binary_runs(values: np.ndarray, starts: np.ndarray) -> pa.Array:
+    data, offsets = encode_u64_runs(values, starts)
+    return pa.BinaryArray.from_buffers(
+        pa.binary(),
+        len(starts),
+        [None, pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(data)],
+    )
+
+
+def block_batches(
+    batches: Iterator[pa.RecordBatch], block_size: int
+) -> Iterator[pa.RecordBatch]:
+    """Cut (term, rowid, tf0, tf1, dl) batches, sorted by (term, rowid),
+    into blocks of <= block_size rows per term (BLOCKS_SCHEMA rows)."""
+    for batch in batches:
+        n = batch.num_rows
+        if n == 0:
+            continue
+        term = batch.column("term")
+        rowid, tf0, tf1, dl = (
+            batch.column(c).to_numpy(zero_copy_only=False).astype(np.int64)
+            for c in ("rowid", "tf0", "tf1", "dl")
+        )
+        new_term = np.ones(n, dtype=bool)
+        new_term[1:] = pc.not_equal(term[1:], term[:-1]).to_numpy(
+            zero_copy_only=False
+        )
+        term_starts = np.flatnonzero(new_term)
+        pos = np.arange(n) - term_starts[np.cumsum(new_term) - 1]
+        starts = np.flatnonzero(pos % block_size == 0)
+        ends = np.append(starts[1:], n)
+        yield pa.RecordBatch.from_arrays(
+            [
+                term.take(starts),
+                pa.array((ends - starts).astype(np.int32)),
+                pa.array(rowid[starts]),
+                pa.array(rowid[ends - 1]),
+                pa.array(np.maximum.reduceat(tf0, starts).astype(np.int32)),
+                pa.array(np.maximum.reduceat(tf1, starts).astype(np.int32)),
+                pa.array(np.minimum.reduceat(dl, starts).astype(np.int32)),
+                _binary_runs(rowid_deltas(rowid, starts), starts),
+                _binary_runs(tf0, starts),
+                _binary_runs(tf1, starts),
+                _binary_runs(dl, starts),
+            ],
+            names=BLOCKS_SCHEMA.fieldNames(),
+        )
+
+
 def build_blocks(index: Index, block_size: int = DEFAULT_BLOCK_SIZE) -> str:
     """Materialize the blocks table from current postings. Returns path."""
-
-    def make(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            out = []
-            # rows arrive sorted by (term, rowid) within the partition
-            for term, g in pdf.groupby("term", sort=False):
-                rowids = g["rowid"].to_numpy(dtype=np.int64)
-                tf0 = g["tf0"].to_numpy(dtype=np.int64)
-                tf1 = g["tf1"].to_numpy(dtype=np.int64)
-                dls = g["dl"].to_numpy(dtype=np.int64)
-                for s in range(0, len(rowids), block_size):
-                    e = min(s + block_size, len(rowids))
-                    out.append(
-                        {
-                            "term": term,
-                            "n": e - s,
-                            "min_rowid": int(rowids[s]),
-                            "max_rowid": int(rowids[e - 1]),
-                            "tf0_max": int(tf0[s:e].max()),
-                            "tf1_max": int(tf1[s:e].max()),
-                            "dl_min": int(dls[s:e].min()),
-                            "rowids": encode_rowids(rowids[s:e]),
-                            "tf0s": encode_ints(tf0[s:e]),
-                            "tf1s": encode_ints(tf1[s:e]),
-                            "dls": encode_ints(dls[s:e]),
-                        }
-                    )
-            yield pd.DataFrame(out, columns=[f.name for f in BLOCKS_SCHEMA.fields])
-
     spark = index.spark
     par = max(2, spark.sparkContext.defaultParallelism // 2)
     blocks = (
@@ -90,13 +117,11 @@ def build_blocks(index: Index, block_size: int = DEFAULT_BLOCK_SIZE) -> str:
         .select("term", "rowid", "tf0", "tf1", "dl")
         .repartitionByRange(par, "term", "rowid")
         .sortWithinPartitions("term", "rowid")
-        .mapInPandas(make, schema=BLOCKS_SCHEMA)
+        .mapInArrow(lambda it: block_batches(it, block_size), schema=BLOCKS_SCHEMA)
     )
     out = os.path.join(index.root, "blocks")
     tmp = out + ".tmp"
     blocks.write.mode("overwrite").parquet(tmp)
-    import shutil
-
     if os.path.exists(out):
         shutil.rmtree(out)
     os.replace(tmp, out)

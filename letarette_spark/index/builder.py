@@ -31,7 +31,8 @@ from dataclasses import dataclass
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -179,26 +180,27 @@ def write_term_stats(
     term_stats: DataFrame, path: str, n_files: int
 ) -> tuple[int, int]:
     """Write a term_stats table range-partitioned and sorted by term
-    (lookups range-prune by term) and return its (nterms, sum_dl) from one
-    aggregate over the written table — sum over terms of cnt == total
-    tokens == sum over docs of dl, so no postings scan is needed.
+    (lookups range-prune by term) and return its (nterms, sum_dl), observed
+    on the write itself: sum over terms of cnt == total tokens == sum over
+    docs of dl, so neither a postings scan nor a read-back is needed.
 
     repartitionByRange SAMPLES its child: without the persist the upstream
     would run twice (sample pass + write pass). The frame is one row per
-    term — cheap to hold."""
+    term — cheap to hold. The observation sits above the range exchange,
+    so only the write pass counts rows."""
+    obs = Observation()
     ts = term_stats.persist()
     try:
         ts.repartitionByRange(max(2, n_files), "term").sortWithinPartitions(
             "term"
+        ).observe(
+            obs,
+            F.count(F.lit(1)).alias("nterms"),
+            F.coalesce(F.sum("cnt"), F.lit(0)).alias("sum_dl"),
         ).write.mode("overwrite").parquet(path)
     finally:
         ts.unpersist()
-    spark = term_stats.sparkSession
-    row = spark.read.schema(TERM_STATS_SCHEMA).parquet(path).agg(
-        F.count(F.lit(1)).alias("nterms"),
-        F.coalesce(F.sum("cnt"), F.lit(0)).alias("sum_dl"),
-    ).collect()[0]
-    return int(row["nterms"]), int(row["sum_dl"])
+    return int(obs.get["nterms"]), int(obs.get["sum_dl"])
 
 
 def prefix_bucket_expr(term_col: str = "term"):
@@ -403,6 +405,9 @@ def build_index(
         2, spark.sparkContext.defaultParallelism // 2
     )
 
+    # the build's pool threads run with the caller's local properties (job
+    # group, description) and tags
+    inherit = inheritable_thread_target(spark)
     built = skipped = 0
     for ci, start in enumerate(chunk_ids):
         if str(ci) in done:
@@ -461,7 +466,7 @@ def build_index(
         # back-fill behavior). Chunk commit (record_chunk) only after
         # BOTH succeed — resume semantics unchanged.
         with ThreadPoolExecutor(max_workers=2) as pool:
-            futs = [pool.submit(_write_docs), pool.submit(_write_postings)]
+            futs = [pool.submit(inherit(f)) for f in (_write_docs, _write_postings)]
             for f in futs:
                 f.result()
         man.record_chunk(ci, {"parts": parts, "status": "done"})
@@ -505,9 +510,9 @@ def build_index(
     # finalize leaves tmp dirs and an uncommitted manifest exactly as
     # the sequential form did.
     with ThreadPoolExecutor(max_workers=3) as pool:
-        f_ts = pool.submit(_finalize_term_stats)
-        f_pf = pool.submit(_finalize_prefix)
-        f_nd = pool.submit(_finalize_ndocs)
+        f_ts = pool.submit(inherit(_finalize_term_stats))
+        f_pf = pool.submit(inherit(_finalize_prefix))
+        f_nd = pool.submit(inherit(_finalize_ndocs))
         nterms, sum_dl = f_ts.result()
         f_pf.result()
         ndocs = f_nd.result()

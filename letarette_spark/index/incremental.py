@@ -42,11 +42,10 @@ import os
 import re
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from letarette_spark.index.builder import (
-    DOCS_SCHEMA,
     POSTINGS_READ_SCHEMA,
     POSTINGS_SCHEMA,
     Index,
@@ -177,14 +176,12 @@ def _merged_stats(
 
 
 def _full_stats(
-    spark: SparkSession, postings: DataFrame, docs: DataFrame, ts_path: str
+    spark: SparkSession, postings: DataFrame, ndocs: int, ts_path: str
 ) -> dict:
-    """Full recompute from *postings* and *docs* (compaction / huge
-    batches)."""
+    """Full recompute from *postings* (compaction / huge batches)."""
     nterms, sum_dl = write_term_stats(
         term_aggregate(postings), ts_path, spark.sparkContext.defaultParallelism // 2
     )
-    ndocs = docs.filter(F.col("alive")).count()
     return {"ndocs": ndocs, "sum_dl": sum_dl, "nterms": nterms}
 
 
@@ -238,15 +235,23 @@ def upsert_documents(
     if "content_sha256" in docs.columns:
         keep.append("content_sha256")
     db = index.meta["docs_buckets"]
-    # same rowid-bucket layout as the base: point lookups prune segments
+    # same rowid-bucket layout as the base: point lookups prune segments.
+    # The batch's size and alive count are observed on this write
+    sizes = Observation()
     (
         docs.select(*keep)
+        .observe(
+            sizes,
+            F.count(F.lit(1)).alias("n"),
+            F.count_if(F.col("alive")).alias("alive"),
+        )
         .withColumn("rb", F.pmod(F.col("rowid"), F.lit(db)).cast("int"))
         .write.partitionBy("rb")
         .mode("overwrite")
         .parquet(os.path.join(root, seg_rel["docs"]))
     )
-    docs.select("rowid").distinct().write.mode("overwrite").parquet(
+    # a duplicate rowid is harmless to the left-anti overlays: no distinct
+    docs.select("rowid").write.mode("overwrite").parquet(
         os.path.join(root, seg_rel["tombstones"])
     )
     par = spark.sparkContext.defaultParallelism
@@ -263,26 +268,27 @@ def upsert_documents(
     ver = int(index.meta.get("snapshot_id", 0)) + 1
     ts_new_rel = f"term_stats.v{ver}"
     ts_path = os.path.join(root, ts_new_rel)
-    batch_rowids = [
-        r["rowid"]
-        for r in docs.select("rowid").distinct().limit(MERGE_MAX_BATCH + 1).collect()
-    ]
+    # the batch's keys in one collect, bounded by the observed batch size:
+    # the rowids to subtract and the doc_ids whose cached results go stale
+    small = sizes.get["n"] <= MERGE_MAX_BATCH
+    keys = docs.select("rowid", "doc_id").collect() if small else []
     new_segments = index.segments + [seg_rel]
-    if len(batch_rowids) <= MERGE_MAX_BATCH:
+    if small:
         # merge runs against the PRE-batch snapshot (docs_for_rowids must
         # see the replaced versions, not the new segment)
         stats = _merged_stats(
             spark,
             index,
             os.path.join(root, seg_rel["postings"]),
-            batch_rowids,
-            alive_add=docs.filter(F.col("alive")).count(),
+            sorted({r["rowid"] for r in keys}),
+            alive_add=sizes.get["alive"],
             ts_path=ts_path,
         )
     else:
         index.meta = dict(index.meta, segments=new_segments)
         index.invalidate()  # overlay must see the new segment
-        stats = _full_stats(spark, index.postings(), index.docs(), ts_path)
+        ndocs = index.docs().filter(F.col("alive")).count()
+        stats = _full_stats(spark, index.postings(), ndocs, ts_path)
 
     meta = dict(index.meta)
     meta.update(stats)
@@ -301,22 +307,14 @@ def upsert_documents(
     man.commit_snapshot(meta)  # ← the atomic commit point
     index.meta = man.state
     index.invalidate()
-    if caches:
-        # per-docID result-cache invalidation (cache.go:183-185). The
-        # doc_id list is bounded like batch_rowids; a huge batch clears.
-        ids = [
-            r["doc_id"]
-            for r in docs.select("doc_id")
-            .distinct()
-            .limit(MERGE_MAX_BATCH + 1)
-            .collect()
-        ]
-        for c in caches:
-            if len(ids) > MERGE_MAX_BATCH:
-                c.clear()
-            else:
-                for d in ids:
-                    c.invalidate_doc(d)
+    # per-docID result-cache invalidation (cache.go:183-185); a batch too
+    # large to collect clears the caches
+    for c in caches:
+        if small:
+            for d in {r["doc_id"] for r in keys}:
+                c.invalidate_doc(d)
+        else:
+            c.clear()
     docs.unpersist()
 
     # post-commit GC of unreferenced dirs + stale WAND blocks. The prefix
@@ -354,8 +352,10 @@ def compact_index(spark: SparkSession, root: str) -> Index:
         index.n_buckets,
         max(2, par // 2),
     )
+    alive = Observation()
     (
         index.docs()
+        .observe(alive, F.count_if(F.col("alive")).alias("ndocs"))
         .withColumn("rb", F.pmod(F.col("rowid"), F.lit(db)).cast("int"))
         .repartition(max(2, min(par, db)), "rb")
         .write.partitionBy("rb")
@@ -370,11 +370,12 @@ def compact_index(spark: SparkSession, root: str) -> Index:
     # that pays the index-wide scan; upserts only overlay)
     write_term_ranges(new_post, os.path.join(root, pf_rel), max(4, par // 2))
 
-    new_docs = _read_tree(
-        spark, os.path.join(root, docs_rel), "chunk=*", DOCS_SCHEMA
-    )
     meta = dict(index.meta, segments=[], blocks=None)
-    meta.update(_full_stats(spark, new_post, new_docs, os.path.join(root, ts_rel)))
+    meta.update(
+        _full_stats(
+            spark, new_post, alive.get["ndocs"], os.path.join(root, ts_rel)
+        )
+    )
     meta.update(
         postings_dir=post_rel, docs_dir=docs_rel, term_stats_dir=ts_rel,
         prefix_dir=pf_rel,

@@ -4,6 +4,11 @@ FTS5 stores doclists as varint-encoded rowid deltas inside segment B-tree
 pages (public file-format documentation); our blocks table stores the same
 delta+varbyte idea as parquet binary columns. Encode/decode run inside
 Arrow batches — no per-row Python in the scan path.
+
+There is one LEB128 encoder, ``encode_u64_runs``: it encodes a whole
+column once and cuts the bytes into runs (the blocks builder's per-block
+binary values). ``encode_u64`` and the ``encode_rowids``/``encode_ints``
+helpers are its one-run case.
 """
 
 from __future__ import annotations
@@ -16,35 +21,46 @@ _MASK = _U64(0x7F)
 _CONT = np.uint8(0x80)
 
 
-def encode_u64(values: np.ndarray) -> bytes:
-    """LEB128-encode an array of uint64."""
-    v = values.astype(_U64, copy=True)
+def encode_u64_runs(
+    values: np.ndarray, starts: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """LEB128-encode uint64 *values* once and cut the bytes into runs.
+
+    *starts* holds each run's first index (ascending, the first one 0).
+    Returns (data, offsets): run i's bytes are data[offsets[i]:offsets[i+1]]
+    — an Arrow binary column's value and offset buffers. A run's bytes are
+    the concatenation of its values' encodings, so they equal encoding the
+    run on its own."""
+    v = np.asarray(values, dtype=_U64)
+    starts = np.asarray(starts, dtype=np.int64)
     n = len(v)
-    if n == 0:
-        return b""
     # byte length per value: ceil(bits/7), min 1
-    bits = np.zeros(n, dtype=np.int64)
-    tmp = v.copy()
+    lengths = np.ones(n, dtype=np.int64)
+    tmp = v >> _SEVEN
     while True:
         nz = tmp > 0
         if not nz.any():
             break
-        bits[nz] += 1
+        lengths[nz] += 1
         tmp = tmp >> _SEVEN
-    lengths = np.maximum(bits, 1)
     ends = np.cumsum(lengths)
-    out = np.zeros(int(ends[-1]), dtype=np.uint8)
-    starts = ends - lengths
+    out = np.zeros(int(ends[-1]) if n else 0, dtype=np.uint8)
+    byte_starts = ends - lengths
     work = v.copy()
-    max_len = int(lengths.max())
-    for j in range(max_len):
+    for j in range(int(lengths.max()) if n else 0):
         sel = lengths > j
-        pos = starts[sel] + j
         byte = (work[sel] & _MASK).astype(np.uint8)
         cont = (j + 1 < lengths[sel]).astype(np.uint8) * _CONT
-        out[pos] = byte | cont
+        out[byte_starts[sel] + j] = byte | cont
         work[sel] = work[sel] >> _SEVEN
-    return out.tobytes()
+    # byte offset of every value index, index n (an empty last run) included
+    bounds = np.append(byte_starts, len(out))
+    return out, np.append(bounds[starts], len(out))
+
+
+def encode_u64(values: np.ndarray) -> bytes:
+    """LEB128-encode an array of uint64 (one run)."""
+    return encode_u64_runs(values, np.zeros(1, dtype=np.int64))[0].tobytes()
 
 
 def decode_u64(data: bytes) -> np.ndarray:
@@ -69,13 +85,19 @@ def decode_u64(data: bytes) -> np.ndarray:
 _BIAS = np.uint64(1 << 63)
 
 
+def rowid_deltas(rowids: np.ndarray, starts: np.ndarray) -> np.ndarray:
+    """Sorted signed-64 rowids -> bias-to-unsigned -> deltas that restart
+    at each run start (a run's first delta is its biased rowid)."""
+    u = np.asarray(rowids, dtype=np.int64).astype(_U64) + _BIAS
+    deltas = u.copy()
+    deltas[1:] -= u[:-1]
+    deltas[starts] = u[starts]
+    return deltas
+
+
 def encode_rowids(rowids: np.ndarray) -> bytes:
     """Sorted signed-64 rowids -> bias-to-unsigned -> delta -> varbyte."""
-    u = rowids.astype(np.int64).astype(_U64) + _BIAS
-    deltas = np.empty_like(u)
-    deltas[0] = u[0]
-    deltas[1:] = u[1:] - u[:-1]
-    return encode_u64(deltas)
+    return encode_u64(rowid_deltas(rowids, np.zeros(min(1, len(rowids)), np.int64)))
 
 
 def decode_rowids(data: bytes) -> np.ndarray:

@@ -10,6 +10,29 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Engine defaults every session of this package starts with: get_spark and
+# the spark-submit jobs (jobs/*.py) apply the same mapping.
+ENGINE_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "4096",
+    "spark.sql.parquet.compression.codec": "zstd",
+    # A read lists a dir level with more sub-dirs than this threshold
+    # (Spark's default: 32) through a parallel Spark job of up to 64 tasks.
+    # The index's own levels hold 64 dirs at default sizes (postings
+    # bucket=, prefix-tail pb=) or 16 (docs rb=), so every read of the
+    # postings, of the prefix tail or of a delta segment paid that job.
+    # Creating a read of a 600-doc index's postings tree (local[2] on a
+    # 4-CPU host) took 0.66-1.0 s wall and 1.3-3.3 s process-tree CPU
+    # through the listing job, 0.03-0.04 s of each listed serially.
+    # Levels wider than this still list in parallel, where an object
+    # store's per-call latency pays for it.
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": "64",
+}
+
 
 def get_spark(
     app_name: str = "letarette_spark",
@@ -36,16 +59,8 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
-        .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.ui.enabled", "false")
+        .config(map={**ENGINE_CONF, **(extra_conf or {})})
     )
-    for k, v in (extra_conf or {}).items():
-        b = b.config(k, v)
     return b.getOrCreate()

@@ -584,3 +584,42 @@ def test_build_rejects_nonpositive_sizes(spark, tmp_path, param):
         build_index(spark, _docs_df(spark, BASE), str(root), config=CFG,
                     **{param: 0})
     assert not root.exists()
+
+
+def _assert_stamped_totals(spark, root, ndocs):
+    """The manifest's (ndocs, nterms, sum_dl), stamped from observations
+    on the writes, equal a recount of the written term_stats and docs."""
+    from pyspark.sql import functions as F
+
+    idx = Index.open(spark, root, CFG)
+    ts = idx.term_stats().agg(
+        F.count(F.lit(1)).alias("n"), F.coalesce(F.sum("cnt"), F.lit(0)).alias("s")
+    ).collect()[0]
+    dl = idx.postings().select("rowid", "dl").distinct().agg(
+        F.coalesce(F.sum("dl"), F.lit(0)).alias("s")
+    ).collect()[0]
+    alive = idx.docs().filter(F.col("alive")).count()
+    assert (idx.meta["ndocs"], idx.meta["nterms"], idx.meta["sum_dl"]) == (
+        alive, ts["n"], ts["s"]
+    )
+    assert (alive, dl["s"]) == (ndocs, ts["s"])
+
+
+def test_stamped_totals_match_a_recount(spark, tmp_path):
+    """After a build, an upsert, a delete-only upsert and a compaction, and
+    again once every document is deleted (an empty term_stats frame)."""
+    root = str(tmp_path / "idx")
+    build_index(spark, _docs_df(spark, BASE), root, config=CFG,
+                n_build_partitions=2, chunk_size=1)
+    _assert_stamped_totals(spark, root, 4)
+    upsert_documents(spark, root, _docs_df(spark, UPDATES_1))
+    _assert_stamped_totals(spark, root, 5)
+    upsert_documents(spark, root, _docs_df(spark, [(4, "", "", False)]))
+    _assert_stamped_totals(spark, root, 4)
+    compact_index(spark, root)
+    _assert_stamped_totals(spark, root, 4)
+    gone = [(r, "", "", False) for r in (1, 2, 3, 5)]
+    upsert_documents(spark, root, _docs_df(spark, gone))
+    _assert_stamped_totals(spark, root, 0)
+    compact_index(spark, root)
+    _assert_stamped_totals(spark, root, 0)

@@ -10,7 +10,10 @@ to live FTS5, so the budget never buys a different answer."""
 from __future__ import annotations
 
 import math
+import os
 import random
+import shutil
+import string
 import uuid
 from contextlib import contextmanager
 
@@ -18,7 +21,7 @@ import pytest
 
 from letarette_spark.analysis.tokenizer import AnalyzerConfig
 from letarette_spark.index.builder import Index, build_index
-from letarette_spark.index.incremental import upsert_documents
+from letarette_spark.index.incremental import compact_index, upsert_documents
 from letarette_spark.query.executor import Searcher
 from letarette_spark.query.parser import compile_match_string, parse_query, reduce_phrases
 from tests.fts5_oracle import Fts5Index
@@ -222,3 +225,108 @@ def test_capped_df_counts_every_match(spark, clean, segmented, cls, query, space
         expected = _expected(orc, dd, query, spaces, cap=3)
         _check(got, total, expected, cls)
         assert capped == (len(expected[0]) > 3), cls
+
+
+# A vocabulary wide enough that every tree a read lists has more dirs than
+# Spark's default parallel-listing threshold (32): first characters from
+# ASCII letters, digits and Cyrillic fill > 32 prefix-tail pb= dirs, and
+# the distinct terms fill > 32 postings bucket= dirs in the base and in
+# the delta segment.
+WIDE_WORDS = [
+    c + suffix
+    for c in string.ascii_lowercase + string.digits + "абвгдежзиклмнопрстуф"
+    for suffix in ("rotor", "panel")
+]
+
+
+def _wide_docs(ids, seed):
+    rng = random.Random(seed)
+    return [
+        (i, "alpha", " ".join(rng.choices(WIDE_WORDS, k=3)),
+         " ".join(rng.choices(WIDE_WORDS, k=25)))
+        for i in ids
+    ]
+
+
+def _dirs(path, key):
+    return [d for d in os.listdir(path) if d.startswith(key + "=")]
+
+
+@pytest.fixture(scope="module")
+def wide(spark, tmp_path_factory):
+    """A base index plus one delta segment whose postings, prefix tail and
+    segment postings each hold more than 32 partition dirs."""
+    root = str(tmp_path_factory.mktemp("jobs_wide_idx"))
+    build_index(spark, _frame(spark, _wide_docs(range(1, 61), 1)), root,
+                config=CFG, n_build_partitions=1, chunk_size=1)
+    upsert_documents(spark, root, _frame(spark, _wide_docs(range(50, 71), 2)))
+    idx = Index.open(spark, root, CFG)
+    (seg,) = idx.segments
+    assert len(_dirs(os.path.join(idx.postings_base_dir(), "chunk=0"), "bucket")) > 32
+    assert len(_dirs(idx.prefix_base_dir(), "pb")) > 32
+    assert len(_dirs(os.path.join(root, seg["postings"]), "bucket")) > 32
+    return root
+
+
+def test_wide_index_reads_start_no_listing_job(spark, wide):
+    """Trees with more sub-dirs than Spark's parallel-listing threshold
+    would each cost a 64-task listing job per read; the engine conf lists
+    the index's dir levels serially, so opening the index and building
+    every read the query path uses still starts no Spark job."""
+    with _jobs(spark) as n:
+        idx = Index.open(spark, wide, CFG)
+        idx.postings()
+        idx.term_stats()
+        idx.docs()
+        idx.docs_for_rowids([3, 55, 70])
+        for prefix in ("a", "9p", "жr"):
+            idx.prefix_rows(prefix)
+        s = Searcher(idx, stopwords=frozenset(), synonyms={})
+        s._candidates([[["arotor"]], [["bpanel"]]], [False, False], [], None)
+    assert n[0] == 0, f"{n[0]} Spark jobs before the first action"
+
+
+UPSERT_JOBS = 18
+COMPACT_JOBS = 15
+
+
+def test_wide_index_write_job_budgets(spark, wide, tmp_path):
+    """Spark jobs of one 20-doc upsert (10 replaced, 5 new, 5 deleted) and
+    of the compaction after it, on a copy of the wide index: 18 for
+    upsert_documents and 15 for compact_index, as measured with serial
+    listing, one key collect per upsert and totals observed on the writes
+    (25 and 23 with parallel listing jobs, a distinct-collect, a count,
+    a second distinct-collect and a term_stats read-back)."""
+    root = str(tmp_path / "idx")
+    shutil.copytree(wide, root)
+    batch = _frame(spark, _wide_docs(list(range(40, 50)) + list(range(71, 76)), 3))
+    gone = spark.createDataFrame(
+        [{"doc_id": f"d{r}", "rowid": r, "space": "alpha", "title": None,
+          "body": None, "alive": False} for r in range(1, 6)],
+        batch.schema,
+    )
+    batch = batch.unionByName(gone)
+    batch.count()
+    with _jobs(spark) as n_upsert:
+        upsert_documents(spark, root, batch)
+    with _jobs(spark) as n_compact:
+        compact_index(spark, root)
+    assert n_upsert[0] <= UPSERT_JOBS, f"upsert ran {n_upsert[0]} Spark jobs"
+    assert n_compact[0] <= COMPACT_JOBS, f"compaction ran {n_compact[0]} Spark jobs"
+
+
+def test_build_jobs_keep_the_callers_job_group(spark, tmp_path):
+    """Every job build_index starts, its pool threads' included, carries
+    the job group set around the call."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    group = f"build-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "build job group")
+    try:
+        build_index(spark, _frame(spark, _docs(n=40)), str(tmp_path / "idx"),
+                    config=CFG, n_build_partitions=2, chunk_size=1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(tracker.getJobIdsForGroup(group)) > 2
+    assert set(tracker.getJobIdsForGroup(None)) - before == set()
