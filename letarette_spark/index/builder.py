@@ -176,6 +176,19 @@ def term_aggregate(postings: DataFrame) -> DataFrame:
     )
 
 
+def observed_write(frame: DataFrame, write, **aggs) -> dict[str, int]:
+    """Run ``write(frame)`` with the named aggregates observed on it and
+    return their values. Every aggregate here counts rows or is a
+    coalesced sum, so the values are 0 when Spark proves the plan empty and
+    drops its CollectMetrics node: the observation then completes as an
+    empty row, which ``Observation.get`` cannot convert."""
+    obs = Observation()
+    write(frame.observe(obs, *[c.alias(k) for k, c in aggs.items()]))
+    if obs._jo.getRow().length() == 0:
+        return dict.fromkeys(aggs, 0)
+    return {k: int(v) for k, v in obs.get.items()}
+
+
 def write_term_stats(
     term_stats: DataFrame, path: str, n_files: int
 ) -> tuple[int, int]:
@@ -188,19 +201,43 @@ def write_term_stats(
     would run twice (sample pass + write pass). The frame is one row per
     term — cheap to hold. The observation sits above the range exchange,
     so only the write pass counts rows."""
-    obs = Observation()
     ts = term_stats.persist()
     try:
-        ts.repartitionByRange(max(2, n_files), "term").sortWithinPartitions(
-            "term"
-        ).observe(
-            obs,
-            F.count(F.lit(1)).alias("nterms"),
-            F.coalesce(F.sum("cnt"), F.lit(0)).alias("sum_dl"),
-        ).write.mode("overwrite").parquet(path)
+        got = observed_write(
+            ts.repartitionByRange(max(2, n_files), "term").sortWithinPartitions(
+                "term"
+            ),
+            lambda d: d.write.mode("overwrite").parquet(path),
+            nterms=F.count(F.lit(1)),
+            sum_dl=F.coalesce(F.sum("cnt"), F.lit(0)),
+        )
     finally:
         ts.unpersist()
-    return int(obs.get["nterms"]), int(obs.get["sum_dl"])
+    return got["nterms"], got["sum_dl"]
+
+
+def docs_bucket_expr(docs_buckets: int):
+    """Rowid-bucket dir of a doc row: rb = pmod(rowid, docs_buckets)."""
+    return F.pmod(F.col("rowid"), F.lit(docs_buckets)).cast("int")
+
+
+def write_docs(docs: DataFrame, path: str, docs_buckets: int) -> tuple[int, int]:
+    """Write doc rows in the rowid-bucket layout every reader assumes
+    (path/rb=<pmod(rowid, docs_buckets)>/): point lookups by rowid (the
+    upsert's old-version fetch, the page fetch) read only their keys'
+    dirs. Returns the (rows, alive) counts observed on the write. A caller
+    that wants one file per bucket hash-repartitions by docs_bucket_expr
+    first; the upsert writes its small batch without an exchange."""
+    got = observed_write(
+        docs,
+        lambda d: d.withColumn("rb", docs_bucket_expr(docs_buckets))
+        .write.partitionBy("rb")
+        .mode("overwrite")
+        .parquet(path),
+        rows=F.count(F.lit(1)),
+        alive=F.count_if(F.col("alive")),
+    )
+    return got["rows"], got["alive"]
 
 
 def prefix_bucket_expr(term_col: str = "term"):
@@ -241,6 +278,27 @@ def write_term_ranges(postings: DataFrame, dest: str, n_files: int) -> None:
         .mode("overwrite")
         .parquet(dest)
     )
+
+
+def write_term_tables(
+    postings: DataFrame, ts_path: str, prefix_path: str, n_files: int
+) -> tuple[int, int]:
+    """Write the two tables derived from a whole postings frame, term_stats
+    and the prefix tail, and return term_stats' (nterms, sum_dl). The two
+    writes are independent scans into disjoint dirs: they run as
+    concurrent jobs, so each one's straggler tail back-fills the other's
+    cores (Spark schedules concurrent jobs FIFO). Both threads carry the
+    caller's job group and tags."""
+    inherit = inheritable_thread_target(postings.sparkSession)
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        ts = pool.submit(inherit(
+            lambda: write_term_stats(term_aggregate(postings), ts_path, n_files)
+        ))
+        pf = pool.submit(inherit(
+            lambda: write_term_ranges(postings, prefix_path, max(4, n_files))
+        ))
+        pf.result()
+        return ts.result()
 
 
 def tokenize_postings(docs: DataFrame, config: AnalyzerConfig) -> DataFrame:
@@ -429,17 +487,17 @@ def build_index(
         # docs laid out by rowid-hash dirs (rb): point lookups by rowid
         # (upsert old-version subtraction, top-k metadata joins) prune to
         # the target buckets instead of scanning the whole docs table.
+        # The chunk's alive count is observed on this write.
         def _write_docs(chunk_docs=chunk_docs, docs_dir=docs_dir):
-            (
-                chunk_docs.select(*keep)
-                .withColumn(
-                    "rb", F.pmod(F.col("rowid"), F.lit(docs_buckets)).cast("int")
-                )
-                .repartition(max(2, min(files_per_chunk, docs_buckets)), "rb")
-                .write.partitionBy("rb")
-                .mode("overwrite")
-                .parquet(docs_dir)
+            _rows, alive = write_docs(
+                chunk_docs.select(*keep).repartition(
+                    max(2, min(files_per_chunk, docs_buckets)),
+                    docs_bucket_expr(docs_buckets),
+                ),
+                docs_dir,
+                docs_buckets,
             )
+            return alive
 
         # Head-term skew in the bucketed layout is bounded: one term is one
         # bucket slice, and buckets >> tasks average the rest out.
@@ -466,56 +524,33 @@ def build_index(
         # back-fill behavior). Chunk commit (record_chunk) only after
         # BOTH succeed — resume semantics unchanged.
         with ThreadPoolExecutor(max_workers=2) as pool:
-            futs = [pool.submit(inherit(f)) for f in (_write_docs, _write_postings)]
-            for f in futs:
-                f.result()
-        man.record_chunk(ci, {"parts": parts, "status": "done"})
+            f_docs = pool.submit(inherit(_write_docs))
+            f_post = pool.submit(inherit(_write_postings))
+            f_post.result()
+            alive = f_docs.result()
+        man.record_chunk(ci, {"parts": parts, "status": "done", "alive": alive})
         built += 1
 
     # ---- finalize: global stats + snapshot commit ----
+    # term_stats and the prefix tail land in tmp dirs and replace the old
+    # ones only once both are written; the snapshot commits after that, so
+    # an interrupted finalize leaves tmp dirs and an uncommitted manifest
     postings_all = _read_tree(
         spark, os.path.join(root, "postings"), "chunk=*", POSTINGS_READ_SCHEMA
     )
-    ts_dir = os.path.join(root, "term_stats")
-
-    def _finalize_term_stats():
-        ts_tmp = os.path.join(root, "term_stats.tmp")
-        stats = write_term_stats(
-            term_aggregate(postings_all), ts_tmp, files_per_chunk
-        )
-        if os.path.exists(ts_dir):
-            shutil.rmtree(ts_dir)
-        os.replace(ts_tmp, ts_dir)
-        return stats
-
-    def _finalize_prefix():
-        pf_tmp = os.path.join(root, "prefix.tmp")
-        pf_dir = os.path.join(root, "prefix")
-        write_term_ranges(postings_all, pf_tmp, max(4, files_per_chunk))
-        if os.path.exists(pf_dir):
-            shutil.rmtree(pf_dir)
-        os.replace(pf_tmp, pf_dir)
-
-    def _finalize_ndocs():
-        docs_all = _read_tree(
-            spark, os.path.join(root, "docs"), "chunk=*", DOCS_SCHEMA
-        )
-        return docs_all.filter(F.col("alive")).count()
-
-    # The three finalize jobs are independent (two disjoint postings
-    # scans + one docs scan, into disjoint output dirs / a scalar):
-    # overlap them so each job's straggler tail back-fills the others
-    # (guide §2.6). The snapshot commit below happens only after ALL
-    # futures resolve, so crash atomicity is unchanged — an interrupted
-    # finalize leaves tmp dirs and an uncommitted manifest exactly as
-    # the sequential form did.
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_ts = pool.submit(inherit(_finalize_term_stats))
-        f_pf = pool.submit(inherit(_finalize_prefix))
-        f_nd = pool.submit(inherit(_finalize_ndocs))
-        nterms, sum_dl = f_ts.result()
-        f_pf.result()
-        ndocs = f_nd.result()
+    nterms, sum_dl = write_term_tables(
+        postings_all,
+        os.path.join(root, "term_stats.tmp"),
+        os.path.join(root, "prefix.tmp"),
+        files_per_chunk,
+    )
+    for name in ("term_stats", "prefix"):
+        dest = os.path.join(root, name)
+        if os.path.exists(dest):
+            shutil.rmtree(dest)
+        os.replace(dest + ".tmp", dest)
+    # every chunk, resumed or built now, recorded its alive count
+    ndocs = sum(c["alive"] for c in man.lineage()["chunks"].values())
 
     man.reset_history()  # a full (re)build starts a fresh snapshot history
     man.commit_snapshot(
@@ -595,13 +630,19 @@ class Index:
         deleted documents."""
         return _parquet_or_empty(self.spark, path, path, schema)
 
-    def _segment_parts(
-        self, table: str, base_schema
-    ) -> tuple[list[DataFrame], list[DataFrame]]:
-        """Per-segment (rows tagged with _seq, tombstones tagged with
-        _tseq) for one overlaid table. Raises when a manifest-listed
-        segment's data dir is gone — that is corruption, not emptiness."""
-        parts, tombs = [], []
+    def _overlay(self, base: DataFrame, table: str) -> DataFrame:
+        """Union base (seq 0) with delta segments; a row from seq S is dead
+        when any later segment tombstoned its rowid (LSM-style overlay,
+        mirroring FTS5's delete+insert trigger maintenance,
+        1_init.up.sql:65-76). Each segment is read with the base's schema
+        and projected onto its columns, so partition-dir columns the base
+        does not carry (the docs' rb) never break the union. The churn
+        between compactions is small relative to the base: broadcast the
+        tombstone set (at larger churn a bloom-filter join or an Iceberg
+        MERGE would take over; compaction bounds growth)."""
+        if not self.segments:
+            return base
+        rows, tomb = base.withColumn("_seq", F.lit(0)), None
         for s in self.segments:
             p = os.path.join(self.root, s[table])
             if not os.path.exists(p):
@@ -611,47 +652,20 @@ class Index:
                     f"index segment data missing: {p} "
                     f"(manifest lists seq {s['seq']})"
                 )
-            parts.append(
-                self._read_seg(p, base_schema)
-                .drop("rb")  # docs segments carry the rowid-bucket dir
+            rows = rows.unionByName(
+                self._read_seg(p, base.schema)
+                .select(*base.columns)
                 .withColumn("_seq", F.lit(s["seq"]))
             )
-            tombs.append(
-                self._read_seg(
-                    os.path.join(self.root, s["tombstones"]), TOMBSTONES_SCHEMA
-                ).select(
-                    F.col("rowid").alias("_trowid"), F.lit(s["seq"]).alias("_tseq")
-                )
-            )
-        return parts, tombs
-
-    @staticmethod
-    def _apply_tombstones(rows: DataFrame, tombs: list[DataFrame]) -> DataFrame:
-        """Drop rows whose rowid is tombstoned by a LATER segment. The
-        churn between compactions is small relative to the base: broadcast
-        the tombstone set (at larger churn a bloom-filter join or an
-        Iceberg MERGE would take over; compaction bounds growth)."""
-        tomb = tombs[0]
-        for t in tombs[1:]:
-            tomb = tomb.unionByName(t)
+            t = self._read_seg(
+                os.path.join(self.root, s["tombstones"]), TOMBSTONES_SCHEMA
+            ).select(F.col("rowid").alias("_trowid"), F.lit(s["seq"]).alias("_tseq"))
+            tomb = t if tomb is None else tomb.unionByName(t)
         return rows.join(
             F.broadcast(tomb),
             (F.col("rowid") == F.col("_trowid")) & (F.col("_tseq") > F.col("_seq")),
             "left_anti",
         ).drop("_seq")
-
-    def _overlay(self, base: DataFrame, table: str) -> DataFrame:
-        """Union base (seq 0) with delta segments; a row from seq S is dead
-        when any later segment tombstoned its rowid (LSM-style overlay,
-        mirroring FTS5's delete+insert trigger maintenance,
-        1_init.up.sql:65-76)."""
-        if not self.segments:
-            return base
-        parts, tombs = self._segment_parts(table, base.schema)
-        allrows = base.withColumn("_seq", F.lit(0))
-        for p in parts:
-            allrows = allrows.unionByName(p)
-        return self._apply_tombstones(allrows, tombs)
 
     def invalidate(self) -> None:
         """Drop cached DataFrame handles after storage-layout mutations
@@ -738,34 +752,14 @@ class Index:
         repeats when several terms match it, with disjoint positions; the
         caller merges them in whatever exchange it already runs.
 
-        Delta segments are overlaid at query time: base rows for
-        tombstoned rowids are dropped and the (compaction-bounded)
-        segment postings contribute their startswith-filtered rows —
-        upserts never rewrite the base tail."""
-        cols = ["rowid", "space", "dl", "pos0", "pos1"]
-        base = (
-            self._prefix_base(prefix)
+        Delta segments are overlaid at query time by the overlay every
+        read uses (_overlay): segment postings are read with the tail's
+        columns — upserts never rewrite the base tail."""
+        return (
+            self._overlay(self._prefix_base(prefix), "postings")
             .filter(F.col("term").startswith(prefix))
-            .select(*cols)
+            .select("rowid", "space", "dl", "pos0", "pos1")
         )
-        if not self.segments:
-            return base
-
-        parts, tombs = self._segment_parts("postings", POSTINGS_READ_SCHEMA)
-        seg_rows = parts[0]
-        for p in parts[1:]:
-            seg_rows = seg_rows.unionByName(p)
-        seg_rows = self._apply_tombstones(
-            seg_rows.filter(F.col("term").startswith(prefix)), tombs
-        ).select(*cols)
-        # every segment posting's rowid is tombstoned in its own segment,
-        # so base-minus-tombstones and the segment rows are rowid-disjoint
-        tomb_ids = tombs[0]
-        for t in tombs[1:]:
-            tomb_ids = tomb_ids.unionByName(t)
-        tomb_ids = tomb_ids.select(F.col("_trowid").alias("rowid")).distinct()
-        base = base.join(F.broadcast(tomb_ids), "rowid", "left_anti")
-        return base.unionByName(seg_rows)
 
     def docs(self) -> DataFrame:
         base_dir = self.docs_base_dir()

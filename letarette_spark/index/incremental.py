@@ -10,18 +10,24 @@ new). Here each upsert batch becomes an LSM-style *delta segment*:
   seg/N/docs        the batch's doc rows (including tombstoned ones)
   seg/N/tombstones  rowids whose older rows (seq < N) are now dead
 
-Queries read base + segments minus tombstones (Index._overlay).
+Every read (postings, docs, the prefix tail) goes through one overlay,
+Index._overlay: base + segments minus rows a later segment tombstoned.
+Every table is written by the same writer the build uses (builder's
+write_docs, write_postings, write_term_stats and, at compaction,
+write_term_tables), so the on-disk layout has one implementation.
 
 Statistics are maintained *additively*: term df/cnt and the global
 (ndocs, sum_dl) are linear in documents, so an upsert of K docs merges
 the delta segment's stats into the base term_stats and subtracts the
 replaced versions' stats — the old versions are fetched with a
-rowid-bucket-pruned point lookup (Index.docs_for_rowids) and re-tokenized.
-NO scan of the base postings table happens on the upsert path; the full
-recompute runs only at compaction (or for huge batches where collecting
-the key set to the driver would be silly). BM25 stays exact after every
-batch — the same property the reference gets from FTS5 maintaining its
-own stats — and the upsert rank-identity tests pin it.
+rowid-bucket-pruned point lookup (Index.docs_for_rowids; above
+MERGE_MAX_BATCH rows, a semi-join of the docs overlay with the batch, so
+the key set never reaches the driver) and re-tokenized. NO scan of the
+postings table happens on the upsert path; the full recompute runs only
+at compaction. The batch's row and alive counts are observed on the
+segment docs write. BM25 stays exact after every batch — the same
+property the reference gets from FTS5 maintaining its own stats — and
+the upsert rank-identity tests pin it.
 
 Commits are crash-atomic: new term_stats (and at compaction new postings/
 docs) are staged under snapshot-versioned directories, the manifest
@@ -42,7 +48,7 @@ import os
 import re
 import shutil
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from letarette_spark.index.builder import (
@@ -50,17 +56,19 @@ from letarette_spark.index.builder import (
     POSTINGS_SCHEMA,
     Index,
     _read_tree,
+    docs_bucket_expr,
     term_aggregate,
     tokenize_postings,
+    write_docs,
     write_postings,
-    write_term_ranges,
     write_term_stats,
+    write_term_tables,
 )
 from letarette_spark.index.manifest import Manifest, data_dirs
 
-# above this batch size the merge path (which collects the batch's rowid
-# set to the driver for bucket pruning) falls back to a full recompute —
-# at that scale the recompute cost is amortized anyway
+# above this batch size the batch's keys are not collected to the driver:
+# the replaced versions come from a semi-join of the docs overlay with the
+# batch instead of the rowid-bucket point lookup, and caches are cleared
 MERGE_MAX_BATCH = 100_000
 
 _VERSIONED = re.compile(r"^(postings|docs|term_stats|prefix)(\.v\d+|\.tmp)?$")
@@ -126,20 +134,19 @@ def _merged_stats(
     spark: SparkSession,
     index: Index,
     seg_post_path: str,
-    batch_rowids: list[int],
+    old: DataFrame,
     alive_add: int,
     ts_path: str,
 ) -> dict:
-    """Additive stats merge for one upsert batch (called with the index
-    still reflecting the PRE-batch snapshot, so docs_for_rowids sees the
-    replaced versions). Returns the new global-stat meta fields."""
+    """Additive stats merge for one upsert batch: the base term_stats plus
+    the delta segment's postings minus the re-tokenized *old* rows (the
+    pre-batch versions of the batch's rowids — no postings scan). Returns
+    the new global-stat meta fields."""
     # a delete-only batch writes a footerless postings dir: empty delta
     seg_post = index._read_seg(seg_post_path, POSTINGS_SCHEMA)
     add = term_aggregate(seg_post).toDF("term", "df_a", "cnt_a")
 
-    # previously-live versions of the batch's rowids: rowid-bucket-pruned
-    # point lookup + re-tokenize of only those K docs (no postings scan)
-    old = index.docs_for_rowids(batch_rowids).filter(F.col("alive"))
+    old = old.filter(F.col("alive"))
     sub = term_aggregate(tokenize_postings(old, index.analyzer_config)).toDF(
         "term", "df_s", "cnt_s"
     )
@@ -173,16 +180,6 @@ def _merged_stats(
         "sum_dl": sum_dl,
         "nterms": nterms,
     }
-
-
-def _full_stats(
-    spark: SparkSession, postings: DataFrame, ndocs: int, ts_path: str
-) -> dict:
-    """Full recompute from *postings* (compaction / huge batches)."""
-    nterms, sum_dl = write_term_stats(
-        term_aggregate(postings), ts_path, spark.sparkContext.defaultParallelism // 2
-    )
-    return {"ndocs": ndocs, "sum_dl": sum_dl, "nterms": nterms}
 
 
 def upsert_documents(
@@ -234,21 +231,11 @@ def upsert_documents(
     keep = ["rowid", "doc_id", "space", "title", "body", "alive"]
     if "content_sha256" in docs.columns:
         keep.append("content_sha256")
-    db = index.meta["docs_buckets"]
     # same rowid-bucket layout as the base: point lookups prune segments.
     # The batch's size and alive count are observed on this write
-    sizes = Observation()
-    (
-        docs.select(*keep)
-        .observe(
-            sizes,
-            F.count(F.lit(1)).alias("n"),
-            F.count_if(F.col("alive")).alias("alive"),
-        )
-        .withColumn("rb", F.pmod(F.col("rowid"), F.lit(db)).cast("int"))
-        .write.partitionBy("rb")
-        .mode("overwrite")
-        .parquet(os.path.join(root, seg_rel["docs"]))
+    n_batch, alive_add = write_docs(
+        docs.select(*keep), os.path.join(root, seg_rel["docs"]),
+        index.meta["docs_buckets"],
     )
     # a duplicate rowid is harmless to the left-anti overlays: no distinct
     docs.select("rowid").write.mode("overwrite").parquet(
@@ -270,31 +257,25 @@ def upsert_documents(
     ts_path = os.path.join(root, ts_new_rel)
     # the batch's keys in one collect, bounded by the observed batch size:
     # the rowids to subtract and the doc_ids whose cached results go stale
-    small = sizes.get["n"] <= MERGE_MAX_BATCH
+    small = n_batch <= MERGE_MAX_BATCH
     keys = docs.select("rowid", "doc_id").collect() if small else []
-    new_segments = index.segments + [seg_rel]
-    if small:
-        # merge runs against the PRE-batch snapshot (docs_for_rowids must
-        # see the replaced versions, not the new segment)
-        stats = _merged_stats(
-            spark,
-            index,
-            os.path.join(root, seg_rel["postings"]),
-            sorted({r["rowid"] for r in keys}),
-            alive_add=sizes.get["alive"],
-            ts_path=ts_path,
-        )
-    else:
-        index.meta = dict(index.meta, segments=new_segments)
-        index.invalidate()  # overlay must see the new segment
-        ndocs = index.docs().filter(F.col("alive")).count()
-        stats = _full_stats(spark, index.postings(), ndocs, ts_path)
+    # the replaced versions, read while the index still reflects the
+    # PRE-batch snapshot (the new segment is not overlaid yet)
+    old = (
+        index.docs_for_rowids(sorted({r["rowid"] for r in keys}))
+        if small
+        else index.docs().join(docs.select("rowid"), "rowid", "left_semi")
+    )
+    stats = _merged_stats(
+        spark, index, os.path.join(root, seg_rel["postings"]), old,
+        alive_add=alive_add, ts_path=ts_path,
+    )
 
     meta = dict(index.meta)
     meta.update(stats)
     meta.update(
         {
-            "segments": new_segments,
+            "segments": index.segments + [seg_rel],
             "applied_batches": (
                 index.meta.get("applied_batches", [])
                 + ([batch_id] if batch_id is not None else [])
@@ -352,33 +333,26 @@ def compact_index(spark: SparkSession, root: str) -> Index:
         index.n_buckets,
         max(2, par // 2),
     )
-    alive = Observation()
-    (
-        index.docs()
-        .observe(alive, F.count_if(F.col("alive")).alias("ndocs"))
-        .withColumn("rb", F.pmod(F.col("rowid"), F.lit(db)).cast("int"))
-        .repartition(max(2, min(par, db)), "rb")
-        .write.partitionBy("rb")
-        .mode("overwrite")
-        .parquet(os.path.join(root, docs_rel, "chunk=0"))
+    _rows, ndocs = write_docs(
+        index.docs().repartition(max(2, min(par, db)), docs_bucket_expr(db)),
+        os.path.join(root, docs_rel, "chunk=0"),
+        db,
     )
-    new_post = _read_tree(
-        spark, os.path.join(root, post_rel), "chunk=*", POSTINGS_READ_SCHEMA
+    # term_stats and the prefix tail from the compacted postings (the one
+    # place that pays the index-wide scan; upserts only overlay)
+    nterms, sum_dl = write_term_tables(
+        _read_tree(
+            spark, os.path.join(root, post_rel), "chunk=*", POSTINGS_READ_SCHEMA
+        ),
+        os.path.join(root, ts_rel),
+        os.path.join(root, pf_rel),
+        par // 2,
     )
 
-    # rebuild the prefix tail from the compacted postings (the one place
-    # that pays the index-wide scan; upserts only overlay)
-    write_term_ranges(new_post, os.path.join(root, pf_rel), max(4, par // 2))
-
-    meta = dict(index.meta, segments=[], blocks=None)
-    meta.update(
-        _full_stats(
-            spark, new_post, alive.get["ndocs"], os.path.join(root, ts_rel)
-        )
-    )
-    meta.update(
-        postings_dir=post_rel, docs_dir=docs_rel, term_stats_dir=ts_rel,
-        prefix_dir=pf_rel,
+    meta = dict(
+        index.meta, segments=[], blocks=None, ndocs=ndocs, nterms=nterms,
+        sum_dl=sum_dl, postings_dir=post_rel, docs_dir=docs_rel,
+        term_stats_dir=ts_rel, prefix_dir=pf_rel,
     )
     meta.pop("snapshot_id", None)
     man.commit_snapshot(meta)  # ← the atomic commit point

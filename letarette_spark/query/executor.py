@@ -195,16 +195,6 @@ class Searcher:
             self.synonyms = load_synonyms(self.index)
 
     # ------------------------------------------------------------------
-    def analyze_phrase(self, p: Phrase) -> list[list[str]]:
-        """Query-time analysis of one include phrase: per-position term
-        alternatives, [] when the stopword rule drops it (see
-        ``analyze_query``)."""
-        alts = self.analyzer.query_alternatives(
-            p.text, synonyms=self.synonyms, prefix=p.wildcard
-        )
-        return [] if _stopword_dropped(p, alts, self.stopwords) else alts
-
-    # ------------------------------------------------------------------
     def _scan(self, terms: list[str], wildcard: bool, counts: bool) -> DataFrame:
         """Hit rows of one phrase position as (rowid, space, dl, tf0, tf1,
         pos0, pos1). ``terms`` are the position's alternatives (synonym

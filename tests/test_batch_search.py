@@ -23,8 +23,7 @@ import pytest
 from letarette_spark.analysis.tokenizer import AnalyzerConfig
 from letarette_spark.index.builder import Index, build_index
 from letarette_spark.query.batch import UnsupportedBatchQuery, search_batch
-from letarette_spark.query.executor import B, K1, Searcher
-from letarette_spark.query.parser import parse_query, reduce_phrases
+from letarette_spark.query.executor import B, K1, Searcher, analyze_query
 from letarette_spark.sources.corpus import docs_from_corpus, generate_corpus_local
 
 N_DOCS = 150
@@ -81,17 +80,11 @@ def test_single_phrase_identity(built):
 
 def _brute(index, searcher, query, mode, limit=10):
     """Independent BM25 from collected postings (pure Python)."""
-    phrases = reduce_phrases(parse_query(query))
-    inc = [searcher.analyze_phrase(p) for p in phrases if not p.exclude]
-    inc = [a[0] for a in inc if a]
-    exc = [
-        searcher.analyzer.query_alternatives(
-            p.text, synonyms=searcher.synonyms, prefix=p.wildcard
-        )
-        for p in phrases
-        if p.exclude
-    ]
-    exc = [a[0] for a in exc if a]
+    inc, exc = analyze_query(
+        searcher.analyzer, searcher.stopwords, searcher.synonyms, query
+    )
+    inc = [alts[0] for _p, alts in inc]
+    exc = [alts[0] for alts, _wildcard in exc]
     all_terms = sorted({t for ph in inc + exc for t in ph})
     rows = index.postings_for_terms(all_terms).select(
         "term", "rowid", "space", "dl", "tf0", "tf1"

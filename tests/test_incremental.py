@@ -623,3 +623,70 @@ def test_stamped_totals_match_a_recount(spark, tmp_path):
     _assert_stamped_totals(spark, root, 0)
     compact_index(spark, root)
     _assert_stamped_totals(spark, root, 0)
+
+
+def _empty_docs_df(spark):
+    return _docs_df(spark, [(1, "", "", True)]).limit(0)
+
+
+def test_empty_index_upsert_and_compaction(spark, tmp_path):
+    """A build over no documents, an empty upsert and the compaction after
+    it each leave an index of 0 documents; every docs dir is footerless,
+    so the observed writes see plans that AQE proves empty."""
+    root = str(tmp_path / "idx")
+    res = build_index(spark, _empty_docs_df(spark), root, config=CFG,
+                      n_build_partitions=2, chunk_size=1)
+    assert res.ndocs == 0
+    _assert_stamped_totals(spark, root, 0)
+    idx = upsert_documents(spark, root, _empty_docs_df(spark))
+    assert idx.meta["ndocs"] == 0
+    _assert_stamped_totals(spark, root, 0)
+    idx = compact_index(spark, root)
+    assert idx.meta["ndocs"] == 0 and not idx.segments
+    _assert_stamped_totals(spark, root, 0)
+
+
+def test_build_with_empty_chunks_stamps_recounted_totals(spark, tmp_path):
+    """One document over four one-partition chunks: at least three chunks
+    write no docs, and their recorded alive counts are 0."""
+    root = str(tmp_path / "idx")
+    res = build_index(spark, _docs_df(spark, BASE[:1]), root, config=CFG,
+                      n_build_partitions=4, chunk_size=1)
+    assert (res.ndocs, res.chunks_built) == (1, 4)
+    _assert_stamped_totals(spark, root, 1)
+
+
+def test_large_batch_upsert_does_not_scan_base_postings(spark, tmp_path, monkeypatch):
+    """Above MERGE_MAX_BATCH the replaced versions come from the docs
+    overlay semi-joined with the batch: still no postings read, exact
+    BM25 after each batch, stamped totals equal to a recount and the
+    result caches cleared wholesale."""
+    from letarette_spark.index import incremental
+
+    root = str(tmp_path / "idx")
+    build_index(spark, _docs_df(spark, BASE), root, config=CFG,
+                n_build_partitions=2, chunk_size=2)
+
+    class Cache:
+        cleared = 0
+
+        def clear(self):
+            self.cleared += 1
+
+        def invalidate_doc(self, doc_id):
+            raise AssertionError("a large batch clears the cache wholesale")
+
+    def boom(self):
+        raise AssertionError("upsert path read base postings")
+
+    cache = Cache()
+    monkeypatch.setattr(incremental, "MERGE_MAX_BATCH", 0)
+    monkeypatch.setattr(Index, "postings", boom)
+    upsert_documents(spark, root, _docs_df(spark, UPDATES_1), caches=[cache])
+    upsert_documents(spark, root, _docs_df(spark, UPDATES_2), caches=[cache])
+    monkeypatch.undo()
+    assert cache.cleared == 2
+    _assert_stamped_totals(spark, root, 4)
+    _assert_matches_final_oracle(
+        Searcher(Index.open(spark, root, CFG)), Fts5Index.build(FINAL)
+    )

@@ -286,8 +286,42 @@ def test_wide_index_reads_start_no_listing_job(spark, wide):
     assert n[0] == 0, f"{n[0]} Spark jobs before the first action"
 
 
+BUILD_JOBS = 12
 UPSERT_JOBS = 18
 COMPACT_JOBS = 15
+SEGMENTED_WILDCARD_JOBS = 5
+
+
+def test_wide_index_build_job_budget(spark, tmp_path):
+    """Spark jobs of the wide fixture's 60-doc, one-chunk build: 12, as
+    measured with the chunk's alive count observed on its docs write
+    (14 with a finalize job re-reading the docs tree to count it)."""
+    frame = _frame(spark, _wide_docs(range(1, 61), 1))
+    with _jobs(spark) as n:
+        res = build_index(spark, frame, str(tmp_path / "idx"), config=CFG,
+                          n_build_partitions=1, chunk_size=1)
+    assert res.ndocs == 60
+    assert n[0] <= BUILD_JOBS, f"build ran {n[0]} Spark jobs"
+
+
+@pytest.mark.parametrize("query", ["aro*", "bpanel aro*"])
+def test_segmented_wildcard_job_budget(spark, wide, query):
+    """A wildcard over a delta segment reads the prefix tail through the
+    one segment overlay every read uses, with one tombstone broadcast:
+    search() runs at most 5 jobs (6 for `aro*` and 7 for `bpanel aro*`
+    with a second, distinct-collected tombstone set), FTS5-identical."""
+    idx = Index.open(spark, wide, CFG)
+    s = Searcher(idx, stopwords=frozenset(), synonyms={})
+    s.search(query)
+    with _jobs(spark) as n:
+        res = s.search(query)
+    assert n[0] <= SEGMENTED_WILDCARD_JOBS, f"{query}: ran {n[0]} Spark jobs"
+    final = {d[0]: d for d in _wide_docs(range(1, 61), 1)}
+    final.update({d[0]: d for d in _wide_docs(range(50, 71), 2)})
+    oracle = Fts5Index.build([(r, t, b) for r, _sp, t, b in final.values()])
+    got = [(h.rowid, h.score) for h in res.hits]
+    _check(got, res.total_hits,
+           _expected(oracle, list(final.values()), query, None), query)
 
 
 def test_wide_index_write_job_budgets(spark, wide, tmp_path):
@@ -316,16 +350,21 @@ def test_wide_index_write_job_budgets(spark, wide, tmp_path):
 
 
 def test_build_jobs_keep_the_callers_job_group(spark, tmp_path):
-    """Every job build_index starts, its pool threads' included, carries
-    the job group set around the call."""
+    """Every job build_index, an upsert and compact_index start, their
+    pool threads' included (the build's chunk writes, the term-table
+    writes of the build's finalize and of compaction), carries the job
+    group set around the calls."""
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     before = set(tracker.getJobIdsForGroup(None))
     group = f"build-{uuid.uuid4().hex}"
+    root = str(tmp_path / "idx")
     sc.setJobGroup(group, "build job group")
     try:
-        build_index(spark, _frame(spark, _docs(n=40)), str(tmp_path / "idx"),
+        build_index(spark, _frame(spark, _docs(n=40)), root,
                     config=CFG, n_build_partitions=2, chunk_size=1)
+        upsert_documents(spark, root, _frame(spark, _docs(n=45, seed=9)[35:]))
+        compact_index(spark, root)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(tracker.getJobIdsForGroup(group)) > 2
