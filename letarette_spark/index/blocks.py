@@ -141,4 +141,7 @@ def has_blocks(index: Index) -> bool:
 
 
 def blocks_df(index: Index):
-    return index.spark.read.parquet(os.path.join(index.root, "blocks"))
+    # the writer's schema: no footer-reading inference job per call
+    return index.spark.read.schema(BLOCKS_SCHEMA).parquet(
+        os.path.join(index.root, "blocks")
+    )

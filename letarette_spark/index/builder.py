@@ -28,6 +28,7 @@ import os
 import shutil
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
+from functools import reduce
 from typing import Iterator
 
 import pandas as pd
@@ -79,7 +80,16 @@ TERM_STATS_SCHEMA = T.StructType(
 POSTINGS_READ_SCHEMA = T.StructType(
     POSTINGS_SCHEMA.fields + [T.StructField("bucket", T.IntegerType())]
 )
+# docs as read back: the writer's columns plus the rowid-bucket partition dir
+DOCS_READ_SCHEMA = T.StructType(
+    DOCS_SCHEMA.fields + [T.StructField("rb", T.IntegerType())]
+)
 TOMBSTONES_SCHEMA = T.StructType([T.StructField("rowid", T.LongType())])
+
+# the batch size above which an upsert does not collect its keys to the
+# driver, and the tombstone count above which the segment overlay joins a
+# broadcast tombstone set instead of filtering on literal rowid lists
+MERGE_MAX_BATCH = 100_000
 
 
 def _parquet_or_empty(
@@ -113,6 +123,29 @@ def _read_tree(spark: SparkSession, base_dir: str, glob: str, schema):
         spark, os.path.join(base_dir, glob), base_dir, schema,
         base_path=base_dir,
     )
+
+
+def _data_entries(path: str) -> list[str]:
+    """Paths of the data files or partition dirs of one written parquet
+    dir: every entry but Spark's hidden ones (_SUCCESS, .crc). A zero-row
+    write leaves none. A missing dir raises FileNotFoundError."""
+    if not os.path.isdir(path):
+        raise FileNotFoundError(f"index data dir missing: {path}")
+    return [
+        os.path.join(path, n)
+        for n in sorted(os.listdir(path))
+        if not n.startswith(("_", "."))
+    ]
+
+
+def _rowid_not_in(rowids: set[int]):
+    """`NOT rowid IN (...)` as one parsed SQL expression: one driver call
+    however many rowids, where Column.isin makes one per literal. None for
+    an empty set (nothing to drop)."""
+    if not rowids:
+        return None
+    return F.expr(f"NOT rowid IN ({','.join(map(str, sorted(rowids)))})")
+
 
 DEFAULT_BUCKETS = 64
 DEFAULT_DOC_BUCKETS = 16  # rowid-hash partition dirs for the docs table
@@ -623,12 +656,51 @@ class Index:
         return self.meta.get("segments", [])
 
     def _read_seg(self, path: str, schema) -> DataFrame:
-        """Read one delta-segment parquet dir; a DELETE-ONLY batch writes a
-        footerless dir (partitionBy of zero rows) — fall back to an empty
-        frame for that case ONLY. A MISSING directory stays a hard error:
+        """Read one delta-segment parquet dir, once per (path, schema) and
+        handle: repeated queries reuse the read and its file listing. A
+        DELETE-ONLY batch leaves its postings dir with no data file
+        (partitionBy of zero rows); the dir's listing says so and the read
+        is the empty frame of *schema*. A MISSING dir stays a hard error:
         silently treating absent tombstones as empty would resurrect
         deleted documents."""
-        return _parquet_or_empty(self.spark, path, path, schema)
+        reads = self.__dict__.setdefault("_seg_reads", {})
+        key = (path, schema)
+        if key not in reads:
+            reads[key] = (
+                self.spark.read.schema(schema).parquet(path)
+                if _data_entries(path)
+                else self.spark.createDataFrame([], schema)
+            )
+        return reads[key]
+
+    def _tombstone_filters(self) -> dict | None:
+        """Per seq (0 is the base), the filter that drops that branch's rows
+        a LATER segment tombstoned, or None when nothing later did. The
+        tombstone rowids are read once per handle in the driver (pyarrow,
+        no Spark job). None when their footers sum to more than
+        MERGE_MAX_BATCH rows: the overlay then joins them by broadcast."""
+        if "_tomb_filters" in self.__dict__:
+            return self.__dict__["_tomb_filters"]
+        import pyarrow.parquet as pq
+
+        files = {
+            s["seq"]: _data_entries(os.path.join(self.root, s["tombstones"]))
+            for s in self.segments
+        }
+        n = sum(pq.read_metadata(f).num_rows for fs in files.values() for f in fs)
+        keep = None
+        if n <= MERGE_MAX_BATCH:
+            keep, later = {}, set()
+            for seq in sorted(files, reverse=True):
+                keep[seq] = _rowid_not_in(later)
+                for f in files[seq]:
+                    later.update(
+                        pq.read_table(f, columns=["rowid"])
+                        .column("rowid").to_pylist()
+                    )
+            keep[0] = _rowid_not_in(later)
+        self.__dict__["_tomb_filters"] = keep
+        return keep
 
     def _overlay(self, base: DataFrame, table: str) -> DataFrame:
         """Union base (seq 0) with delta segments; a row from seq S is dead
@@ -636,31 +708,38 @@ class Index:
         mirroring FTS5's delete+insert trigger maintenance,
         1_init.up.sql:65-76). Each segment is read with the base's schema
         and projected onto its columns, so partition-dir columns the base
-        does not carry (the docs' rb) never break the union. The churn
-        between compactions is small relative to the base: broadcast the
-        tombstone set (at larger churn a bloom-filter join or an Iceberg
-        MERGE would take over; compaction bounds growth)."""
+        does not carry never break the union, and those it does (bucket,
+        rb) prune every branch.
+
+        The churn between compactions is small relative to the base: each
+        branch filters its own rows on a literal list of the later
+        tombstones (_tombstone_filters), so the overlay adds no exchange
+        and no job. Above MERGE_MAX_BATCH tombstones it falls back to one
+        broadcast anti-join (compaction bounds growth)."""
         if not self.segments:
             return base
-        rows, tomb = base.withColumn("_seq", F.lit(0)), None
-        for s in self.segments:
-            p = os.path.join(self.root, s[table])
-            if not os.path.exists(p):
-                # symmetric with the tombstone guard: silently skipping
-                # would vanish the segment's document versions
-                raise FileNotFoundError(
-                    f"index segment data missing: {p} "
-                    f"(manifest lists seq {s['seq']})"
-                )
-            rows = rows.unionByName(
-                self._read_seg(p, base.schema)
-                .select(*base.columns)
-                .withColumn("_seq", F.lit(s["seq"]))
-            )
-            t = self._read_seg(
+        # a missing segment dir raises (_read_seg): silently skipping it
+        # would vanish the segment's document versions
+        branches = [(0, base)] + [
+            (s["seq"], self._read_seg(os.path.join(self.root, s[table]), base.schema)
+             .select(*base.columns))
+            for s in self.segments
+        ]
+        keep = self._tombstone_filters()
+        if keep is not None:
+            return reduce(DataFrame.unionByName, [
+                b if keep[seq] is None else b.filter(keep[seq])
+                for seq, b in branches
+            ])
+        rows = reduce(DataFrame.unionByName, [
+            b.withColumn("_seq", F.lit(seq)) for seq, b in branches
+        ])
+        tomb = reduce(DataFrame.unionByName, [
+            self._read_seg(
                 os.path.join(self.root, s["tombstones"]), TOMBSTONES_SCHEMA
             ).select(F.col("rowid").alias("_trowid"), F.lit(s["seq"]).alias("_tseq"))
-            tomb = t if tomb is None else tomb.unionByName(t)
+            for s in self.segments
+        ])
         return rows.join(
             F.broadcast(tomb),
             (F.col("rowid") == F.col("_trowid")) & (F.col("_tseq") > F.col("_seq")),
@@ -668,11 +747,12 @@ class Index:
         ).drop("_seq")
 
     def invalidate(self) -> None:
-        """Drop cached DataFrame handles after storage-layout mutations
-        (upserts, compaction) — stale handles reference deleted files."""
-        self.__dict__.pop("_postings_df", None)
-        self.__dict__.pop("_term_stats_df", None)
-        self.__dict__.pop("_speling_df", None)
+        """Drop cached DataFrame handles, segment reads and tombstone
+        filters after storage-layout mutations (upserts, compaction) —
+        stale handles reference deleted files and an outdated overlay."""
+        for k in ("_postings_df", "_docs_df", "_term_stats_df", "_speling_df",
+                  "_seg_reads", "_tomb_filters"):
+            self.__dict__.pop(k, None)
 
     @property
     def n_buckets(self) -> int:
@@ -761,43 +841,34 @@ class Index:
             .select("rowid", "space", "dl", "pos0", "pos1")
         )
 
+    def _docs_overlay(self) -> DataFrame:
+        """The docs overlay with the rowid-bucket dir column rb kept, built
+        once per handle (invalidate() drops it)."""
+        cached = self.__dict__.get("_docs_df")
+        if cached is None:
+            base = _read_tree(
+                self.spark, self.docs_base_dir(), "chunk=*", DOCS_READ_SCHEMA
+            ).drop("chunk")
+            cached = self.__dict__["_docs_df"] = self._overlay(base, "docs")
+        return cached
+
     def docs(self) -> DataFrame:
-        base_dir = self.docs_base_dir()
-        base = _read_tree(self.spark, base_dir, "chunk=*", DOCS_SCHEMA).drop(
-            "chunk", "rb"
-        )
-        return self._overlay(base, "docs")
+        return self._docs_overlay().drop("rb")
 
     def docs_for_rowids(self, rowids: list[int]) -> DataFrame:
         """Point lookup: current live doc rows for the given rowids.
 
-        Scans ONLY the rowid-bucket dirs (rb = pmod(rowid, docs_buckets))
-        the keys hash to — the upsert old-version fetch reads a K/buckets
-        fraction of the docs table instead of all of it. Delta segments
-        (bounded by compaction) are read in full; tombstone overlay rules
-        apply as in docs()."""
+        The rb predicate prunes every branch of the docs overlay, base and
+        delta segments alike, to the rowid-bucket dirs (rb = pmod(rowid,
+        docs_buckets)) the keys hash to: the upsert's old-version fetch
+        and the page fetch read a K/buckets fraction of the docs table."""
         rowids = [int(r) for r in rowids]
-        nb = self.meta["docs_buckets"]
-        base_dir = self.docs_base_dir()
-        want = sorted({r % nb for r in rowids})
-        chunks = os.listdir(base_dir) if os.path.isdir(base_dir) else []
-        paths = [
-            os.path.join(base_dir, chunk, f"rb={b}")
-            for chunk in chunks
-            if chunk.startswith("chunk=")
-            for b in want
-        ]
-        paths = [p for p in paths if os.path.isdir(p)]
-        if paths:
-            base = (
-                self.spark.read.schema(DOCS_SCHEMA)
-                .option("basePath", base_dir)
-                .parquet(*paths)
-                .drop("chunk", "rb")
-            )
-        else:  # none of the keys' buckets exist on disk
-            base = self.spark.createDataFrame([], DOCS_SCHEMA)
-        return self._overlay(base, "docs").filter(F.col("rowid").isin(rowids))
+        want = sorted({r % self.meta["docs_buckets"] for r in rowids})
+        return (
+            self._docs_overlay()
+            .filter(F.col("rb").isin(want) & F.col("rowid").isin(rowids))
+            .drop("rb")
+        )
 
     def term_stats(self) -> DataFrame:
         # known schema (no inference job) + one handle per Index (repeated

@@ -9,6 +9,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import functions as F
 
 from letarette_spark.index.builder import Index
+from letarette_spark.query.spelling import SPELING_SCHEMA
 
 
 @dataclass
@@ -34,7 +35,11 @@ def spelling_lag(index: Index, min_count: int = 4, min_len: int = 4) -> int:
         .count()
     )
     path = os.path.join(index.root, "speling")
-    have = index.spark.read.parquet(path).count() if os.path.exists(path) else 0
+    have = (
+        index.spark.read.schema(SPELING_SCHEMA).parquet(path).count()
+        if os.path.exists(path)
+        else 0
+    )
     return max(0, eligible - have)
 
 

@@ -63,12 +63,12 @@ FINAL = [
 QUERIES = ["quick", "wizard*", "five", "quick jump", '"my box"', "quartz", "the -gold"]
 
 
-def _assert_matches_final_oracle(searcher, oracle):
+def _assert_matches_final_oracle(searcher, oracle, queries=QUERIES):
     from letarette_spark.query.parser import (
         compile_match_string, parse_query, reduce_phrases,
     )
 
-    for q in QUERIES:
+    for q in queries:
         match = compile_match_string(reduce_phrases(parse_query(q)))
         expected = oracle.search(match, limit=10) if match else []
         df, _t, _c = searcher.search_df(q, limit=10)
@@ -331,18 +331,122 @@ def test_upsert_does_not_scan_base_postings(spark, tmp_path, monkeypatch):
     _assert_matches_final_oracle(Searcher(idx), Fts5Index.build(mid))
 
 
+def _scanned_files(df) -> list[int]:
+    """numFiles of every file scan in *df*'s executed plan, after an action
+    on *df*: the files left after partition pruning (inputFiles() lists a
+    relation's files before any pruning)."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.finalPhysicalPlan()
+    leaves = plan.collectLeaves()
+    metrics = (leaves.apply(i).metrics() for i in range(leaves.size()))
+    return [m.apply("numFiles").value() for m in metrics if m.contains("numFiles")]
+
+
 def test_docs_point_lookup_prunes_buckets(spark, tmp_path):
+    """The point lookup reads only the rowid-bucket dir its key hashes to,
+    in the base and in every delta segment."""
+    import glob
+
     root = str(tmp_path / "prune_index")
     build_index(spark, _docs_df(spark, BASE), root, config=CFG,
                 n_build_partitions=2, chunk_size=2)
+    for batch, title in ((None, "beta two"), (UPDATES_1, "beta two v2")):
+        if batch:
+            upsert_documents(spark, root, _docs_df(spark, batch))
+        idx = Index.open(spark, root, CFG)
+        got = idx.docs_for_rowids([2])
+        assert [(r["doc_id"], r["title"]) for r in got.collect()] == [("d2", title)]
+        trees = [idx.docs_base_dir()] + [
+            os.path.join(root, seg["docs"]) for seg in idx.segments
+        ]
+
+        def files(pattern):
+            return [
+                f for d in trees
+                for f in glob.glob(os.path.join(d, "**", pattern), recursive=True)
+            ]
+
+        wanted = files(f"rb={2 % idx.meta['docs_buckets']}/*.parquet")
+        assert len(wanted) >= len(trees)
+        assert sum(_scanned_files(got)) == len(wanted) < len(files("*.parquet"))
+
+
+# three segments over BASE: d1 (a base doc) is replaced in seg 1, deleted
+# in seg 2 and re-added in seg 3; d6 is added in seg 1 and replaced in
+# seg 2. Each segment tombstones its own rowids, so a branch filtered by
+# every segment's tombstones loses d1's and d6's live versions.
+SEQ_BATCHES = [
+    [(1, "alpha one v1", "wizards draft quartz notes", True),
+     (6, "zeta six", "first draft of the wizards list", True)],
+    [(1, "", "", False),
+     (6, "zeta six v2", "quick final fox of the list", True)],
+    [(1, "alpha returns", "returning wizards judge the quick quartz", True)],
+]
+SEQ_FINAL = [
+    (1, "alpha returns", "returning wizards judge the quick quartz"),
+    *[(r, t, b) for r, t, b, _a in BASE[1:]],
+    (6, "zeta six v2", "quick final fox of the list"),
+]
+SEQ_QUERIES = ["wizard*", "quick", "quartz", "draft", "return*", "fox", "list",
+               "zeta", "alpha", "final -fox"]
+
+
+@pytest.mark.parametrize("path", ["literal", "broadcast"])
+def test_overlay_seq_rule(spark, tmp_path, monkeypatch, path):
+    """A row of seq S is dead only when a segment with seq > S tombstoned
+    it, on the literal-filter path and on the broadcast anti-join taken
+    above MERGE_MAX_BATCH tombstones: rank-identical to FTS5 over the
+    final corpus."""
+    from letarette_spark.index import builder
+
+    if path == "broadcast":
+        monkeypatch.setattr(builder, "MERGE_MAX_BATCH", 0)
+    root = str(tmp_path / "idx")
+    build_index(spark, _docs_df(spark, BASE), root, config=CFG,
+                n_build_partitions=2, chunk_size=2)
+    for batch in SEQ_BATCHES:
+        upsert_documents(spark, root, _docs_df(spark, batch))
     idx = Index.open(spark, root, CFG)
-    nb = idx.meta["docs_buckets"]
-    got = idx.docs_for_rowids([2])
-    assert [r["doc_id"] for r in got.collect()] == ["d2"]
-    want_rb = 2 % nb
-    files = got.inputFiles()
-    assert files, "point lookup read no files"
-    assert all(f"rb={want_rb}/" in f for f in files), files
+    assert len(idx.segments) == 3 and idx.meta["ndocs"] == 5
+    assert (idx._tombstone_filters() is None) == (path == "broadcast")
+    _assert_matches_final_oracle(
+        Searcher(idx), Fts5Index.build(SEQ_FINAL), SEQ_QUERIES
+    )
+    alive = idx.docs().filter("alive").select("rowid", "title").collect()
+    assert sorted((r["rowid"], r["title"]) for r in alive) == sorted(
+        (r, t) for r, t, _b in SEQ_FINAL
+    )
+
+
+def test_delete_only_upsert_makes_no_failing_read(spark, tmp_path, monkeypatch):
+    """A delete-only batch leaves its segment postings dir without a data
+    file; the segment read learns that from the dir's listing, so neither
+    the upsert nor a search after it starts a parquet read that fails."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    root = str(tmp_path / "idx")
+    build_index(spark, _docs_df(spark, BASE), root, config=CFG,
+                n_build_partitions=2, chunk_size=2)
+    failed = []
+    real = DataFrameReader.parquet
+
+    def spy(self, *paths, **kw):
+        try:
+            return real(self, *paths, **kw)
+        except Exception as e:
+            failed.append((paths, e))
+            raise
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    idx = upsert_documents(spark, root, _docs_df(spark, [(3, "", "", False)]))
+    seg_post = os.path.join(root, idx.segments[0]["postings"])
+    assert [n for n in os.listdir(seg_post) if not n.startswith(("_", "."))] == []
+    _assert_matches_final_oracle(
+        Searcher(Index.open(spark, root, CFG)),
+        Fts5Index.build([(r, t, b) for r, t, b, _a in BASE if r != 3]),
+    )
+    assert failed == []
 
 
 def test_upsert_commit_is_crash_atomic(spark, tmp_path, monkeypatch):

@@ -4,8 +4,10 @@ collect, search() adds one point-lookup page fetch.
 Jobs are counted with the status tracker under a per-measurement job
 group. On a segment-free index search_df starts at most 3 jobs (the
 candidate collect; one shuffle-map job when phrases are grouped by rowid)
-and a whole search() at most 4. Every class is also checked rank-identical
-to live FTS5, so the budget never buys a different answer."""
+and a whole search() at most 4; a delta segment adds none, since its
+tombstones are literal filters read once per Index handle. Every class is
+also checked rank-identical to live FTS5, so the budget never buys a
+different answer."""
 
 from __future__ import annotations
 
@@ -20,6 +22,7 @@ from contextlib import contextmanager
 import pytest
 
 from letarette_spark.analysis.tokenizer import AnalyzerConfig
+from letarette_spark.index.blocks import blocks_df, build_blocks
 from letarette_spark.index.builder import Index, build_index
 from letarette_spark.index.incremental import compact_index, upsert_documents
 from letarette_spark.query.executor import Searcher
@@ -170,12 +173,15 @@ def test_search_job_budget(spark, clean, cls, query, spaces):
         assert res.status == "no_hit" and not res.hits
 
 
-def test_open_and_read_start_no_job(spark, segmented):
+def test_open_and_read_start_no_job(spark, segmented, tmp_path):
     """Opening an index with a delta segment and building every read the
     query path uses (postings overlay, docs overlay, point lookup, prefix
-    rows, the candidate frame) starts no Spark job: every parquet read
-    carries the writer's schema."""
-    root, _oracle, _docs_ = segmented
+    rows, the candidate frame, the WAND blocks) starts no Spark job: every
+    parquet read carries the writer's schema, and the overlay's tombstones
+    are read in the driver."""
+    root = str(tmp_path / "idx")
+    shutil.copytree(segmented[0], root)
+    build_blocks(Index.open(spark, root, CFG))
     with _jobs(spark) as n:
         idx = Index.open(spark, root, CFG)
         assert idx.segments
@@ -183,6 +189,7 @@ def test_open_and_read_start_no_job(spark, segmented):
         idx.docs()
         idx.docs_for_rowids([3, 4, 125])
         idx.prefix_rows("rot")
+        blocks_df(idx)
         s = Searcher(idx, stopwords=frozenset(), synonyms={})
         s._candidates([[["rotor"]], [["panel"]]], [False, False], [], None)
     assert n[0] == 0, f"{n[0]} Spark jobs before the first action"
@@ -190,7 +197,8 @@ def test_open_and_read_start_no_job(spark, segmented):
 
 @pytest.mark.parametrize("cls,query,spaces", CLASSES, ids=[c[0] for c in CLASSES])
 def test_segmented_search(spark, segmented, monkeypatch, cls, query, spaces):
-    """Over a delta segment each overlay adds its tombstone broadcast; the
+    """Over a delta segment a search() runs at most 3 jobs, like one over
+    a clean index (up to 6 with a tombstone broadcast per overlay); the
     answer stays FTS5-identical and the page comes from the point lookup,
     never from a docs() overlay scan."""
     root, oracle, docs = segmented
@@ -203,7 +211,7 @@ def test_segmented_search(spark, segmented, monkeypatch, cls, query, spaces):
     with _jobs(spark) as n:
         res = s.search(query, spaces=spaces)
     assert not calls, "the page fetch must not scan the docs() overlay"
-    assert n[0] <= 6, f"{cls}: segmented search() ran {n[0]} Spark jobs"
+    assert n[0] <= 3, f"{cls}: segmented search() ran {n[0]} Spark jobs"
     got = [(h.rowid, h.score) for h in res.hits]
     _check(got, res.total_hits, _expected(oracle, docs, query, spaces), cls)
 
@@ -287,9 +295,9 @@ def test_wide_index_reads_start_no_listing_job(spark, wide):
 
 
 BUILD_JOBS = 12
-UPSERT_JOBS = 18
-COMPACT_JOBS = 15
-SEGMENTED_WILDCARD_JOBS = 5
+UPSERT_JOBS = 16
+COMPACT_JOBS = 11
+SEGMENTED_WILDCARD_JOBS = 3
 
 
 def test_wide_index_build_job_budget(spark, tmp_path):
@@ -307,9 +315,10 @@ def test_wide_index_build_job_budget(spark, tmp_path):
 @pytest.mark.parametrize("query", ["aro*", "bpanel aro*"])
 def test_segmented_wildcard_job_budget(spark, wide, query):
     """A wildcard over a delta segment reads the prefix tail through the
-    one segment overlay every read uses, with one tombstone broadcast:
-    search() runs at most 5 jobs (6 for `aro*` and 7 for `bpanel aro*`
-    with a second, distinct-collected tombstone set), FTS5-identical."""
+    one segment overlay every read uses, whose tombstones are literal
+    filters: search() runs at most 3 jobs (5 with a tombstone broadcast per
+    overlay; 6 for `aro*` and 7 for `bpanel aro*` with a second,
+    distinct-collected tombstone set), FTS5-identical."""
     idx = Index.open(spark, wide, CFG)
     s = Searcher(idx, stopwords=frozenset(), synonyms={})
     s.search(query)
@@ -326,11 +335,13 @@ def test_segmented_wildcard_job_budget(spark, wide, query):
 
 def test_wide_index_write_job_budgets(spark, wide, tmp_path):
     """Spark jobs of one 20-doc upsert (10 replaced, 5 new, 5 deleted) and
-    of the compaction after it, on a copy of the wide index: 18 for
-    upsert_documents and 15 for compact_index, as measured with serial
-    listing, one key collect per upsert and totals observed on the writes
-    (25 and 23 with parallel listing jobs, a distinct-collect, a count,
-    a second distinct-collect and a term_stats read-back)."""
+    of the compaction after it, on a copy of the wide index: 16 for
+    upsert_documents and 11 for compact_index, as measured with serial
+    listing, one key collect per upsert, totals observed on the writes and
+    the overlay's tombstones as literal filters (18 and 15 with a
+    tombstone broadcast per overlay read; 25 and 23 also with parallel
+    listing jobs, a distinct-collect, a count, a second distinct-collect
+    and a term_stats read-back)."""
     root = str(tmp_path / "idx")
     shutil.copytree(wide, root)
     batch = _frame(spark, _wide_docs(list(range(40, 50)) + list(range(71, 76)), 3))
