@@ -86,10 +86,12 @@ DOCS_READ_SCHEMA = T.StructType(
 )
 TOMBSTONES_SCHEMA = T.StructType([T.StructField("rowid", T.LongType())])
 
-# the batch size above which an upsert does not collect its keys to the
-# driver, and the tombstone count above which the segment overlay joins a
-# broadcast tombstone set instead of filtering on literal rowid lists
-MERGE_MAX_BATCH = 100_000
+# the most rowid literals the segment overlay's filters may carry, summed
+# over its union branches; above it the overlay joins a broadcast tombstone
+# set instead. Measured with tools/bench_overlay.py (PLANS.md §1b): per
+# query, literals cost less CPU than the broadcast up to ~300, the same at
+# 1k, more from 3k (10k: twice; 30k: six times).
+OVERLAY_MAX_LITERALS = 1_000
 
 
 def _parquet_or_empty(
@@ -658,27 +660,24 @@ class Index:
     def _read_seg(self, path: str, schema) -> DataFrame:
         """Read one delta-segment parquet dir, once per (path, schema) and
         handle: repeated queries reuse the read and its file listing. A
-        DELETE-ONLY batch leaves its postings dir with no data file
-        (partitionBy of zero rows); the dir's listing says so and the read
-        is the empty frame of *schema*. A MISSING dir stays a hard error:
+        DELETE-ONLY batch leaves its postings dir with no data file; the
+        known-schema read of it is empty. A MISSING dir fails the read:
         silently treating absent tombstones as empty would resurrect
         deleted documents."""
         reads = self.__dict__.setdefault("_seg_reads", {})
         key = (path, schema)
         if key not in reads:
-            reads[key] = (
-                self.spark.read.schema(schema).parquet(path)
-                if _data_entries(path)
-                else self.spark.createDataFrame([], schema)
-            )
+            reads[key] = self.spark.read.schema(schema).parquet(path)
         return reads[key]
 
     def _tombstone_filters(self) -> dict | None:
         """Per seq (0 is the base), the filter that drops that branch's rows
         a LATER segment tombstoned, or None when nothing later did. The
         tombstone rowids are read once per handle in the driver (pyarrow,
-        no Spark job). None when their footers sum to more than
-        MERGE_MAX_BATCH rows: the overlay then joins them by broadcast."""
+        no Spark job). None when the branches would carry more than
+        OVERLAY_MAX_LITERALS literals between them (counted from the
+        footers before any rowid is read): the overlay then joins the
+        tombstones by broadcast."""
         if "_tomb_filters" in self.__dict__:
             return self.__dict__["_tomb_filters"]
         import pyarrow.parquet as pq
@@ -687,9 +686,14 @@ class Index:
             s["seq"]: _data_entries(os.path.join(self.root, s["tombstones"]))
             for s in self.segments
         }
-        n = sum(pq.read_metadata(f).num_rows for fs in files.values() for f in fs)
+        # the i-th segment's tombstones filter the base and the i segments
+        # before it: i + 1 branches
+        literals = sum(
+            (i + 1) * sum(pq.read_metadata(f).num_rows for f in files[seq])
+            for i, seq in enumerate(sorted(files))
+        )
         keep = None
-        if n <= MERGE_MAX_BATCH:
+        if literals <= OVERLAY_MAX_LITERALS:
             keep, later = {}, set()
             for seq in sorted(files, reverse=True):
                 keep[seq] = _rowid_not_in(later)
@@ -714,8 +718,8 @@ class Index:
         The churn between compactions is small relative to the base: each
         branch filters its own rows on a literal list of the later
         tombstones (_tombstone_filters), so the overlay adds no exchange
-        and no job. Above MERGE_MAX_BATCH tombstones it falls back to one
-        broadcast anti-join (compaction bounds growth)."""
+        and no job. Above OVERLAY_MAX_LITERALS literals it falls back to
+        one broadcast anti-join (compaction bounds growth)."""
         if not self.segments:
             return base
         # a missing segment dir raises (_read_seg): silently skipping it
@@ -877,9 +881,7 @@ class Index:
         if cached is not None:
             return cached
         path = self.term_stats_dir()
-        if os.path.isdir(path) and any(
-            f.endswith(".parquet") for f in os.listdir(path)
-        ):
+        if os.path.isdir(path) and _data_entries(path):
             df = self.spark.read.schema(TERM_STATS_SCHEMA).parquet(path)
         else:  # empty index: no footers written
             df = self.spark.createDataFrame([], TERM_STATS_SCHEMA)

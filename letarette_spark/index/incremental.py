@@ -15,7 +15,7 @@ Index._overlay: base + segments minus rows a later segment tombstoned.
 Each Index handle reads the tombstone rowids once, in the driver, and
 each union branch drops its rows on a literal list of the later
 segments' tombstones, so the overlay adds no join and no Spark job;
-above MERGE_MAX_BATCH tombstones it joins a broadcast tombstone set.
+above OVERLAY_MAX_LITERALS literals it joins a broadcast tombstone set.
 The segment reads and the docs overlay are also built once per handle.
 Every table is written by the same writer the build uses (builder's
 write_docs, write_postings, write_term_stats and, at compaction,
@@ -57,7 +57,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from letarette_spark.index.builder import (
-    MERGE_MAX_BATCH,
     POSTINGS_READ_SCHEMA,
     POSTINGS_SCHEMA,
     Index,
@@ -71,6 +70,11 @@ from letarette_spark.index.builder import (
     write_term_tables,
 )
 from letarette_spark.index.manifest import Manifest, data_dirs
+
+# above this batch size the batch's keys are not collected to the driver:
+# the replaced versions come from a semi-join of the docs overlay with the
+# batch instead of the rowid-bucket point lookup, and caches are cleared
+MERGE_MAX_BATCH = 100_000
 
 _VERSIONED = re.compile(r"^(postings|docs|term_stats|prefix)(\.v\d+|\.tmp)?$")
 

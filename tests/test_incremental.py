@@ -392,16 +392,18 @@ SEQ_QUERIES = ["wizard*", "quick", "quartz", "draft", "return*", "fox", "list",
                "zeta", "alpha", "final -fox"]
 
 
-@pytest.mark.parametrize("path", ["literal", "broadcast"])
+@pytest.mark.parametrize("path", ["literal", "broadcast", "bound_over_rows"])
 def test_overlay_seq_rule(spark, tmp_path, monkeypatch, path):
     """A row of seq S is dead only when a segment with seq > S tombstoned
     it, on the literal-filter path and on the broadcast anti-join taken
-    above MERGE_MAX_BATCH tombstones: rank-identical to FTS5 over the
-    final corpus."""
+    above OVERLAY_MAX_LITERALS literals: rank-identical to FTS5 over the
+    final corpus. The bound counts the literals every branch carries (a
+    segment's tombstones filter the base and each earlier segment), not
+    the tombstone rows: a bound between the two takes the broadcast."""
+    import pyarrow.parquet as pq
+
     from letarette_spark.index import builder
 
-    if path == "broadcast":
-        monkeypatch.setattr(builder, "MERGE_MAX_BATCH", 0)
     root = str(tmp_path / "idx")
     build_index(spark, _docs_df(spark, BASE), root, config=CFG,
                 n_build_partitions=2, chunk_size=2)
@@ -409,7 +411,16 @@ def test_overlay_seq_rule(spark, tmp_path, monkeypatch, path):
         upsert_documents(spark, root, _docs_df(spark, batch))
     idx = Index.open(spark, root, CFG)
     assert len(idx.segments) == 3 and idx.meta["ndocs"] == 5
-    assert (idx._tombstone_filters() is None) == (path == "broadcast")
+    rows = [
+        sum(pq.read_metadata(f).num_rows
+            for f in builder._data_entries(os.path.join(root, s["tombstones"])))
+        for s in idx.segments
+    ]
+    literals = sum((i + 1) * n for i, n in enumerate(rows))
+    assert sum(rows) < literals
+    bound = {"literal": literals, "broadcast": 0, "bound_over_rows": sum(rows)}
+    monkeypatch.setattr(builder, "OVERLAY_MAX_LITERALS", bound[path])
+    assert (idx._tombstone_filters() is None) == (path != "literal")
     _assert_matches_final_oracle(
         Searcher(idx), Fts5Index.build(SEQ_FINAL), SEQ_QUERIES
     )
@@ -421,8 +432,8 @@ def test_overlay_seq_rule(spark, tmp_path, monkeypatch, path):
 
 def test_delete_only_upsert_makes_no_failing_read(spark, tmp_path, monkeypatch):
     """A delete-only batch leaves its segment postings dir without a data
-    file; the segment read learns that from the dir's listing, so neither
-    the upsert nor a search after it starts a parquet read that fails."""
+    file; the known-schema read of that dir is empty, so neither the
+    upsert nor a search after it starts a parquet read that fails."""
     from pyspark.sql.readwriter import DataFrameReader
 
     root = str(tmp_path / "idx")
@@ -447,6 +458,22 @@ def test_delete_only_upsert_makes_no_failing_read(spark, tmp_path, monkeypatch):
         Fts5Index.build([(r, t, b) for r, t, b, _a in BASE if r != 3]),
     )
     assert failed == []
+
+
+@pytest.mark.parametrize("table", ["postings", "tombstones"])
+def test_missing_segment_dir_fails_the_read(spark, tmp_path, table):
+    """A segment dir the manifest lists but the disk lacks is an error,
+    never an empty overlay branch: empty tombstones would resurrect
+    deleted documents, empty postings would vanish the new versions."""
+    import shutil
+
+    root = str(tmp_path / "idx")
+    build_index(spark, _docs_df(spark, BASE), root, config=CFG,
+                n_build_partitions=2, chunk_size=2)
+    idx = upsert_documents(spark, root, _docs_df(spark, UPDATES_1))
+    shutil.rmtree(os.path.join(root, idx.segments[0][table]))
+    with pytest.raises(Exception, match="(?i)not (found|exist)|missing"):
+        Searcher(Index.open(spark, root, CFG)).search("alpha")
 
 
 def test_upsert_commit_is_crash_atomic(spark, tmp_path, monkeypatch):
